@@ -377,9 +377,11 @@ object Bench {
 
       import graft.query._
       val querySet: Seq[(String, () => Unit)] = Seq(
-        "q_term_wand" -> (() => { sr.topDocsWand(Seq("spark"), 10); () }),
-        "q_disj2_wand" -> (() => { sr.topDocsWand(Seq("spark", "merge"), 10); () }),
-        "q_disj3_wand" -> (() => { sr.topDocsWand(Seq("spark", "merge", "order"), 10); () }),
+        "q_term_wand" -> (() => { sr.topDocs(TermQ("spark"), 10); () }),
+        "q_disj2_wand" -> (() => { sr.topDocs(BoolQ(Seq(
+          Occur.Should -> TermQ("spark"), Occur.Should -> TermQ("merge"))), 10); () }),
+        "q_disj3_wand" -> (() => { sr.topDocs(BoolQ(Seq(Occur.Should -> TermQ("spark"),
+          Occur.Should -> TermQ("merge"), Occur.Should -> TermQ("order"))), 10); () }),
         "q_must2" -> (() => { sr.topDocs(BoolQ(Seq(
           Occur.Must -> TermQ("spark"), Occur.Must -> TermQ("merge"))), 10); () }),
         "q_phrase" -> (() => { sr.topDocs(PhraseQ.of("batch", "batch"), 10); () }),

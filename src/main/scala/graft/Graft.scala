@@ -11,7 +11,7 @@ import graft.query.{Query, Searcher}
   * val idx = Graft.create(spark, "/data/idx", IndexConfig(numSegments = 256))
   * idx.add(docsDf)                       // IndexWriter::add_document batch + commit
   * val sr = idx.searcher                 // pinned snapshot
-  * sr.topDocsWand(Seq("error", "handling"), 10)
+  * sr.topDocs(QueryParser.parse("error handling"), 10) // block-max WAND
   * idx.delete(TermQ("deprecated"))       // delete_term (tombstones)
   * idx.compact()                         // merge policy (LogMergePolicy defaults)
   * }}}

@@ -481,13 +481,15 @@ object SparkEntry {
         .orderBy(desc("score"), asc("doc_id"))
         .limit(15)
     },
-    // WAND path (f32 tantivy-parity scores), oracle-gated: the f32 score
+    // WAND path (the collector routes a pure disjunction to block-max WAND;
+    // f32 tantivy-parity scores), oracle-gated: the f32 score
     // rounded to 4 decimals equals the f64 twin's rounded score for this
     // query (WandOracleSpec asserts the rounding agreement and that the
     // top-10 boundary gap dwarfs f32 error, so the doc set is tie-safe)
     "ft_wand_topk" -> { (s, dir) =>
       val sr = Engine.searcher(s, dir)
-      val hits = sr.topDocsWand(Seq("spark", "merge", "order"), 10)
+      val hits = sr.topDocs(BoolQ(Seq(Occur.Should -> TermQ("spark"),
+        Occur.Should -> TermQ("merge"), Occur.Should -> TermQ("order"))), 10)
       sr.fetch(hits)
         .select(col("path").cast("long").as("doc_id"),
           round(col("score").cast("double"), 4).as("score"))

@@ -84,31 +84,16 @@ object QuerySet {
     parseFile(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8"))
 
-  /** True iff the parsed query is a pure multi-term disjunction — the
-    * WAND-eligible shape (`boolean_weight.rs:56-76`: every clause a
-    * TermScorer with freqs).
-    */
-  def wandTerms(q: Query): Option[Seq[String]] = q match {
-    case TermQ(t) => Some(Seq(t))
-    case BoolQ(cs, m) if m <= 1 && cs.forall { case (o, s) =>
-        o == Occur.Should && s.isInstanceOf[TermQ] } =>
-      // duplicate clauses of the same term must sum twice (SumCombiner);
-      // Wand.topK dedups — route duplicates to the general path
-      val ts = cs.map(_._2.asInstanceOf[TermQ].term)
-      if (ts.distinct.length == ts.length) Some(ts) else None
-    case _ => None
-  }
-
-  /** Execute one entry against a Searcher, routing pure disjunctions through
-    * the block-max WAND executor like the reference's pruned TOP_10 path.
-    * Returns (hits, count) — count only for the counting commands.
+  /** Execute one entry against a Searcher's collectors (which route pure
+    * disjunctions through the block-max WAND executor, like the reference's
+    * pruned TOP_10 path). Returns (hits, count) — count only for the counting
+    * commands.
     */
   def run(sr: graft.query.Searcher, e: Entry): (Array[Hit], Long) = {
     val q = e.query
     e.cmd match {
       case Cmd.Count => (Array.empty, sr.count(q))
-      case Cmd.Top10 =>
-        (wandTerms(q).map(ts => sr.topDocsWand(ts, 10)).getOrElse(sr.topDocs(q, 10)), -1L)
+      case Cmd.Top10 => (sr.topDocs(q, 10), -1L)
       case Cmd.Top10Count =>
         // one pass, no pruning: a count collector must see every match
         // (MultiCollector semantics, `multi_collector.rs:166`)

@@ -795,8 +795,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   // ---------- collectors ----------
 
   /** Pure all-Must all-TermQ conjunction — the shape the leapfrog executor
-    * specializes (fast path only valid with no tombstones pinned, since
-    * `Intersect` reads postings directly).
+    * specializes.
     */
   private def pureMustTerms(q: Query): Option[Seq[String]] = q match {
     case BoolQ(cs, _) if cs.nonEmpty && cs.forall {
@@ -804,8 +803,6 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       Some(cs.map(_._2.asInstanceOf[TermQ].term))
     case _ => None
   }
-
-  private def fastPathEligible: Boolean = deletesDf.isEmpty
 
   /** A clause that scores like a single TermScorer: a bare TermQ, or a
     * BoostQ chain over one — boosts fold multiplicatively into the weight
@@ -849,6 +846,26 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     case _ => q
   }
 
+  import Searcher.Route._
+
+  /** Decide, once per query, which executor the collectors run — the
+    * reference's one eligibility test before `block_wand`
+    * (`boolean_weight.rs:56-76`). The specialized executors read postings
+    * directly, so with tombstones pinned every query takes the generic
+    * route, whose `compile` applies the alive-bitset anti-join.
+    */
+  private def route(q0: Query): Searcher.Route = {
+    val q = rewriteForCollect(q0)
+    if (deletesDf.isDefined) Generic(q)
+    else q match {
+      case p: PhraseQ => Phrase(p)
+      case _ =>
+        pureMustTerms(q).map[Searcher.Route](MustTerms)
+          .orElse(pureShouldWeighted(q).map(ShouldTerms))
+          .getOrElse(Generic(q))
+    }
+  }
+
   /** TopDocs collector (`top_collector.rs:45-61,102-122`): global top-k by
     * (score desc, segId asc, docId asc), offset skipped after the merge.
     * Pure conjunctions and phrases route through the per-segment leapfrog
@@ -856,32 +873,32 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * MoreLikeThis) through the block-max WAND executor, everything else
     * through the Dataset pipeline.
     */
-  def topDocs(q0: Query, k: Int, offset: Int = 0): Array[Hit] = rewriteForCollect(q0) match {
-    case p: PhraseQ if fastPathEligible =>
-      Intersect.topKPhrase(this, p, k + offset)._1.drop(offset)
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, k + offset)._1.drop(offset)
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWeighted(this, pureShouldWeighted(q).get, k + offset).drop(offset)
-    case q =>
-      compile(q)
-        .orderBy(desc("score"), asc("segId"), asc("docId"))
-        .limit(k + offset)
-        .as[ScoredDoc].collect().drop(offset).map(s => Hit(s.segId, s.docId, s.score))
+  def topDocs(q: Query, k: Int, offset: Int = 0): Array[Hit] = {
+    val hits = route(q) match {
+      case Phrase(p) => Intersect.topKPhrase(this, p, k + offset)._1
+      case MustTerms(ts) => Intersect.topKMust(this, ts, k + offset)._1
+      case ShouldTerms(tbs) => Wand.topK(this, tbs, k + offset)._1
+      case Generic(g) =>
+        compile(g)
+          .orderBy(desc("score"), asc("segId"), asc("docId"))
+          .limit(k + offset)
+          .as[ScoredDoc].collect().map(s => Hit(s.segId, s.docId, s.score))
+    }
+    hits.drop(offset)
   }
 
   /** Count collector (`count_collector.rs:36-61`). */
-  def count(q0: Query): Long = rewriteForCollect(q0) match {
-    // a term's hit count IS its doc_freq when no tombstones are pinned —
-    // the term dictionary answers without touching postings (the reference's
-    // specialized term count reads the same TermInfo)
-    case TermQ(t) if fastPathEligible => docFreqs(Seq(t)).getOrElse(t, 0L)
-    case p: PhraseQ if fastPathEligible => Intersect.topKPhrase(this, p, 1)._2
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, 1)._2
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWithCountWeighted(this, pureShouldWeighted(q).get, 1)._2
-    case q => compile(q).count()
+  def count(q: Query): Long = {
+    route(q) match {
+      case Phrase(p) => Intersect.topKPhrase(this, p, 1)._2
+      case MustTerms(ts) => Intersect.topKMust(this, ts, 1)._2
+      // one term's hit count IS its doc_freq (boosts change scores, not
+      // matches) — the term dictionary answers without touching postings
+      // (the reference's specialized term count reads the same TermInfo)
+      case ShouldTerms(Seq((t, _))) => docFreqs(Seq(t)).getOrElse(t, 0L)
+      case ShouldTerms(tbs) => Wand.topK(this, tbs, 1, withCount = true)._2
+      case Generic(g) => compile(g).count()
+    }
   }
 
   /** TopDocs + Count in ONE pass over the matching doc set — the
@@ -892,13 +909,13 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * (SegmentCollector), and the driver merges fruits
     * (`top_collector.rs:102-122`).
     */
-  def topDocsWithCount(q0: Query, k: Int): (Array[Hit], Long) = rewriteForCollect(q0) match {
-    case p: PhraseQ if fastPathEligible => Intersect.topKPhrase(this, p, k)
-    case q if fastPathEligible && pureMustTerms(q).isDefined =>
-      Intersect.topKMust(this, pureMustTerms(q).get, k)
-    case q if fastPathEligible && pureShouldWeighted(q).isDefined =>
-      Wand.topKWithCountWeighted(this, pureShouldWeighted(q).get, k)
-    case q => topDocsWithCountGeneric(q, k)
+  def topDocsWithCount(q: Query, k: Int): (Array[Hit], Long) = {
+    route(q) match {
+      case Phrase(p) => Intersect.topKPhrase(this, p, k)
+      case MustTerms(ts) => Intersect.topKMust(this, ts, k)
+      case ShouldTerms(tbs) => Wand.topK(this, tbs, k, withCount = true)
+      case Generic(g) => topDocsWithCountGeneric(g, k)
+    }
   }
 
   private def topDocsWithCountGeneric(q: Query, k: Int): (Array[Hit], Long) = {
@@ -927,12 +944,6 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     (hits, partials.map(_._2).sum)
   }
 
-  /** Top-k for a pure multi-term disjunction through the block-max WAND
-    * executor (the reference's pruned path, `block_wand.rs`).
-    */
-  def topDocsWand(terms: Seq[String], k: Int): Array[Hit] =
-    Wand.topK(this, terms, k)
-
   /** Per-segment/per-component space accounting
     * (`space_usage/mod.rs` `Searcher::space_usage` analog).
     */
@@ -952,6 +963,15 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 }
 
 object Searcher {
+  /** The executor a collector query runs on, chosen by `route`. */
+  private sealed trait Route
+  private object Route {
+    final case class Phrase(p: PhraseQ) extends Route
+    final case class MustTerms(terms: Seq[String]) extends Route
+    final case class ShouldTerms(termBoosts: Seq[(String, Float)]) extends Route
+    final case class Generic(q: Query) extends Route
+  }
+
   /** tantivy_fst::Regex whole-term semantics: the pattern must match the
     * ENTIRE term (`regex_query.rs:12-21` — built on an fst automaton, which
     * is implicitly anchored). Java regex needs explicit anchors — \A/\z,

@@ -250,66 +250,71 @@ object Wand {
     }
   }
 
-  /** Distributed top-k disjunction: one WAND run per segment group, driver
-    * merge with (score desc, segId asc, docId asc) (`top_collector.rs:102-122`).
+  /** The weighted top-k disjunction — the one entry point over the block-max
+    * WAND kernels (the reference's `boolean_weight.rs:56-76` -> `block_wand.rs`
+    * dispatch). Each term's clause boost folds into its Bm25 weight
+    * (`bm25.rs:80-87 boost_by`), which is how the reference makes
+    * `Should(Boost(Term))` trees (MoreLikeThis's shape) WAND-eligible: a
+    * boosted TermScorer is still a TermScorer, its max_score just scales with
+    * the boost, so every pruning bound stays sound. Unboosted callers pass
+    * boost 1.0, which is exact (`weight * 1.0f == weight`).
+    *
+    * One WAND run per segment group, driver merge with (score desc, segId asc,
+    * docId asc) (`top_collector.rs:102-122`). Returns (hits, count): with
+    * `withCount` the count is the union's hit count from the unpruned pass
+    * (the count collector must see every match, `multi_collector.rs:166`);
+    * otherwise it is -1. Terms must be distinct: duplicate Should clauses of
+    * one term sum that term's score twice (`SumCombiner`), which one weight
+    * per term cannot express.
+    *
+    * This reads postings directly and does NOT filter tombstones; the
+    * `Searcher` collectors call it only when no deletes are pinned.
     */
-  def topK(searcher: Searcher, terms: Seq[String], k: Int,
-           probeCutoff: Long = 20000000L): Array[Hit] = {
-    val weights = searcher.weightsFor(terms)
-    if (weights.isEmpty || k <= 0) return Array.empty
-    val present = terms.distinct.filter(weights.contains).sorted
-    topKImpl(searcher, present, weights, k, probeCutoff)
-  }
-
-  /** [[topK]] for a WEIGHTED disjunction — each term's clause boost folded
-    * into its Bm25 weight (`bm25.rs:80-87 boost_by`), which is how the
-    * reference makes `Should(Boost(Term))` trees (MoreLikeThis's shape)
-    * WAND-eligible (`boolean_weight.rs:56-76`): a boosted TermScorer is
-    * still a TermScorer, its max_score just scales with the boost, so every
-    * pruning bound below stays sound.
-    */
-  def topKWeighted(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
-                   probeCutoff: Long = 20000000L): Array[Hit] = {
+  def topK(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
+           withCount: Boolean = false, probeCutoff: Long = 20000000L,
+           chunkDocs: Int = DefaultChunkDocs): (Array[Hit], Long) = {
+    val terms = termBoosts.map(_._1)
+    require(terms.distinct.length == terms.length,
+      s"duplicate terms in a WAND disjunction: ${terms.diff(terms.distinct).distinct.mkString(", ")}")
     val weights = searcher.weightsForBoosted(termBoosts)
-    if (weights.isEmpty || k <= 0) return Array.empty
-    val present = termBoosts.map(_._1).distinct.filter(weights.contains).sorted
-    topKImpl(searcher, present, weights, k, probeCutoff)
-  }
-
-  /** [[topKWithCount]] for a weighted disjunction (boosts don't change
-    * which docs match, only their scores — the union count is boost-free).
-    */
-  def topKWithCountWeighted(searcher: Searcher, termBoosts: Seq[(String, Float)],
-                            k: Int): (Array[Hit], Long) = {
-    val weights = searcher.weightsForBoosted(termBoosts)
-    val present = termBoosts.map(_._1).distinct.filter(weights.contains).sorted
-    if (present.isEmpty || k <= 0) return (Array.empty, 0L)
+    val present = terms.filter(weights.contains).sorted
+    val noCount = if (withCount) 0L else -1L
+    if (present.isEmpty || k <= 0) return (Array.empty, noCount)
     if (present.length == 1) {
-      val cnt = searcher.docFreqs(present).getOrElse(present.head, 0L)
-      return (topKImpl(searcher, present, weights, k, Long.MaxValue), cnt)
-    }
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue, withCount = true)
-  }
-
-  /** TOP_10_COUNT for a pure disjunction in ONE pass: the count collector
-    * must see every match (`multi_collector.rs:166`), so the map-side
-    * threshold prefilter stays off, but the union COUNT is computed inside
-    * the same per-segment task that runs the BMW loop — a linear merge over
-    * the already-assembled sorted docId lists — instead of a second
-    * groupBy-shuffle over per-doc rows (measured 300-470 ms -> the cost of
-    * the plain TOP_10 disjunction).
-    */
-  def topKWithCount(searcher: Searcher, terms: Seq[String], k: Int): (Array[Hit], Long) = {
-    val weights = searcher.weightsFor(terms)
-    val present = terms.distinct.filter(weights.contains).sorted
-    if (present.isEmpty || k <= 0) return (Array.empty, 0L)
-    if (present.length == 1) {
-      // union of one term: count IS its global doc_freq (termdict lookup,
+      // union of one term: the count IS its global doc_freq (termdict lookup,
       // no postings touched); hits via the zero-shuffle single-term path
-      val cnt = searcher.docFreqs(present).getOrElse(present.head, 0L)
-      return (topKImpl(searcher, present, weights, k, Long.MaxValue), cnt)
+      val t = present.head
+      val cnt = if (withCount) searcher.docFreqs(present).getOrElse(t, 0L) else noCount
+      return (singleTerm(searcher, t, weights(t), k), cnt)
     }
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue, withCount = true)
+    // TOP_10_COUNT in ONE pass: the count collector must see every match, so
+    // the threshold probe and prefilter stay off, and the union count is
+    // computed inside the same per-chunk task that runs the BMW loop instead
+    // of a second groupBy-shuffle over per-doc rows
+    if (withCount) return multiTerm(searcher, present, weights, k, Float.MinValue,
+      withCount = true, chunkDocs)
+
+    // For high-df disjunctions, probe an initial threshold before shuffling:
+    // τ = nextDown(k-th best score of the highest-max-score term alone, via
+    // the zero-shuffle single-term path). A block of term t can only hold a
+    // doc scoring > τ if blockMax_t + Σ_{u≠t} termMax_u > τ, so hopeless
+    // blocks are dropped MAP-SIDE before the shuffle — the distributed
+    // analog of BMW's "skip without decoding". Soundness: every true top-k
+    // doc's full score ≥ its single-term scores, so the true k-th best ≥ θ0;
+    // nextDown keeps θ0-tied docs eligible, preserving the strict-`>`
+    // threshold and (score, docId) tie semantics. The probe costs one extra
+    // job, so it only arms above a df cutoff where shuffle volume dominates.
+    // It ranks by THIS query's (boosted) weight, or its k-th score would not
+    // be a lower bound for the boosted sums.
+    val dfs = searcher.docFreqs(present)
+    var tau = Float.MinValue
+    if (dfs.values.sum > probeCutoff) {
+      val probeTerm = present.maxBy(t => weights(t).maxScore)
+      val probeHits = singleTerm(searcher, probeTerm, weights(probeTerm), k)
+      if (probeHits.length == k)
+        tau = java.lang.Math.nextDown(probeHits.last.score)
+    }
+    multiTerm(searcher, present, weights, k, tau, withCount = false, chunkDocs)
   }
 
   /** Count of distinct docIds across sorted lists (union cardinality). */
@@ -338,68 +343,39 @@ object Wand {
     cnt
   }
 
-  private def topKImpl(searcher: Searcher, present: Seq[String],
-                       weights: Map[String, Bm25.Weight], k: Int,
-                       probeCutoff: Long): Array[Hit] = {
+  /** Single-term top-k with ZERO shuffle: per-doc scoring makes a term's
+    * top-k decomposable over ANY partition of its posting list (chunk
+    * top-ks ∪-merge to the global top-k), so each scan partition runs
+    * `blockWandSingle` over the complete (segId-grouped) block runs it holds
+    * and ships only its k best. One stage, pruned scan, driver merge — the
+    * scan IS the reference's skip-capable read; no posting bytes cross the
+    * network beyond k hits per task.
+    */
+  private def singleTerm(searcher: Searcher, term: String, w: Bm25.Weight,
+                         k: Int): Array[Hit] = {
     val spark = searcher.spark
     import spark.implicits._
-    if (present.isEmpty) return Array.empty
-
-    // Single-term specialization with ZERO shuffle: per-doc scoring makes a
-    // term's top-k decomposable over ANY partition of its posting list
-    // (chunk top-ks ∪-merge to the global top-k), so each scan partition
-    // runs `blockWandSingle` over the complete (segId-grouped) block runs it
-    // holds and ships only its k best. One stage, pruned scan, driver merge —
-    // the scan IS the reference's skip-capable read; no posting bytes cross
-    // the network beyond k hits per task.
-    if (present.length == 1) {
-      val term = present.head
-      val w = weights(term)
-      val rows = searcher.postings
-        .where(col("field") === searcher.field && col("term") === term)
-        .select($"segId", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
-          $"docIds", $"tfs", $"normIds")
-        .as[(Int, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
-      val fruits = rows.mapPartitions { it =>
-        val bySeg = scala.collection.mutable.Map.empty[Int,
-          scala.collection.mutable.ArrayBuffer[(Int, Block)]]
-        it.foreach { case (segId, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
-          bySeg.getOrElseUpdate(segId, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
-        }
-        bySeg.iterator.flatMap { case (segId, blks) =>
-          val scorer = new TermScorer(w, blks.sortBy(_._1).map(_._2).toArray)
-          val topk = new TopK(k, segId)
-          blockWandSingle(scorer, topk.threshold, topk.insert)
-          topk.hits.iterator
-        }.map(h => (h.segId, h.docId, h.score))
-      }.collect()
-      return fruits.map { case (s, d, sc) => Hit(s, d, sc) }
-        .sortBy(h => (-h.score, h.segId, h.docId)).take(k)
-    }
-
-    // For high-df disjunctions, probe an initial threshold before shuffling:
-    // τ = nextDown(k-th best score of the highest-max-score term alone, via
-    // the zero-shuffle single-term path). A block of term t can only hold a
-    // doc scoring > τ if blockMax_t + Σ_{u≠t} termMax_u > τ, so hopeless
-    // blocks are dropped MAP-SIDE before the shuffle — the distributed
-    // analog of BMW's "skip without decoding". Soundness: every true top-k
-    // doc's full score ≥ its single-term scores, so the true k-th best ≥ θ0;
-    // nextDown keeps θ0-tied docs eligible, preserving the strict-`>`
-    // threshold and (score, docId) tie semantics. The probe costs one extra
-    // job, so it only arms above a df cutoff where shuffle volume dominates.
-    val dfs = searcher.docFreqs(present)
-    var tau = Float.MinValue
-    if (dfs.values.sum > probeCutoff) {
-      val probeTerm = present.maxBy(t => weights(t).maxScore)
-      // recurse with THIS query's weights map (not freshly-derived ones):
-      // under a weighted disjunction the probe must rank by the boosted
-      // weight, or its k-th score is not a lower bound for the boosted sums
-      val probeHits = topKImpl(searcher, Seq(probeTerm), weights, k, probeCutoff)
-      if (probeHits.length == k)
-        tau = java.lang.Math.nextDown(probeHits.last.score)
-    }
-    multiTerm(searcher, present, weights, k, tau, withCount = false)._1
+    val rows = searcher.postings
+      .where(col("field") === searcher.field && col("term") === term)
+      .select($"segId", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
+        $"docIds", $"tfs", $"normIds")
+      .as[(Int, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
+    val fruits = rows.mapPartitions { it =>
+      val bySeg = scala.collection.mutable.Map.empty[Int,
+        scala.collection.mutable.ArrayBuffer[(Int, Block)]]
+      it.foreach { case (segId, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
+        bySeg.getOrElseUpdate(segId, scala.collection.mutable.ArrayBuffer.empty) +=
+          ((blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
+      }
+      bySeg.iterator.flatMap { case (segId, blks) =>
+        val scorer = new TermScorer(w, blks.sortBy(_._1).map(_._2).toArray)
+        val topk = new TopK(k, segId)
+        blockWandSingle(scorer, topk.threshold, topk.insert)
+        topk.hits.iterator
+      }.map(h => (h.segId, h.docId, h.score))
+    }.collect()
+    fruits.map { case (s, d, sc) => Hit(s, d, sc) }
+      .sortBy(h => (-h.score, h.segId, h.docId)).take(k)
   }
 
   /** DocId-range width of one multi-term task (see [[multiTerm]]): bounds
@@ -429,7 +405,7 @@ object Wand {
   private def multiTerm(searcher: Searcher, present: Seq[String],
                         weights: Map[String, Bm25.Weight], k: Int,
                         tau: Float, withCount: Boolean,
-                        chunkDocs: Int = DefaultChunkDocs): (Array[Hit], Long) = {
+                        chunkDocs: Int): (Array[Hit], Long) = {
     val spark = searcher.spark
     import spark.implicits._
     val wB = spark.sparkContext.broadcast(weights)
@@ -510,18 +486,5 @@ object Wand {
       .sortBy(h => (-h.score, h.segId, h.docId))
       .take(k)
     (hits, if (withCount) fruits.map(_._2).sum else -1L)
-  }
-
-  // chunk slicing shares Intersect.lowerBound — one binary search, one
-  // slicing semantics for both executors
-
-  /** Test seam: run the multi-term stage at a forced chunk width. */
-  private[graft] def multiTermForTest(searcher: Searcher, terms: Seq[String], k: Int,
-                                      chunkDocs: Int): (Array[Hit], Long) = {
-    val weights = searcher.weightsFor(terms)
-    val present = terms.distinct.filter(weights.contains).sorted
-    if (present.isEmpty) return (Array.empty, 0L)
-    multiTerm(searcher, present, weights, k, tau = Float.MinValue,
-      withCount = true, chunkDocs = chunkDocs)
   }
 }

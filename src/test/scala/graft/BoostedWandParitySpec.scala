@@ -13,28 +13,18 @@ import graft.query._
   */
 class BoostedWandParitySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
-  import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
   private def haveData = new java.io.File(s"$sfDir/documents.parquet").exists()
   private lazy val sr = Engine.searcher(spark, sfDir)
-
-  /** The unpruned reference pipeline: compile + global sort + limit. */
-  private def genericTopK(q: Query, k: Int): Array[Hit] =
-    sr.compile(q)
-      .orderBy(org.apache.spark.sql.functions.desc("score"),
-        org.apache.spark.sql.functions.asc("segId"),
-        org.apache.spark.sql.functions.asc("docId"))
-      .limit(k).as[ScoredDoc].collect()
-      .map(s => Hit(s.segId, s.docId, s.score))
 
   test("2-term boosted disjunction: WAND executor == general path, bit-identical") {
     assume(haveData)
     val boosts = Seq("spark" -> 2.0f, "merge" -> 1.0f)
     val q = BoolQ(boosts.map { case (t, b) =>
       Occur.Should -> (BoostQ(TermQ(t), b): Query) })
-    val wand = Wand.topKWeighted(sr, boosts, 10)
-    val gen = genericTopK(q, 10)
+    val wand = Wand.topK(sr, boosts, 10)._1
+    val gen = CompileRoute.topK(sr, q, 10)
     // two f32 addends sum order-independently, so hits AND scores are
     // bit-identical between the folded-weight paths
     assert(wand.toSeq == gen.toSeq)
@@ -45,15 +35,15 @@ class BoostedWandParitySpec extends AnyFunSuite {
 
   test("boost changes the ranking (the fold actually applies)") {
     assume(haveData)
-    val flat = Wand.topKWeighted(sr, Seq("spark" -> 1.0f, "merge" -> 1.0f), 10)
-    val boosted = Wand.topKWeighted(sr, Seq("spark" -> 0.1f, "merge" -> 3.0f), 10)
+    val flat = Wand.topK(sr, Seq("spark" -> 1.0f, "merge" -> 1.0f), 10)._1
+    val boosted = Wand.topK(sr, Seq("spark" -> 0.1f, "merge" -> 3.0f), 10)._1
     assert(flat.map(h => (h.segId, h.docId)).toSeq !=
       boosted.map(h => (h.segId, h.docId)).toSeq)
     // folded weight == reference boost_by: a single boosted term's score is
     // (w*boost)*tfFactor, i.e. boostBy on the weight, not score*boost after
     val w = sr.weightsFor(Seq("spark"))("spark")
-    val one = Wand.topKWeighted(sr, Seq("spark" -> 2.5f), 5)
-    val base = Wand.topK(sr, Seq("spark"), 5)
+    val one = Wand.topK(sr, Seq("spark" -> 2.5f), 5)._1
+    val base = Wand.topK(sr, Seq("spark" -> 1.0f), 5)._1
     one.zip(base).foreach { case (b, u) =>
       assert((b.segId, b.docId) == (u.segId, u.docId))
       // recompute via boostBy from the unboosted hit's tfFactor
@@ -67,8 +57,8 @@ class BoostedWandParitySpec extends AnyFunSuite {
     val boosts = Seq("spark" -> 1.5f, "merge" -> 1.0f, "order" -> 0.5f)
     val q = BoolQ(boosts.map { case (t, b) =>
       Occur.Should -> (BoostQ(TermQ(t), b): Query) })
-    val wand = Wand.topKWeighted(sr, boosts, 10)
-    val gen = genericTopK(q, 10)
+    val wand = Wand.topK(sr, boosts, 10)._1
+    val gen = CompileRoute.topK(sr, q, 10)
     // >= 3 f32 addends may differ by ulps between the WAND pivot order and
     // the clause order (the reference has the same property between its
     // BufferedUnionScorer and block_wand paths) — compare sets + tolerance
@@ -84,7 +74,7 @@ class BoostedWandParitySpec extends AnyFunSuite {
     assume(haveData)
     val mlt = MoreLikeThisQ(0, 0, minDocFreq = 5, minTermFreq = 1, maxQueryTerms = 10)
     val viaCollector = sr.topDocs(mlt, 10)
-    val gen = genericTopK(mlt, 10)
+    val gen = CompileRoute.topK(sr, mlt, 10)
     assert(viaCollector.map(h => (h.segId, h.docId)).toSet ==
       gen.map(h => (h.segId, h.docId)).toSet)
     val genMap = gen.map(h => (h.segId, h.docId) -> h.score).toMap
@@ -98,6 +88,6 @@ class BoostedWandParitySpec extends AnyFunSuite {
       case (_, BoostQ(TermQ(t), b)) => (t, b)
       case other => fail(s"unexpected MLT clause shape: $other")
     }
-    assert(Wand.topKWeighted(sr, termBoosts, 10).toSeq == viaCollector.toSeq)
+    assert(Wand.topK(sr, termBoosts, 10)._1.toSeq == viaCollector.toSeq)
   }
 }

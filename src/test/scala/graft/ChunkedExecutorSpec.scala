@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.query.{Intersect, PhraseQ, Wand}
 
-/** DocId-range chunking of the multi-term executors (Wand.multiTerm /
+/** DocId-range chunking of the multi-term executors (Wand.topK /
   * Intersect.mapSegments): per-task block residency is bounded by the chunk
   * width instead of the segment size, so the answer must be IDENTICAL at
   * any chunk width — including widths far below the 128-entry block length,
@@ -35,10 +35,10 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     hits.toSeq.map(h => (h.segId, h.docId, h.score))
 
   test("WAND multi-term: chunked == unchunked at widths 64 and 1") {
-    val terms = Seq("alpha", "beta", "gamma")
-    val (h0, c0) = Wand.multiTermForTest(sr, terms, 10, chunkDocs = Int.MaxValue)
+    val terms = Seq("alpha", "beta", "gamma").map(_ -> 1.0f)
+    val (h0, c0) = Wand.topK(sr, terms, 10, withCount = true, chunkDocs = Int.MaxValue)
     for (w <- Seq(64, 1)) {
-      val (h, c) = Wand.multiTermForTest(sr, terms, 10, chunkDocs = w)
+      val (h, c) = Wand.topK(sr, terms, 10, withCount = true, chunkDocs = w)
       assert(norm(h) == norm(h0), s"width $w hits")
       assert(c == c0, s"width $w count")
     }

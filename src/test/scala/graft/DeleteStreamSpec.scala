@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.bench.CorpusGen
 import graft.index.{Deletes, IndexBuilder, IndexConfig, Manifest}
-import graft.query.{Searcher, TermQ}
+import graft.query.{BoolQ, Occur, PhraseQ, Query, Searcher, TermQ, Wand}
 import graft.streaming.StreamIngest
 
 /** Delete tombstones + streaming (micro-batch) ingestion. */
@@ -17,12 +17,29 @@ class DeleteStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tmpDir("del")
     val corpus = CorpusGen.corpus(spark, 300)
-    IndexBuilder.build(spark, corpus.toDF(), dir, IndexConfig(numSegments = 2))
+    IndexBuilder.build(spark, corpus.toDF(), dir,
+      IndexConfig(numSegments = 2, withPositions = true))
 
     val before = new Searcher(spark, dir)
-    val victimDocs = before.compile(TermQ("error")).count()
+    def addrs(sr: Searcher, q: Query): Set[(Int, Int)] =
+      sr.compile(q).select($"segId", $"docId").as[(Int, Int)].collect().toSet
+    val victims = addrs(before, TermQ("error"))
+    val victimDocs = victims.size.toLong
     assert(victimDocs > 0, "corpus must contain the delete term")
     val allBefore = before.count(TermQ("val"))
+
+    // one query per specialized collector route on a clean index: the pure
+    // disjunction (WAND), the conjunction and the phrase (leapfrog)
+    val routed: Seq[(String, Query)] = Seq(
+      "disjunction" -> BoolQ(Seq(Occur.Should -> TermQ("error"), Occur.Should -> TermQ("val"))),
+      "conjunction" -> BoolQ(Seq(Occur.Must -> TermQ("val"), Occur.Must -> TermQ("def"))),
+      "phrase" -> PhraseQ.of("über", "fast"))
+    val matchedBefore = routed.map { case (name, q) =>
+      val m = addrs(before, q)
+      assert((m & victims).nonEmpty, s"$name must match a doc the delete will hit")
+      assert(before.topDocsWithCount(q, 10)._2 == m.size, s"$name clean-index count")
+      name -> m
+    }.toMap
 
     val deleted = Deletes.deleteByTerm(spark, dir, "error")
     assert(deleted == victimDocs)
@@ -39,6 +56,23 @@ class DeleteStreamSpec extends AnyFunSuite {
     assert(after.count(TermQ("val")) == expectSurvivors)
     assert(allBefore >= expectSurvivors)
 
+    // every collector, on every route, drops the tombstoned addresses and
+    // counts what the compile route counts (k above the corpus size lists
+    // every match)
+    val k = 300
+    for ((name, q) <- routed) {
+      val live = after.compile(q).count()
+      assert(live == (matchedBefore(name) -- victims).size, s"$name compile count")
+      val top = after.topDocs(q, k)
+      val (topC, cnt) = after.topDocsWithCount(q, k)
+      for ((hits, collector) <- Seq(top -> "topDocs", topC -> "topDocsWithCount"))
+        assert(!hits.exists(h => victims((h.segId, h.docId))),
+          s"$name: $collector returned a tombstoned doc")
+      assert(top.length == live && topC.length == live, s"$name hit count")
+      assert(cnt == live, s"$name topDocsWithCount count")
+      assert(after.count(q) == live, s"$name count")
+    }
+
     // delete is idempotent: re-deleting matches nothing (already dead)
     assert(Deletes.deleteByTerm(spark, dir, "error") == 0)
   }
@@ -53,7 +87,8 @@ class DeleteStreamSpec extends AnyFunSuite {
 
     val before = new Searcher(spark, dir)
     val expectVal = before.count(TermQ("val"))
-    val expectTop = before.topDocsWand(Seq("val", "def"), 10).map(h => h.score)
+    val valOrDef = BoolQ(Seq(Occur.Should -> TermQ("val"), Occur.Should -> TermQ("def")))
+    val expectTop = before.topDocs(valOrDef, 10).map(h => h.score)
 
     val srcSegs = graft.index.Manifest.read(dir).segments.map(_.segId)
     graft.index.Merger.merge(spark, dir, cfg, srcSegs, newSegId = 100)
@@ -73,10 +108,8 @@ class DeleteStreamSpec extends AnyFunSuite {
         .as[Long].head())
     // scores shift (global stats changed), but the engine stays consistent:
     // WAND path == exact path on the compacted index
-    val wand = after.topDocsWand(Seq("val", "def"), 10)
-    val exact = after.topDocs(graft.query.BoolQ(Seq(
-      graft.query.Occur.Should -> TermQ("val"),
-      graft.query.Occur.Should -> TermQ("def"))), 10)
+    val wand = Wand.topK(after, Seq("val" -> 1.0f, "def" -> 1.0f), 10)._1
+    val exact = CompileRoute.topK(after, valOrDef, 10)
     assert(wand.map(h => (h.segId, h.docId, h.score)).toSeq ==
       exact.map(h => (h.segId, h.docId, h.score)).toSeq)
     assert(expectTop.nonEmpty)

@@ -81,15 +81,19 @@ class EngineE2ESpec extends AnyFunSuite {
 
   test("single term: WAND path == naive") {
     for (t <- Seq(hotTerm, midTerm, tailTerm)) {
-      assertSame(searcher.topDocsWand(Seq(t), 10).toSeq, naive.topDocs(TermQ(t), 10), s"wand term=$t")
+      assertSame(Wand.topK(searcher, Seq(t -> 1.0f), 10)._1.toSeq, naive.topDocs(TermQ(t), 10),
+        s"wand term=$t")
     }
   }
 
   test("two-term disjunction: exact and WAND == naive") {
     val q = BoolQ(Seq(Occur.Should -> TermQ(hotTerm), Occur.Should -> TermQ(midTerm)))
     val oracle = naive.topDocs(q, 10)
-    assertSame(searcher.topDocs(q, 10).toSeq, oracle, "disj exact")
-    assertSame(searcher.topDocsWand(Seq(hotTerm, midTerm), 10).toSeq, oracle, "disj wand")
+    // topDocs routes this shape through WAND, so the exact path is compile
+    assertSame(CompileRoute.topK(searcher, q, 10).toSeq, oracle, "disj exact")
+    assertSame(Wand.topK(searcher, Seq(hotTerm, midTerm).map(_ -> 1.0f), 10)._1.toSeq,
+      oracle, "disj wand")
+    assertSame(searcher.topDocs(q, 10).toSeq, oracle, "disj topDocs")
   }
 
   test("three-term disjunction WAND == naive (clause order = sorted terms)") {
@@ -101,15 +105,21 @@ class EngineE2ESpec extends AnyFunSuite {
     // ranks must match exactly and scores within 1e-6 relative (the
     // reference's own assert_nearly_equals bound).
     val oracle = naive.topDocs(q, 10)
-    val wand = searcher.topDocsWand(ts, 10).toSeq
-    assert(wand.map(h => (h.segId, h.docId)) == oracle.map(h => (h.segId, h.docId)))
-    wand.zip(oracle).foreach { case (e, o) =>
-      assert(math.abs(e.score - o.score) <= 1e-6f * math.max(math.abs(e.score), math.abs(o.score)))
+    val wand = Wand.topK(searcher, ts.map(_ -> 1.0f), 10)._1.toSeq
+    def assertNear(got: Seq[Hit], want: Seq[Hit], ctx: String): Unit = {
+      assert(got.map(h => (h.segId, h.docId)) == want.map(h => (h.segId, h.docId)), ctx)
+      got.zip(want).foreach { case (e, o) =>
+        assert(math.abs(e.score - o.score) <= 1e-6f * math.max(math.abs(e.score), math.abs(o.score)),
+          ctx)
+      }
     }
+    assertNear(wand, oracle, "disj3 wand")
+    // the unpruned compile route sums in clause order like the oracle
+    assertSame(CompileRoute.topK(searcher, q, 10).toSeq, oracle, "disj3 compile")
+    assertNear(wand, CompileRoute.topK(searcher, q, 10).toSeq, "disj3 wand == compile")
     // topDocs routes this WAND-eligible shape through the SAME pruned
-    // executor (round 5 — the reference's TopDocs also block_wands a pure
-    // term union, `boolean_weight.rs:56-76`): bit-identical to the direct
-    // WAND call
+    // executor (the reference's TopDocs also block_wands a pure term union,
+    // `boolean_weight.rs:56-76`): bit-identical to the direct WAND call
     assert(searcher.topDocs(q, 10).toSeq == wand, "disj3 topDocs == wand")
   }
 
@@ -118,15 +128,28 @@ class EngineE2ESpec extends AnyFunSuite {
     // small corpus; results must still be rank-identical with f32 scores
     // within the reference's own nearly-equals bound (scorer-order sums)
     val ts2 = Seq(hotTerm, midTerm).sorted
-    assertSame(Wand.topK(searcher, ts2, 10, probeCutoff = 0L).toSeq,
+    assertSame(Wand.topK(searcher, ts2.map(_ -> 1.0f), 10, probeCutoff = 0L)._1.toSeq,
       naive.topDocs(BoolQ(ts2.map(t => Occur.Should -> TermQ(t))), 10), "probe disj2")
     val ts3 = Seq(hotTerm, hot2, midTerm).sorted
     val oracle = naive.topDocs(BoolQ(ts3.map(t => Occur.Should -> TermQ(t))), 10)
-    val wand = Wand.topK(searcher, ts3, 10, probeCutoff = 0L).toSeq
+    val wand = Wand.topK(searcher, ts3.map(_ -> 1.0f), 10, probeCutoff = 0L)._1.toSeq
     assert(wand.map(h => (h.segId, h.docId)) == oracle.map(h => (h.segId, h.docId)))
     wand.zip(oracle).foreach { case (e, o) =>
       assert(math.abs(e.score - o.score) <= 1e-6f * math.max(math.abs(e.score), math.abs(o.score)))
     }
+  }
+
+  test("WAND top-k rejects duplicate terms; duplicate Should clauses still sum twice") {
+    // one weight per term cannot express SumCombiner's double count, so the
+    // executor fails loudly instead of merging the clauses
+    intercept[IllegalArgumentException](
+      Wand.topK(searcher, Seq(hotTerm -> 1.0f, midTerm -> 1.0f, hotTerm -> 2.0f), 10))
+    intercept[IllegalArgumentException](
+      Wand.topK(searcher, Seq(midTerm -> 1.0f, midTerm -> 1.0f), 10, withCount = true))
+    // the collectors never hand that shape to WAND: it takes the compile route
+    val q = BoolQ(Seq(Occur.Should -> TermQ(midTerm), Occur.Should -> TermQ(midTerm)))
+    assertSame(searcher.topDocs(q, 10).toSeq, naive.topDocs(q, 10), "duplicate should")
+    assert(searcher.topDocsWithCount(q, 10)._2 == naive.count(q))
   }
 
   test("conjunction (Must+Must) == naive") {

@@ -37,8 +37,8 @@ class ExtensionSeamsSpec extends AnyFunSuite {
     assert(sr.count(TermQ("alpha")) == 2L)
     assert(reads.contains("termdict"),
       s"df lookups must resolve through the store, saw: $reads")
-    val viaDefault = new Searcher(spark, idxDir).topDocsWand(Seq("alpha"), 3)
-    assert(sr.topDocsWand(Seq("alpha"), 3).toSeq == viaDefault.toSeq)
+    val viaDefault = new Searcher(spark, idxDir).topDocs(TermQ("alpha"), 3)
+    assert(sr.topDocs(TermQ("alpha"), 3).toSeq == viaDefault.toSeq)
     assert(reads.contains("stats") && reads.contains("postings"),
       s"scoring must resolve stats+postings through the store, saw: $reads")
   }

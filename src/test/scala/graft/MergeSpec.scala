@@ -40,7 +40,7 @@ class MergeSpec extends AnyFunSuite {
       "disj" -> BoolQ(Seq(Occur.Should -> TermQ(hotTerm), Occur.Should -> TermQ("parser"))))
     qs.map { case (n, q) => n -> pre.topDocs(q, 10).toSeq }
   }
-  lazy val preWand: Seq[Hit] = pre.topDocsWand(Seq(hotTerm), 10).toSeq
+  lazy val preWand: Seq[Hit] = Wand.topK(pre, Seq(hotTerm -> 1.0f), 10)._1.toSeq
 
   lazy val postMeta: Manifest.IndexMeta = {
     preTop; preWand // force pre-merge capture
@@ -70,7 +70,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("merge: WAND results identical") {
-    val merged = post.topDocsWand(Seq(hotTerm), 10).toSeq
+    val merged = Wand.topK(post, Seq(hotTerm -> 1.0f), 10)._1.toSeq
     assert(merged.map(h => (h.segId, h.docId)) == preWand.map(remap))
     merged.zip(preWand).foreach { case (m, p) => assert(m.score == p.score) }
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.FieldNorm
+import graft.query.Wand
 import graft.score.Bm25
 
 /** Guards the `ft_wand_topk` driver entry: the production f32 WAND path's
@@ -50,7 +51,7 @@ class WandOracleSpec extends AnyFunSuite {
   test("f32 WAND top-10 == f64 twin at round(4), with a tie-safe boundary gap") {
     assume(haveData)
     val sr = Engine.searcher(spark, sfDir)
-    val hits = sr.topDocsWand(terms, 10)
+    val hits = Wand.topK(sr, terms.map(_ -> 1.0f), 10)._1
     assert(hits.length == 10)
     val docmap = sr.docmap.select($"segId", $"docId", $"path".cast("long").as("doc_id"))
       .as[(Int, Int, Long)].collect()
