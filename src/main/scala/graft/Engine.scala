@@ -383,6 +383,9 @@ object Engine {
     * (qid, score desc, doc_id), at most k rows per qid.
     */
   def topKBatchF64(sr: Searcher, queries: Seq[(String, Seq[String])], k: Int): DataFrame = {
+    val qids = queries.map(_._1)
+    require(qids.distinct.length == qids.length,
+      s"duplicate qids in a batch: ${qids.diff(qids.distinct).distinct.mkString(", ")}")
     val spark = sr.spark
     import spark.implicits._
     val qt = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }

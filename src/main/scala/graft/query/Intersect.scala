@@ -1,37 +1,49 @@
 package graft.query
 
-import org.apache.spark.sql.functions._
 import graft.score.Bm25
 
 /** Per-segment leapfrog intersection executor — the reference's cost-ordered
   * `Intersection` scorer (`src/query/intersection.rs:15-120`: docsets sorted
   * by cost, smallest drives, others gallop to the candidate) and its
-  * positions-aware phrase variant (`phrase_scorer.rs:46-420`), run the same
-  * way the WAND executor runs: ONE narrow shuffle of the query terms' packed
-  * posting blocks grouped by segment, a local in-memory leapfrog per segment
-  * task, per-segment (top-k, count) fruits, driver merge
-  * (`top_collector.rs:102-122`).
+  * positions-aware phrase variant (`phrase_scorer.rs:46-420`), run as
+  * kernels on the same [[SegmentCollect]] stage as the WAND executor: ONE
+  * narrow shuffle of the query terms' posting blocks grouped by (segment,
+  * docId chunk), a local in-memory leapfrog per group task, per-group
+  * (top-k, count) fruits, driver merge (`top_collector.rs:102-122`).
   *
   * This is the fast collector path for pure conjunctions (`+a +b`) and
   * phrases; the Dataset join pipeline in Searcher remains the composable
   * path (arbitrary bool trees, doc-set materialization). Chained equi-joins
   * pay a shuffle barrier per join; at interactive latency the single
-  * groupByKey-by-segment shuffle is the difference between ~300 ms and
-  * multi-second queries, and at cluster scale it is one stage regardless of
-  * clause count.
+  * grouped shuffle is the difference between ~300 ms and multi-second
+  * queries, and at cluster scale it is one stage regardless of clause
+  * count.
   */
 object Intersect {
 
-  /** One term's postings within one segment, blocks concatenated in docId
-    * order. Positions ride in CSR form — one flat array plus per-doc offsets
-    * — rather than `Array[Array[Int]]`: the nested shape pays a per-inner-
-    * array encoder/serializer cost on the shuffle for every posting of a hot
-    * term, while two primitive arrays copy as blobs. Empty when positions
-    * were not requested.
+  /** One term's postings within one segment (or chunk), blocks concatenated
+    * in docId order; positions in CSR form, one flat array plus per-doc
+    * offsets (empty when positions were not requested).
     */
   final class TermPostings(val docIds: Array[Int], val tfs: Array[Int],
                            val normIds: Array[Int],
                            val posFlat: Array[Int], val posOffsets: Array[Int])
+    extends Serializable
+
+  object TermPostings {
+    val empty = new TermPostings(Array.emptyIntArray, Array.emptyIntArray,
+      Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
+
+    /** Concatenate one term's blocks, given in blockId order. */
+    def of(blocks: Array[SegmentCollect.BlockRow]): TermPostings = {
+      def cat(f: SegmentCollect.BlockRow => Array[Int]) = Array.concat(blocks.map(f): _*)
+      val lens = cat(_.posLens)
+      val offsets = new Array[Int](lens.length + 1)
+      var i = 0
+      while (i < lens.length) { offsets(i + 1) = offsets(i) + lens(i); i += 1 }
+      new TermPostings(cat(_.docIds), cat(_.tfs), cat(_.normIds), cat(_.posFlat), offsets)
+    }
+  }
 
   /** Leapfrog over per-term sorted docId arrays (rarest first = index 0);
     * invokes `onMatch(docId, idxPerTerm)` for every doc present in all lists.
@@ -67,90 +79,14 @@ object Intersect {
     }
   }
 
-  private[graft] def collectSegments(searcher: Searcher, distinctTerms: Seq[String],
-                                     needPositions: Boolean) = {
-    val spark = searcher.spark
-    import spark.implicits._
-    val base = searcher.postings
-      .where($"field" === searcher.field && $"term".isin(distinctTerms: _*))
-    // positions are flattened to CSR (posFlat + per-doc lengths) MAP-SIDE in
-    // the scan select, so the nested array shape never crosses the shuffle
-    val withPos =
-      if (needPositions) base
-        .select($"segId", $"term", $"blockId", $"docIds", $"tfs", $"normIds",
-          flatten($"positions").as("posFlat"),
-          transform($"positions", p => size(p)).as("posLens"))
-      else base
-        .select($"segId", $"term", $"blockId", $"docIds", $"tfs", $"normIds",
-          typedLit(Array.empty[Int]).as("posFlat"),
-          typedLit(Array.empty[Int]).as("posLens"))
-    withPos
-      .as[(Int, String, Int, Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])]
-  }
-
   /** Arm the rare-driven block pruning when the rarest term's postings fit a
     * broadcast and the other terms dwarf it (shuffle saving is meaningful).
     */
   private final val RARE_BROADCAST_MAX_DF: Long = 1L << 16
 
-  /** First index in the sorted array with value >= target (shared by both
-    * executors' chunk slicing — Wand.multiTerm calls it too).
-    */
-  private[query] def lowerBound(a: Array[Int], target: Long): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (a(mid) < target) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  /** Slice block rows into docId-range chunks of `chunkDocs` docs, keyed
-    * (segId, chunk) — same soundness argument as the WAND executor's
-    * chunking (Wand.multiTerm): a doc's entries for every term land in the
-    * same chunk, so per-chunk intersections are complete for their docs and
-    * disjoint across chunks; counts add, per-chunk top-ks driver-merge. A
-    * straddling block is sliced exactly, including its CSR position slice.
-    * Bounds per-task residency for arbitrarily large segments AND lets
-    * several tasks work one giant segment in parallel.
-    */
-  private[graft] def chunkRows(
-      rows: org.apache.spark.sql.Dataset[(Int, String, Int, Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])],
-      chunkDocs: Int) = {
-    import rows.sparkSession.implicits._
-    val cw = chunkDocs
-    rows.flatMap { case (segId, term, blockId, ds, tfs, ns, pf, pl) =>
-      if (ds.isEmpty) Iterator.empty
-      else {
-        val lo = ds(0) / cw
-        val hi = ds(ds.length - 1) / cw
-        if (lo == hi) Iterator.single((segId, lo, term, blockId, ds, tfs, ns, pf, pl))
-        else {
-          // CSR prefix offsets once per straddling block (rare case)
-          val off = new Array[Int](pl.length + 1)
-          var i = 0
-          while (i < pl.length) { off(i + 1) = off(i) + pl(i); i += 1 }
-          (lo to hi).iterator.flatMap { c =>
-            val from = lowerBound(ds, c.toLong * cw)
-            val until = lowerBound(ds, (c + 1).toLong * cw)
-            if (from == until) Iterator.empty
-            else {
-              import java.util.Arrays.copyOfRange
-              val (pf2, pl2) =
-                if (pl.isEmpty) (Array.emptyIntArray, Array.emptyIntArray)
-                else (copyOfRange(pf, off(from), off(until)), copyOfRange(pl, from, until))
-              Iterator.single((segId, c, term, blockId,
-                copyOfRange(ds, from, until), copyOfRange(tfs, from, until),
-                copyOfRange(ns, from, until), pf2, pl2))
-            }
-          }
-        }
-      }
-    }
-  }
-
-  /** Per-segment term lists for the leapfrog, as a grouped Dataset whose
-    * tasks see every query term's postings for their segment.
+  /** Run `kernel(segId, lists)` on the [[SegmentCollect]] stage, `lists`
+    * holding each term of `ordered` (rarest first) for one (segment, chunk)
+    * group, and merge the fruits into the top `k` and the count.
     *
     * When the rarest term is small and the others are not, the rarest list
     * rides a BROADCAST and only blocks of the other terms whose
@@ -160,92 +96,41 @@ object Intersect {
     * driving list can never visit is dropped map-side before the shuffle. The
     * intersection is a subset of the rare term's docs, so pruning loses no
     * matches; the leapfrog's forward-only galloping stays correct over the
-    * gapped lists because it only ever probes for the driver's docIds.
+    * gapped lists because it only ever probes for the driver's docIds. The
+    * rare list rides WHOLE into every chunk task of its segment; the leapfrog
+    * drives on it and only probes the chunk's other-term slices, so each
+    * doc is found exactly once (in its own chunk). Segments where no
+    * other-term block survived hold no intersection docs.
     */
-  private def mapSegments[R: org.apache.spark.sql.Encoder](
-      searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
-      needPositions: Boolean,
-      chunkDocs: Int = Wand.DefaultChunkDocs)(f: (Int, Map[String, TermPostings]) => R): Array[R] = {
-    import searcher.spark.implicits._
+  private def run(searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
+                  positions: Boolean, chunkDocs: Int, k: Int)
+                 (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit = {
+    def lists(byTerm: Map[String, Array[SegmentCollect.BlockRow]], terms: Seq[String]) =
+      terms.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of)).toArray
     val rare = ordered.head
     val useBc = ordered.length > 1 && dfs(rare) <= RARE_BROADCAST_MAX_DF &&
       ordered.tail.map(dfs).sum > 4 * dfs(rare)
-    if (!useBc) {
-      chunkRows(collectSegments(searcher, ordered, needPositions), chunkDocs)
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key, it) => f(key._1, assembleChunk(it, needPositions)) }
-        .collect()
-    } else {
-      val spark = searcher.spark
-      val rareBySeg: Map[Int, TermPostings] =
-        collectSegments(searcher, Seq(rare), needPositions).collect()
-          .groupBy(_._1)
-          .map { case (s, rows) => s -> assemble(rows.iterator, needPositions)(rare) }
-      val rareB = spark.sparkContext.broadcast(rareBySeg.map {
-        case (s, tp) => s -> (tp.docIds, tp.tfs, tp.normIds, tp.posFlat, tp.posOffsets) })
-      val rareName = rare
-      // the rare list rides the broadcast WHOLE into every chunk task; the
-      // leapfrog drives on it and only probes the chunk's other-term slices,
-      // so each cross-chunk doc is found exactly once (in its own chunk)
-      val local = chunkRows(
-          collectSegments(searcher, ordered.tail, needPositions)
-            .filter { r =>
-              rareB.value.get(r._1) match {
-                case None => false // rare term absent in segment: empty intersection
-                case Some((docs, _, _, _, _)) =>
-                  val ds = r._4
-                  val p = java.util.Arrays.binarySearch(docs, ds(0))
-                  val ins = if (p >= 0) p else -p - 1
-                  ins < docs.length && docs(ins) <= ds(ds.length - 1)
-              }
-            }, chunkDocs)
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key, it) =>
-          val (d, t, n, pf, po) = rareB.value(key._1)
-          f(key._1, assembleChunk(it, needPositions) + (rareName -> new TermPostings(d, t, n, pf, po)))
+    if (!useBc)
+      SegmentCollect.collect(SegmentCollect.scan(searcher, ordered, positions), chunkDocs, k) {
+        (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }
+    else {
+      val rareB = searcher.spark.sparkContext.broadcast(
+        SegmentCollect.bySegment(SegmentCollect.scan(searcher, Seq(rare), positions)
+          .collect().iterator).map { case (s, byTerm) => s -> TermPostings.of(byTerm(rare)) }.toMap)
+      val rest = ordered.tail
+      val pruned = SegmentCollect.scan(searcher, rest, positions).filter { r =>
+        rareB.value.get(r.segId) match {
+          case None => false // rare term absent in segment: empty intersection
+          case Some(tp) =>
+            val docs = tp.docIds
+            val p = java.util.Arrays.binarySearch(docs, r.docIds(0))
+            val ins = if (p >= 0) p else -p - 1
+            ins < docs.length && docs(ins) <= r.lastDoc
         }
-        .collect()
-      // segments where the rare term matched but NO other-term block survived
-      // still hold zero intersection docs — nothing to add back
-      local
-    }
-  }
-
-  /** [[assemble]] over chunk-keyed rows (the chunk id is dropped). */
-  private def assembleChunk(
-      it: Iterator[(Int, Int, String, Int, Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])],
-      needPositions: Boolean): Map[String, TermPostings] =
-    assemble(it.map { case (segId, _, term, blockId, ds, tfs, ns, pf, pl) =>
-      (segId, term, blockId, ds, tfs, ns, pf, pl) }, needPositions)
-
-  /** Assemble each term's blocks (sorted by blockId) into one TermPostings;
-    * per-block CSR slices concatenate into one per-term CSR.
-    */
-  private def assemble(
-      it: Iterator[(Int, String, Int, Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])],
-      needPositions: Boolean): Map[String, TermPostings] = {
-    val byTerm = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[(Int, Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])]]
-    it.foreach { case (_, term, blockId, ds, tfs, ns, pf, pl) =>
-      byTerm.getOrElseUpdate(term, scala.collection.mutable.ArrayBuffer.empty) +=
-        ((blockId, ds, tfs, ns, pf, pl))
-    }
-    byTerm.map { case (term, blks) =>
-      val sorted = blks.sortBy(_._1)
-      val docIds = sorted.iterator.flatMap(_._2).toArray
-      val tfs = sorted.iterator.flatMap(_._3).toArray
-      val norms = sorted.iterator.flatMap(_._4).toArray
-      if (!needPositions)
-        term -> new TermPostings(docIds, tfs, norms, Array.emptyIntArray, Array.emptyIntArray)
-      else {
-        val flat = sorted.iterator.flatMap(_._5).toArray
-        val lens = sorted.iterator.flatMap(_._6).toArray
-        val offsets = new Array[Int](lens.length + 1)
-        var i = 0
-        while (i < lens.length) { offsets(i + 1) = offsets(i) + lens(i); i += 1 }
-        term -> new TermPostings(docIds, tfs, norms, flat, offsets)
       }
-    }.toMap
+      SegmentCollect.collect(pruned, chunkDocs, k) { (segId, byTerm) =>
+        kernel(segId, rareB.value(segId) +: lists(byTerm, rest)) }
+    }
   }
 
   /** Scored conjunction of terms: top-k + total count in one pass.
@@ -254,8 +139,6 @@ object Intersect {
     */
   def topKMust(searcher: Searcher, clauseTerms: Seq[String], k: Int,
                chunkDocs: Int = Wand.DefaultChunkDocs): (Array[Hit], Long) = {
-    val spark = searcher.spark
-    import spark.implicits._
     val distinct = clauseTerms.distinct
     val dfs = searcher.docFreqs(distinct) // one metadata job for dfs AND weights
     val weights = searcher.weightsFromDfs(dfs)
@@ -264,34 +147,27 @@ object Intersect {
     // clause c reads tf/weight of its term, via the ordered index
     val ordIdx = ordered.zipWithIndex.toMap
     val clauseIdx = clauseTerms.map(ordIdx).toArray
-    val wB = spark.sparkContext.broadcast(ordered.map(weights).toArray)
-    val orderedB = spark.sparkContext.broadcast(ordered.toArray)
+    val wB = searcher.spark.sparkContext.broadcast(ordered.map(weights).toArray)
 
-    val fruits = mapSegments(searcher, ordered, dfs, needPositions = false, chunkDocs) {
-      (segId, byTerm) =>
-        val ws = wB.value
-        val lists = orderedB.value.map(t =>
-          byTerm.getOrElse(t,
-            new TermPostings(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)))
-        val topk = new Wand.TopK(k, segId)
-        var cnt = 0L
-        leapfrog(lists) { (doc, idx) =>
-          val normId = lists(0).normIds(idx(0))
-          var score = 0.0f
-          var c = 0
-          while (c < clauseIdx.length) {
-            val ti = clauseIdx(c)
-            score += ws(ti).score(normId, lists(ti).tfs(idx(ti)).toLong)
-            c += 1
-          }
-          cnt += 1
-          topk.insert(doc, score)
-          ()
+    run(searcher, ordered, dfs, positions = false, chunkDocs, k) { (segId, lists) =>
+      val ws = wB.value
+      val topk = new Wand.TopK(k, segId)
+      var cnt = 0L
+      leapfrog(lists) { (doc, idx) =>
+        val normId = lists(0).normIds(idx(0))
+        var score = 0.0f
+        var c = 0
+        while (c < clauseIdx.length) {
+          val ti = clauseIdx(c)
+          score += ws(ti).score(normId, lists(ti).tfs(idx(ti)).toLong)
+          c += 1
         }
-        (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
+        cnt += 1
+        topk.insert(doc, score)
+        ()
+      }
+      (topk.hits, cnt)
     }
-
-    merge(fruits, k)
   }
 
   /** Phrase top-k + count in one pass: leapfrog intersection, then the
@@ -302,8 +178,6 @@ object Intersect {
                  chunkDocs: Int = Wand.DefaultChunkDocs): (Array[Hit], Long) = {
     require(searcher.indexMeta.forall(_.withPositions),
       s"phrase query needs positions, but the index at ${searcher.indexDir} was built with withPositions=false")
-    val spark = searcher.spark
-    import spark.implicits._
     val terms = p.terms.map(_._2)
     val distinct = terms.distinct
     val dfs = searcher.docFreqs(distinct)
@@ -314,46 +188,31 @@ object Intersect {
     val slotIdx = p.terms.map { case (_, t) => ordIdx(t) }.toArray
     val offsets = p.terms.map(_._1).toArray
     val slop = p.slop
-    val orderedB = spark.sparkContext.broadcast(ordered.toArray)
-    val weightB = spark.sparkContext.broadcast(weight)
+    val weightB = searcher.spark.sparkContext.broadcast(weight)
 
-    val fruits = mapSegments(searcher, ordered, dfs, needPositions = true, chunkDocs) {
-      (segId, byTerm) =>
-        val lists = orderedB.value.map(t =>
-          byTerm.getOrElse(t,
-            new TermPostings(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)))
-        val w = weightB.value
-        val topk = new Wand.TopK(k, segId)
-        var cnt = 0L
-        val flats = new Array[Array[Int]](slotIdx.length)
-        val starts = new Array[Int](slotIdx.length)
-        val ends = new Array[Int](slotIdx.length)
-        leapfrog(lists) { (doc, idx) =>
-          var s = 0
-          while (s < slotIdx.length) {
-            val tp = lists(slotIdx(s)); val i = idx(slotIdx(s))
-            flats(s) = tp.posFlat
-            starts(s) = tp.posOffsets(i); ends(s) = tp.posOffsets(i + 1)
-            s += 1
-          }
-          val c = PhraseMatcher.phraseCountCsr(offsets, flats, starts, ends, slop)
-          if (c > 0) {
-            cnt += 1
-            topk.insert(doc, w.score(lists(0).normIds(idx(0)), c.toLong))
-            ()
-          }
+    run(searcher, ordered, dfs, positions = true, chunkDocs, k) { (segId, lists) =>
+      val w = weightB.value
+      val topk = new Wand.TopK(k, segId)
+      var cnt = 0L
+      val flats = new Array[Array[Int]](slotIdx.length)
+      val starts = new Array[Int](slotIdx.length)
+      val ends = new Array[Int](slotIdx.length)
+      leapfrog(lists) { (doc, idx) =>
+        var s = 0
+        while (s < slotIdx.length) {
+          val tp = lists(slotIdx(s)); val i = idx(slotIdx(s))
+          flats(s) = tp.posFlat
+          starts(s) = tp.posOffsets(i); ends(s) = tp.posOffsets(i + 1)
+          s += 1
         }
-        (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
+        val c = PhraseMatcher.phraseCountCsr(offsets, flats, starts, ends, slop)
+        if (c > 0) {
+          cnt += 1
+          topk.insert(doc, w.score(lists(0).normIds(idx(0)), c.toLong))
+          ()
+        }
+      }
+      (topk.hits, cnt)
     }
-
-    merge(fruits, k)
-  }
-
-  private def merge(fruits: Array[(Seq[(Int, Int, Float)], Long)], k: Int): (Array[Hit], Long) = {
-    val hits = fruits.flatMap(_._1)
-      .map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, fruits.map(_._2).sum)
   }
 }

@@ -406,11 +406,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       // term, so idf = idf(0, N) per slot.
       require(indexMeta.forall(_.withPositions),
         s"regex-phrase query needs positions, but the index at $indexDir was built with withPositions=false")
-      val slotTerms: Seq[Seq[String]] = rp.terms.map { case (_, pat) =>
-        // whole-term match, like RegexQ (tantivy_fst anchors implicitly)
-        allTermsFor(fld).where(regexp_like($"term", lit(Searcher.anchored(pat))))
-          .orderBy($"term").limit(rp.maxExpansions).as[String].collect().toSeq
-      }
+      val slotTerms = rp.terms.map { case (_, pat) => regexExpansions(pat, rp.maxExpansions, fld) }
       val patDfs = docFreqs(rp.terms.map(_._2), fld)
       val rpWeight = Bm25.forTerms(rp.terms.map(t => patDfs.getOrElse(t._2, 0L)),
         fieldStats(fld)._2, avgFieldnormFor(fld))
@@ -433,15 +429,13 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       // the prefix term).
       require(indexMeta.forall(_.withPositions),
         s"phrase-prefix query needs positions, but the index at $indexDir was built with withPositions=false")
-      val expansions = allTermsFor(fld)
-        .where($"term".startsWith(pp.prefix._2))
-        .orderBy($"term").limit(pp.maxExpansions).as[String].collect()
+      val expansions = prefixExpansions(pp.prefix._2, pp.maxExpansions, fld)
       if (expansions.isEmpty) spark.emptyDataset[ScoredDoc]
       else if (pp.terms.length <= 1) {
         // 0 fixed terms = the parser's bare `term*` (reference falls back
         // to a const-score range weight); 1 fixed term = the SinglePrefix
         // scorer, whose score is const 1.0 (`phrase_prefix_scorer.rs:84-88`)
-        val slots = pp.terms.map(t => Seq(t._2)) :+ expansions.toSeq
+        val slots = pp.terms.map(t => Seq(t._2)) :+ expansions
         val offsets = (pp.terms.map(_._1) :+ pp.prefix._1).toArray
         slotPhraseDocs(slots, offsets, slop = 0, fld)
       } else {
@@ -454,7 +448,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
             fieldStats(fld)._2, avgFieldnormFor(fld))
           slotPhraseDocs(pp.terms.map(t => Seq(t._2)), pp.terms.map(_._1).toArray,
             slop = 0, fld, weight = Some(ppWeight),
-            prefix = Some((pp.prefix._1, expansions.toSeq)))
+            prefix = Some((pp.prefix._1, expansions)))
         }
       }
     case b: BoolQ => compileBool(b, fld)
@@ -524,24 +518,40 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   }
 
   /** Shared executor for phrase queries whose slots are TERM SETS (regex
-    * phrase, phrase prefix): one pruned postings scan over all matched
-    * terms, one (segId, docId) shuffle, per-slot position unions merged and
-    * fed to the phrase matcher.
-    *
-    * With `weight` set, scores BM25 with tf = the slot-phrase count
-    * (`phrase_scorer.rs:551-556` over union postings); otherwise const 1.0.
-    * With `prefix` set (phrase-prefix MultiPrefix shape,
-    * `phrase_prefix_scorer.rs:159-176`), a doc additionally needs some
-    * phrase start `base` whose prefix position `base + prefixOffset` is
-    * held by an expansion term — the prefix gates matching but does NOT
-    * contribute to the scored count.
+    * phrase, phrase prefix), scored: BM25 with tf = the slot-phrase count
+    * when `weight` is set (`phrase_scorer.rs:551-556` over union postings),
+    * otherwise const 1.0.
     */
   private def slotPhraseDocs(slotTerms: Seq[Seq[String]], offsets: Array[Int],
                              slop: Int, fld: String,
                              weight: Option[Bm25.Weight] = None,
-                             prefix: Option[(Int, Seq[String])] = None): Dataset[ScoredDoc] = {
+                             prefix: Option[(Int, Seq[String])] = None): Dataset[ScoredDoc] =
+    slotPhrase(slotTerms, offsets, slop, prefix, fld).map { case (seg, doc, normId, cnt) =>
+      ScoredDoc(seg, doc, weight.map(_.score(normId, cnt.toLong)).getOrElse(1.0f)) }
+
+  /** Per-doc slot-union phrase counts, unscored — the building block the
+    * F64 oracle twins share with the f32 path: (segId, docId, cnt).
+    */
+  def slotPhraseCounts(slotTerms: Seq[Seq[String]], offsets: Array[Int],
+                       slop: Int, prefix: Option[(Int, Seq[String])] = None,
+                       fld: String = field): DataFrame =
+    slotPhrase(slotTerms, offsets, slop, prefix, fld)
+      .map { case (seg, doc, _, cnt) => (seg, doc, cnt) }.toDF("segId", "docId", "cnt")
+
+  /** The slot-phrase pass: one pruned postings scan over all matched terms,
+    * one (segId, docId) shuffle, per-slot position unions merged and fed to
+    * the phrase matcher. Yields (segId, docId, normId, cnt) for docs whose
+    * slot unions satisfy the phrase. With `prefix` set (phrase-prefix
+    * MultiPrefix shape, `phrase_prefix_scorer.rs:159-176`), a doc
+    * additionally needs some phrase start `base` whose prefix position
+    * `base + prefixOffset` is held by an expansion term — the prefix gates
+    * matching but does NOT contribute to cnt, the FIXED-phrase count.
+    */
+  private def slotPhrase(slotTerms: Seq[Seq[String]], offsets: Array[Int], slop: Int,
+                         prefix: Option[(Int, Seq[String])],
+                         fld: String): Dataset[(Int, Int, Int, Int)] = {
     if (slotTerms.exists(_.isEmpty) || prefix.exists(_._2.isEmpty))
-      return spark.emptyDataset[ScoredDoc]
+      return spark.emptyDataset[(Int, Int, Int, Int)]
     val nSlots = offsets.length
     // term -> slots it can fill (a term may match several slots); the
     // prefix expansion set, when present, is slot index nSlots
@@ -570,66 +580,16 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       if (bySlot.exists(_.isEmpty)) Iterator.empty
       else {
         val arrays = bySlot.map(_.distinct.sorted.toArray)
-        val phraseArrays = arrays.take(nSlots)
-        if (prefix.isDefined) {
-          val (count, extended) = PhraseMatcher.prefixGatedCount(
-            offsets, phraseArrays, prefixOff, arrays(nSlots))
-          if (!extended) Iterator.empty
-          else Iterator.single(ScoredDoc(key._1, key._2,
-            weight.map(_.score(normId, count.toLong)).getOrElse(1.0f)))
-        } else {
-          val count = PhraseMatcher.phraseCount(offsets, phraseArrays, slop)
-          if (count > 0)
-            Iterator.single(ScoredDoc(key._1, key._2,
-              weight.map(_.score(normId, count.toLong)).getOrElse(1.0f)))
-          else Iterator.empty
-        }
+        val (count, ok) =
+          if (prefix.isDefined)
+            PhraseMatcher.prefixGatedCount(offsets, arrays.take(nSlots), prefixOff, arrays(nSlots))
+          else {
+            val c = PhraseMatcher.phraseCount(offsets, arrays.take(nSlots), slop)
+            (c, c > 0)
+          }
+        if (ok) Iterator.single((key._1, key._2, normId, count)) else Iterator.empty
       }
     }
-  }
-
-  /** Per-doc slot-union phrase counts, unscored — the building block the
-    * F64 oracle twins share with the f32 path: (segId, docId, cnt) for docs
-    * whose slot unions satisfy the phrase (and, when `prefix` is set, whose
-    * match extends with a prefix expansion; cnt is then the FIXED-phrase
-    * count, `phrase_prefix_scorer.rs:159-176`).
-    */
-  def slotPhraseCounts(slotTerms: Seq[Seq[String]], offsets: Array[Int],
-                       slop: Int, prefix: Option[(Int, Seq[String])] = None,
-                       fld: String = field): DataFrame = {
-    if (slotTerms.exists(_.isEmpty) || prefix.exists(_._2.isEmpty))
-      return Seq.empty[(Int, Int, Int)].toDF("segId", "docId", "cnt")
-    val nSlots = offsets.length
-    val termSlots: Map[String, Seq[Int]] = (slotTerms.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(t => (t, i)) } ++
-      prefix.toSeq.flatMap { case (_, ts) => ts.map(t => (t, nSlots)) })
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val prefixOff = prefix.map(_._1).getOrElse(-1)
-    val nBuckets = if (prefix.isDefined) nSlots + 1 else nSlots
-    val allMatched = termSlots.keys.toSeq.sorted
-    val rows = postings
-      .where($"field" === fld && $"term".isin(allMatched: _*))
-      .select($"segId", $"term", explode(arrays_zip($"docIds", $"positions")).as("p"))
-      .select($"segId", $"term", $"p.docIds".as("docId"), $"p.positions".as("positions"))
-      .as[(Int, String, Int, Array[Int])]
-    rows.groupByKey(r => (r._1, r._3)).flatMapGroups { (key, it) =>
-      val bySlot = Array.fill(nBuckets)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      it.foreach { case (_, term, _, pos) =>
-        termSlots.getOrElse(term, Seq.empty).foreach(i => bySlot(i) ++= pos)
-      }
-      if (bySlot.exists(_.isEmpty)) Iterator.empty
-      else {
-        val arrays = bySlot.map(_.distinct.sorted.toArray)
-        if (prefix.isDefined) {
-          val (count, extended) = PhraseMatcher.prefixGatedCount(
-            offsets, arrays.take(nSlots), prefixOff, arrays(nSlots))
-          if (extended) Iterator.single((key._1, key._2, count)) else Iterator.empty
-        } else {
-          val count = PhraseMatcher.phraseCount(offsets, arrays.take(nSlots), slop)
-          if (count > 0) Iterator.single((key._1, key._2, count)) else Iterator.empty
-        }
-      }
-    }.toDF("segId", "docId", "cnt")
   }
 
   /** Prefix expansions from the term dictionary, ascending, capped
@@ -920,28 +880,12 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 
   private def topDocsWithCountGeneric(q: Query, k: Int): (Array[Hit], Long) = {
     val partials = compile(q).mapPartitions { it =>
+      val topk = new Wand.TopK(k)
       var cnt = 0L
-      // dequeues the WORST kept hit first: lowest score, then largest address
-      val heap = scala.collection.mutable.PriorityQueue.empty[ScoredDoc](
-        Ordering.by((s: ScoredDoc) => (-s.score, s.segId, s.docId)))
-      it.foreach { s =>
-        cnt += 1
-        if (heap.size < k) heap.enqueue(s)
-        else {
-          val w = heap.head
-          val better = s.score > w.score ||
-            (s.score == w.score && (s.segId < w.segId ||
-              (s.segId == w.segId && s.docId < w.docId)))
-          if (better) { heap.dequeue(); heap.enqueue(s) }
-        }
-      }
-      Iterator.single((heap.toSeq.map(s => (s.segId, s.docId, s.score)), cnt))
+      it.foreach { s => cnt += 1; topk.offer(Hit(s.segId, s.docId, s.score)) }
+      Iterator.single((topk.hits, cnt))
     }.collect()
-    val hits = partials.flatMap(_._1)
-      .map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, partials.map(_._2).sum)
+    SegmentCollect.merge(partials, k)
   }
 
   /** Per-segment/per-component space accounting

@@ -1,6 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.functions._
 import graft.score.Bm25
 
 /** Block-max WAND top-k executor — the headline custom operator
@@ -9,10 +8,10 @@ import graft.score.Bm25
   * Using Block-Max Indexes", the paper the reference itself cites).
   *
   * Catalyst cannot express threshold-ratcheted block skipping, so this runs
-  * inside `flatMapGroups` over segment-grouped posting blocks: one task per
-  * segment group, exactly the reference's one-rayon-task-per-segment shape
-  * (`searcher.rs:220`) — and the thing that scales linearly with executors.
-  * Per-segment top-k fruits are merged on the driver
+  * as a kernel on the shared [[SegmentCollect]] stage: one task per
+  * (segment, docId chunk) group, the reference's one-rayon-task-per-segment
+  * shape (`searcher.rs:220`) — and the thing that scales linearly with
+  * executors. Per-chunk top-k fruits are merged on the driver
   * (`top_collector.rs:102-122`).
   *
   * The scan only reads the query terms' blocks (Parquet row-group pruning on
@@ -85,23 +84,30 @@ object Wand {
     }
   }
 
-  /** Per-segment top-k accumulator with the reference's threshold semantics:
-    * threshold = kth best score once full (Float.MinValue before), WAND
-    * accepts strictly greater scores only, docs arrive in ascending docId so
-    * threshold-tied earlier (lower) docIds are kept — matching the
-    * (score desc, docId asc) tie order of `top_collector.rs:45-61`.
+  /** Top-k accumulator with the reference's threshold semantics:
+    * threshold = kth best score once full (Float.MinValue before); a hit
+    * displaces the worst kept one only if it is better in (score desc,
+    * segId asc, docId asc) order — the tie order of `top_collector.rs:45-61`.
+    * The kernels feed one segment's docs in ascending docId through
+    * [[insert]] (so a score tie never displaces, and WAND only offers
+    * strictly greater scores); the generic collector offers hits of any
+    * segment in any order through [[offer]].
     */
-  final class TopK(k: Int, segId: Int) {
-    // min-heap: head = lowest score; among ties, the HIGHEST docId (evict it first)
+  final class TopK(k: Int, segId: Int = 0) {
+    // head = the worst kept hit: lowest score, then the largest address
     private val heap = scala.collection.mutable.PriorityQueue.empty[Hit](
-      Ordering.by((h: Hit) => (-h.score, h.docId)))
+      Ordering.by((h: Hit) => (-h.score, h.segId, h.docId)))
     def threshold: Float = if (heap.size < k) Float.MinValue else heap.head.score
     /** callback(doc, score) -> new threshold (`block_wand.rs:148-212`). */
-    def insert(doc: Int, score: Float): Float = {
-      if (heap.size < k) heap.enqueue(Hit(segId, doc, score))
-      else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(segId, doc, score)) }
-      threshold
-    }
+    def insert(doc: Int, score: Float): Float = { offer(Hit(segId, doc, score)); threshold }
+    def offer(h: Hit): Unit =
+      if (heap.size < k) heap.enqueue(h)
+      else {
+        val w = heap.head
+        val better = h.score > w.score || (h.score == w.score &&
+          (h.segId < w.segId || (h.segId == w.segId && h.docId < w.docId)))
+        if (better) { heap.dequeue(); heap.enqueue(h) }
+      }
     def hits: Array[Hit] = heap.toArray
   }
 
@@ -259,9 +265,10 @@ object Wand {
     * the boost, so every pruning bound stays sound. Unboosted callers pass
     * boost 1.0, which is exact (`weight * 1.0f == weight`).
     *
-    * One WAND run per segment group, driver merge with (score desc, segId asc,
-    * docId asc) (`top_collector.rs:102-122`). Returns (hits, count): with
-    * `withCount` the count is the union's hit count from the unpruned pass
+    * One WAND run per (segment, chunk) group, driver merge with (score
+    * desc, segId asc, docId asc) (`top_collector.rs:102-122`). Returns
+    * (hits, count): with `withCount` the count is the union's hit count from
+    * the unpruned pass
     * (the count collector must see every match, `multi_collector.rs:166`);
     * otherwise it is -1. Terms must be distinct: duplicate Should clauses of
     * one term sum that term's score twice (`SumCombiner`), which one weight
@@ -353,124 +360,61 @@ object Wand {
     */
   private def singleTerm(searcher: Searcher, term: String, w: Bm25.Weight,
                          k: Int): Array[Hit] = {
-    val spark = searcher.spark
-    import spark.implicits._
-    val rows = searcher.postings
-      .where(col("field") === searcher.field && col("term") === term)
-      .select($"segId", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
-        $"docIds", $"tfs", $"normIds")
-      .as[(Int, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
-    val fruits = rows.mapPartitions { it =>
-      val bySeg = scala.collection.mutable.Map.empty[Int,
-        scala.collection.mutable.ArrayBuffer[(Int, Block)]]
-      it.foreach { case (segId, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
-        bySeg.getOrElseUpdate(segId, scala.collection.mutable.ArrayBuffer.empty) +=
-          ((blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
-      }
-      bySeg.iterator.flatMap { case (segId, blks) =>
-        val scorer = new TermScorer(w, blks.sortBy(_._1).map(_._2).toArray)
+    import searcher.spark.implicits._
+    val hits = SegmentCollect.scan(searcher, Seq(term), positions = false).mapPartitions { it =>
+      SegmentCollect.bySegment(it).flatMap { case (segId, byTerm) =>
         val topk = new TopK(k, segId)
-        blockWandSingle(scorer, topk.threshold, topk.insert)
-        topk.hits.iterator
-      }.map(h => (h.segId, h.docId, h.score))
+        blockWandSingle(new TermScorer(w, byTerm(term).map(toBlock)), topk.threshold, topk.insert)
+        topk.hits
+      }
     }.collect()
-    fruits.map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId)).take(k)
+    SegmentCollect.top(hits, k)
   }
 
-  /** DocId-range width of one multi-term task (see [[multiTerm]]): bounds
-    * per-task block residency at ~`terms * chunkDocs/128` blocks no matter
-    * how large a segment grows, and lets several tasks work one giant
+  private def toBlock(r: SegmentCollect.BlockRow): Block =
+    Block(r.lastDoc, r.maxNormId, r.maxTf, r.docIds, r.tfs, r.normIds)
+
+  /** DocId-range width of one multi-term task (see [[SegmentCollect]]):
+    * bounds per-task block residency at ~`terms * chunkDocs/128` blocks no
+    * matter how large a segment grows, and lets several tasks work one giant
     * segment in parallel. 2^20 docs/chunk keeps every realistic segment in
     * one chunk at test scale while capping the worst case (8-term query,
     * saturated postings) near ~100 MB per task.
     */
   final val DefaultChunkDocs: Int = 1 << 20
 
-  /** The shared multi-term stage: one pruned scan of the query terms'
-    * blocks, one narrow shuffle grouped by (segment, docId-range chunk),
-    * per-chunk BMW loop (plus the union count when `withCount`), driver
-    * merge.
-    *
-    * Chunking is sound because per-doc scores are computed entirely from
-    * that doc's block entries: a doc's postings for every term land in the
-    * SAME chunk (chunk = docId / chunkDocs), so each chunk's WAND sees
-    * complete scores for its docs, each chunk's top-k contains every doc of
-    * that chunk that can reach the global top-k (the same decomposability
-    * argument as the per-segment merge, `top_collector.rs:102-122`), and
-    * union counts add across disjoint chunks. A block straddling a chunk
-    * boundary is SLICED map-side (exact docId/tf/normId subarrays; the
-    * parent block-max metadata rides along as a still-valid upper bound).
+  /** The multi-term BMW kernel on the shared [[SegmentCollect]] stage: the
+    * query terms' blocks, minus those the τ prefilter drops, gathered per
+    * (segment, docId-range chunk); per chunk the BMW loop (plus the union
+    * count when `withCount`); driver merge. A sliced block keeps its parent's
+    * block-max pair, a still-valid upper bound for the BMW skips.
     */
   private def multiTerm(searcher: Searcher, present: Seq[String],
                         weights: Map[String, Bm25.Weight], k: Int,
                         tau: Float, withCount: Boolean,
                         chunkDocs: Int): (Array[Hit], Long) = {
-    val spark = searcher.spark
-    import spark.implicits._
-    val wB = spark.sparkContext.broadcast(weights)
+    val wB = searcher.spark.sparkContext.broadcast(weights)
     val sumMax = present.map(weights(_).maxScore).sum
     val tauB = tau
-    val cw = chunkDocs
-
-    val rows = searcher.postings
-      .where(col("field") === searcher.field && col("term").isin(present: _*))
-      .select($"segId", $"term", $"blockId", $"lastDoc",
-        $"maxNormId", $"maxTf", $"docIds", $"tfs", $"normIds")
-      .as[(Int, String, Int, Int, Int, Int, Array[Int], Array[Int], Array[Int])]
-      .filter { r =>
-        tauB == Float.MinValue || {
-          val w = wB.value(r._2)
-          // strictly-conservative upper bound: compute in double and allow
-          // 2 ulps of f32 slack — the per-doc score sums this prunes against
-          // are f32 in a different association order, and a bound rounding a
-          // few ulps low could drop a block holding a doc that ties tau
-          val bound = (w.score(r._5, decodeMaxTf(r._6)).toDouble
-            + sumMax.toDouble - w.maxScore.toDouble).toFloat
-          Math.nextUp(Math.nextUp(bound)) > tauB
-        }
-      }
-
-    // slice each block into its docId-range chunk(s); the common case
-    // (block entirely inside one chunk) passes the arrays through untouched
-    val chunked = rows.flatMap { case (segId, term, blockId, lastDoc, mN, mT, ds, tfs, ns) =>
-      if (ds.isEmpty) Iterator.empty
-      else {
-      val lo = ds(0) / cw
-      val hi = lastDoc / cw
-      if (lo == hi)
-        Iterator.single((segId, lo, term, blockId, Block(lastDoc, mN, mT, ds, tfs, ns)))
-      else (lo to hi).iterator.flatMap { c =>
-        val from = Intersect.lowerBound(ds, c.toLong * cw)
-        val until = Intersect.lowerBound(ds, (c + 1).toLong * cw)
-        if (from == until) Iterator.empty
-        else {
-          val d2 = java.util.Arrays.copyOfRange(ds, from, until)
-          Iterator.single((segId, c, term, blockId, Block(d2(d2.length - 1), mN, mT,
-            d2, java.util.Arrays.copyOfRange(tfs, from, until),
-            java.util.Arrays.copyOfRange(ns, from, until))))
-        }
-      }
-      }
+    val rows = SegmentCollect.scan(searcher, present, positions = false)
+    val pruned = if (tau == Float.MinValue) rows else rows.filter { r =>
+      val w = wB.value(r.term)
+      // strictly-conservative upper bound: compute in double and allow
+      // 2 ulps of f32 slack — the per-doc score sums this prunes against
+      // are f32 in a different association order, and a bound rounding a
+      // few ulps low could drop a block holding a doc that ties tau
+      val bound = (w.score(r.maxNormId, decodeMaxTf(r.maxTf)).toDouble
+        + sumMax.toDouble - w.maxScore.toDouble).toFloat
+      Math.nextUp(Math.nextUp(bound)) > tauB
     }
 
-    val fruits = chunked.groupByKey(r => (r._1, r._2)).mapGroups { (key, it) =>
-      val segId = key._1
-      // materialize this chunk's blocks per term, ordered by blockId
-      val byTerm = scala.collection.mutable.Map.empty[String,
-        scala.collection.mutable.ArrayBuffer[(Int, Block)]]
-      it.foreach { case (_, _, term, blockId, blk) =>
-        byTerm.getOrElseUpdate(term, scala.collection.mutable.ArrayBuffer.empty) +=
-          ((blockId, blk))
-      }
+    val (hits, cnt) = SegmentCollect.collect(pruned, chunkDocs, k) { (segId, byTerm) =>
       val ws = wB.value
       val perTerm = byTerm.toSeq.sortBy(_._1)
-        .map { case (term, blks) => (term, blks.sortBy(_._1).map(_._2).toArray) }
       val cnt =
-        if (withCount)
-          unionCount(perTerm.map(_._2.iterator.flatMap(_.docIds).toArray).toArray)
-        else -1L
-      val scorers = perTerm.map { case (term, blks) => new TermScorer(ws(term), blks) }
+        if (withCount) unionCount(perTerm.map(_._2.flatMap(_.docIds)).toArray)
+        else 0L
+      val scorers = perTerm.map { case (term, blks) => new TermScorer(ws(term), blks.map(toBlock)) }
       val topk = new TopK(k, segId)
       // pre-seed the probe threshold; the callback keeps it as a floor while
       // the heap fills (the heap's own threshold is MinValue until k hits)
@@ -479,12 +423,8 @@ object Wand {
         blockWandSingle(scorers.head, math.max(tauB, topk.threshold), cb)
       else if (scorers.nonEmpty)
         blockWand(scorers, math.max(tauB, topk.threshold), cb)
-      (topk.hits.toSeq.map(h => (h.segId, h.docId, h.score)), cnt)
-    }.collect()
-
-    val hits = fruits.flatMap(_._1).map { case (s, d, sc) => Hit(s, d, sc) }
-      .sortBy(h => (-h.score, h.segId, h.docId))
-      .take(k)
-    (hits, if (withCount) fruits.map(_._2).sum else -1L)
+      (topk.hits, cnt)
+    }
+    (hits, if (withCount) cnt else -1L)
   }
 }

@@ -44,4 +44,11 @@ class BatchTopKSpec extends AnyFunSuite {
     assert(perQid.values.forall(_ <= 3))
     assert(perQid("q_spark") == 3 && !perQid.contains("q_missing"))
   }
+
+  test("duplicate qids are rejected, not unioned") {
+    assume(haveData)
+    val dup = Seq("q" -> Seq("spark"), "q" -> Seq("merge"))
+    val e = intercept[IllegalArgumentException](Engine.topKBatchF64(sr, dup, 10))
+    assert(e.getMessage.contains("duplicate qids"))
+  }
 }

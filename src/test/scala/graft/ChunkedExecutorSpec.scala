@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.{Intersect, PhraseQ, Wand}
+import graft.query.{Intersect, PhraseQ, SegmentCollect, Wand}
 
-/** DocId-range chunking of the multi-term executors (Wand.topK /
-  * Intersect.mapSegments): per-task block residency is bounded by the chunk
-  * width instead of the segment size, so the answer must be IDENTICAL at
+/** DocId-range chunking of the shared collect stage (`SegmentCollect`) that
+  * the multi-term executors (Wand.topK, Intersect.topKMust,
+  * Intersect.topKPhrase) run on: per-task block residency is bounded by the
+  * chunk width instead of the segment size, so the answer must be IDENTICAL at
   * any chunk width — including widths far below the 128-entry block length,
   * which force map-side block slicing at chunk boundaries, and width 1
   * (every doc its own chunk). This is the residency hardening the round-3
@@ -69,31 +70,64 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     assert(c0 > 0)
   }
 
+  test("WAND multi-term with the τ prefilter armed: chunked == unchunked at widths 64 and 1") {
+    // probeCutoff = 0 arms the single-term threshold probe, so blocks are
+    // dropped map-side BEFORE slicing; withCount = false keeps it armed
+    val terms = Seq("alpha", "beta", "gamma").map(_ -> 1.0f)
+    val (h0, _) = Wand.topK(sr, terms, 10, probeCutoff = 0L, chunkDocs = Int.MaxValue)
+    for (w <- Seq(64, 1)) {
+      val (h, c) = Wand.topK(sr, terms, 10, probeCutoff = 0L, chunkDocs = w)
+      assert(norm(h) == norm(h0), s"width $w hits")
+      assert(c == -1L, s"width $w count")
+    }
+    assert(h0.length == 10)
+    assert(norm(h0) == norm(Wand.topK(sr, terms, 10, withCount = true)._1), "probe changed hits")
+  }
+
   test("per-task residency is BOUNDED by the chunk width") {
-    import spark.implicits._
-    // direct assertion on the chunked shuffle rows: within every
+    // direct assertion on the sliced shuffle rows: within every
     // (segId, chunk) group, each term holds at most `width` posting
     // entries and every docId lies inside the chunk's range — the
-    // residency invariant that holds no matter how large a segment grows
+    // residency invariant that holds no matter how large a segment grows.
+    // A sliced block gets its own lastDoc and keeps the parent's
+    // block-max pair; positions off and on take the same slicer
     val width = 64
-    val rows = Intersect.chunkRows(
-      Intersect.collectSegments(sr, Seq("alpha", "beta", "gamma"),
-        needPositions = true), width)
-      .map { case (segId, chunk, term, _, ds, _, _, pf, pl) =>
-        (segId, chunk, term, ds.length, ds.min, ds.max, pf.length, pl.sum) }
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (segId, chunk, term, n, lo, hi, pfLen, plSum) =>
-      assert(n <= width, s"$term in ($segId,$chunk): $n entries > width")
-      assert(lo >= chunk.toLong * width && hi < (chunk + 1).toLong * width,
-        s"$term in ($segId,$chunk): docId [$lo,$hi] outside range")
-      assert(pfLen == plSum, s"$term in ($segId,$chunk): CSR slice mismatch")
+    for (positions <- Seq(false, true)) {
+      val scanned = SegmentCollect.scan(sr, Seq("alpha", "beta", "gamma"), positions)
+      val parents = scanned.collect().map(r => (r.segId, r.term, r.blockId) -> r).toMap
+      val rows = SegmentCollect.slice(scanned, width).collect()
+        .map(r => (r, SegmentCollect.chunkOf(r, width)))
+      assert(rows.nonEmpty)
+      rows.foreach { case (r, chunk) =>
+        val where = s"${r.term} block ${r.blockId} in (${r.segId},$chunk)"
+        val parent = parents((r.segId, r.term, r.blockId))
+        assert(r.docIds.length <= width, s"$where: ${r.docIds.length} entries > width")
+        assert(r.docIds.min >= chunk.toLong * width && r.docIds.max < (chunk + 1).toLong * width,
+          s"$where: docId [${r.docIds.min},${r.docIds.max}] outside range")
+        assert(r.lastDoc == r.docIds.last, s"$where: lastDoc ${r.lastDoc} != last docId")
+        assert(r.maxNormId == parent.maxNormId && r.maxTf == parent.maxTf,
+          s"$where: block-max pair differs from the parent block's")
+        // an exact slice of the parent's arrays, CSR positions included
+        val from = parent.docIds.indexOf(r.docIds(0))
+        val until = from + r.docIds.length
+        assert(r.docIds.toSeq == parent.docIds.slice(from, until).toSeq &&
+          r.tfs.toSeq == parent.tfs.slice(from, until).toSeq &&
+          r.normIds.toSeq == parent.normIds.slice(from, until).toSeq,
+          s"$where: not the parent's [$from, $until) slice")
+        val pos = parent.posLens.take(from).sum
+        assert(r.posLens.toSeq == parent.posLens.slice(from, until).toSeq &&
+          r.posFlat.toSeq == parent.posFlat.slice(pos, pos + r.posLens.sum).toSeq,
+          s"$where: CSR slice mismatch")
+        assert(r.posLens.isEmpty != positions, s"$where: positions = $positions")
+      }
+      // most blocks straddle a 64-doc boundary: the slicer must have run
+      assert(rows.length > parents.size, "expected sliced blocks")
+      val perTask = rows.groupBy { case (r, chunk) => (r.segId, chunk) }
+        .map { case (_, rs) => rs.map(_._1.docIds.length).sum }
+      // 3 query terms x width docs is the hard cap per task
+      assert(perTask.max <= 3 * width)
+      assert(perTask.size > 5, "expected several chunks per segment")
     }
-    val perTask = rows.groupBy(r => (r._1, r._2))
-      .map { case (_, rs) => rs.map(_._4).sum }
-    // 3 query terms x width docs is the hard cap per task
-    assert(perTask.max <= 3 * width)
-    assert(perTask.size > 5, "expected several chunks per segment")
   }
 
   test("phrase top-k: chunked == unchunked (CSR position slices)") {
