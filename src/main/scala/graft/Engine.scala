@@ -421,7 +421,7 @@ object Engine {
       .limit(k)
 
   /** Scored PhrasePrefixQuery (MultiPrefix shape) in f64 — the twin of the
-    * reference semantics wired in `Searcher.compileRaw`
+    * reference semantics wired in `Searcher.compile`
     * (`phrase_prefix_scorer.rs:84-93`, `phrase_prefix_query.rs:113-115`):
     * weight = for_terms over the FIXED terms' dfs, tf = the fixed phrase's
     * occurrence count, the prefix expansion only gates matching. Output

@@ -170,23 +170,6 @@ object Analysis {
     out.result()
   }
 
-  /** Regex tokenizer: tokens = regex matches (reference
-    * `src/tokenizer/regex_tokenizer.rs`).
-    */
-  def regexTokenize(text: String, pattern: java.util.regex.Pattern): Seq[Token] = {
-    val m = pattern.matcher(text)
-    val out = Vector.newBuilder[Token]
-    var pos = 0
-    while (m.find()) {
-      if (m.end() > m.start()) {
-        out += Token(text.substring(m.start(), m.end()), pos,
-          utf8Length(text.substring(0, m.start())), utf8Length(text.substring(0, m.end())))
-        pos += 1
-      }
-    }
-    out.result()
-  }
-
   /** Facet tokenizer: a facet path `/a/b/c` emits each ancestor prefix
     * `/a`, `/a/b`, `/a/b/c` (reference `src/tokenizer/facet_tokenizer.rs`).
     */
@@ -373,23 +356,6 @@ object Analysis {
     case "bytes" => rawTokenize(text).flatMap(t => canonicalBytesHex(t.text).map(c => t.copy(text = c)))
     case other => throw new IllegalArgumentException(s"unknown tokenizer chain: $other")
   }
-
-  /** StopWordFilter (reference `src/tokenizer/stop_word_filter/`). */
-  def stopWordFilter(tokens: Seq[Token], stopSet: Set[String]): Seq[Token] =
-    tokens.filterNot(t => stopSet.contains(t.text))
-
-  /** AlphaNumOnlyFilter (reference `src/tokenizer/alphanum_only.rs`): keep
-    * tokens composed exclusively of alphanumeric code points.
-    */
-  def alphaNumOnlyFilter(tokens: Seq[Token]): Seq[Token] =
-    tokens.filter { t =>
-      var i = 0; var ok = true
-      while (ok && i < t.text.length) {
-        val cp = t.text.codePointAt(i)
-        if (!isAlphanumeric(cp)) ok = false else i += Character.charCount(cp)
-      }
-      ok
-    }
 
   /** IpAddr field normalization (`src/schema/ip_options.rs:9-21`): every
     * address indexes as its IPv6 form — IPv4 maps to `::ffff:a.b.c.d`

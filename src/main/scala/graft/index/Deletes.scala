@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
   * Deletes are term/query-driven and batch-applied, exactly the reference's
   * model: a delete materializes the matching `(segId, docId)` addresses into
   * the `deletes` table (the alive-bitset analog,
-  * `src/fastfield/alive_bitset.rs`); every subsequent query anti-joins it
-  * (see `Searcher.compile`). Physical removal happens at merge/compaction
-  * time, not at delete time — same batch-oriented design as the reference
-  * (`ARCHITECTURE.md:31`).
+  * `src/fastfield/alive_bitset.rs`). A Searcher pinned after the delete
+  * reads it once and applies it in its alive views (`Searcher.postings`),
+  * so no query sees a tombstoned doc. Physical removal happens at
+  * merge/compaction time, not at delete time — same batch-oriented design
+  * as the reference (`ARCHITECTURE.md:31`).
   */
 object Deletes {
 

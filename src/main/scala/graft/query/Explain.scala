@@ -188,7 +188,7 @@ object Explain {
   private def termData(sr: Searcher, fld: String, t: String,
                        segId: Int, docId: Int): Option[(Long, Int)] = {
     import sr.spark.implicits._
-    sr.postings
+    sr.allPostings
       .where($"field" === fld && $"term" === t && $"segId" === segId)
       .select(explode(arrays_zip($"docIds", $"tfs", $"normIds")).as("p"))
       .where($"p.docIds" === docId)
@@ -200,7 +200,7 @@ object Explain {
   private def positionsOf(sr: Searcher, fld: String, t: String,
                           segId: Int, docId: Int): Option[Array[Int]] = {
     import sr.spark.implicits._
-    sr.postings
+    sr.allPostings
       .where($"field" === fld && $"term" === t && $"segId" === segId)
       .select(explode(arrays_zip($"docIds", $"positions")).as("p"))
       .where($"p.docIds" === docId)

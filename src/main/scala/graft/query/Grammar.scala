@@ -690,9 +690,17 @@ object Grammar {
         }
       // ip fields range in u128 value order, not canonical-text order
       // (`compute_boundary_term` parses ip bounds into addresses and the
-      // range runs over the u128 fast field, `range_query.rs:71-170`)
+      // range runs over the u128 fast field, `range_query.rs:71-170`); a
+      // bound that is not an address is a parse error there
+      // (`IpAddr::from_str(..)?`, `query_parser.rs:524`) and here
+      def ipBound(fd: String, b: Option[(String, Boolean)]): Option[(String, Boolean)] =
+        norm(fd, b).map { case (v, i) =>
+          if (Analysis.ipv6Key(v).isEmpty)
+            throw new ParseException(s"ip range bound is not an ip address: '$v'", 0)
+          (v, i)
+        }
       def strRange(fd: String): Query =
-        if (chainOf(fd, opts) == "ip") IpRangeQ(norm(fd, loV), norm(fd, hiV))
+        if (chainOf(fd, opts) == "ip") IpRangeQ(ipBound(fd, loV), ipBound(fd, hiV))
         else TermRangeQ(norm(fd, loV), norm(fd, hiV))
       f match {
         case Some(col) if opts.numericFields.contains(col) &&

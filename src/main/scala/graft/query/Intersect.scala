@@ -12,12 +12,9 @@ import graft.score.Bm25
   * (top-k, count) fruits, driver merge (`top_collector.rs:102-122`).
   *
   * This is the fast collector path for pure conjunctions (`+a +b`) and
-  * phrases; the Dataset join pipeline in Searcher remains the composable
-  * path (arbitrary bool trees, doc-set materialization). Chained equi-joins
-  * pay a shuffle barrier per join; at interactive latency the single
-  * grouped shuffle is the difference between ~300 ms and multi-second
-  * queries, and at cluster scale it is one stage regardless of clause
-  * count.
+  * phrases; `Searcher.compile`'s Dataset pipeline remains the composable
+  * path (arbitrary bool trees, doc-set materialization), and shuffles
+  * every exploded posting where this executor shuffles whole blocks.
   */
 object Intersect {
 

@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.score.Bm25
@@ -59,9 +60,79 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * full materialization — fine at test scale, impossible at 10^12 files.
     * termdict (128x smaller than postings) and stats are cached: they serve
     * the per-query df/N lookups, the hot metadata path.
+    *
+    * `allPostings` and `docmap` are the pinned tables as written, tombstoned
+    * docs included: by-address reads (`fetch`, `mltSelect`, `Explain`,
+    * `Engine.addressOf`) use them. Every query reads [[postings]], the alive
+    * view.
     */
-  lazy val postings: DataFrame = pin(segStore.read(spark, "postings"))
+  private[query] lazy val allPostings: DataFrame = pin(segStore.read(spark, "postings"))
   lazy val docmap: DataFrame = pin(segStore.read(spark, "docmap"))
+
+  /** Delete tombstones (`segment.<opstamp>.del` analog): an optional
+    * `(segId, docId)` table, read only by [[deadDocs]]. Compaction happens
+    * on merge, like the reference.
+    */
+  lazy val deletesDf: Option[DataFrame] =
+    if (segStore.exists(spark, "deletes")) Some(pin(segStore.read(spark, "deletes")))
+    else None
+
+  /** Each pinned segment's tombstoned docIds, sorted — the per-segment alive
+    * bitset of `src/fastfield/alive_bitset.rs:20`, read once per Searcher
+    * and broadcast. None when no pinned segment has a tombstone.
+    */
+  private lazy val deadDocs: Option[Broadcast[Map[Int, Array[Int]]]] =
+    deletesDf.flatMap { d =>
+      val dead = d.select($"segId", $"docId").as[(Int, Int)].collect()
+        .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).distinct.sorted }
+      if (dead.isEmpty) None else Some(spark.sparkContext.broadcast(dead))
+    }
+
+  private def aliveUdf(dead: Broadcast[Map[Int, Array[Int]]]) =
+    udf((seg: Int, doc: Int) =>
+      dead.value.get(seg).forall(ds => java.util.Arrays.binarySearch(ds, doc) < 0))
+
+  /** The alive view of the postings, the one place tombstones are applied:
+    * each block row keeps only its live entries of `docIds`/`tfs`/`normIds`/
+    * `positions`, `lastDoc` and `blockLen` are recomputed, and blocks left
+    * empty drop. `maxNormId`/`maxTf` stay the parent block's, still an upper
+    * bound over any subset of it, so every block-max skip and prefilter
+    * stays sound. Each column is its own expression over the scan, so the
+    * (field, term) predicates still push into it and a query that does not
+    * select `positions` does not read it. Only rows whose
+    * [docIds(0), lastDoc] span holds a dead doc are rewritten. On a clean
+    * index this is [[allPostings]] itself.
+    */
+  lazy val postings: DataFrame = deadDocs.fold(allPostings) { dead =>
+    val alive = aliveUdf(dead)
+    val touched = udf { (seg: Int, first: Int, last: Int) =>
+      dead.value.get(seg).exists { ds =>
+        val i = java.util.Arrays.binarySearch(ds, first)
+        val at = if (i >= 0) i else -i - 1
+        at < ds.length && ds(at) <= last
+      }
+    }
+    // input columns by reference: the outputs reuse their names, and a
+    // by-name reference inside a lambda could resolve to an output alias
+    val in = allPostings
+    val hit = touched(in("segId"), in("docIds")(0), in("lastDoc"))
+    def live(c: String): Column =
+      when(hit, filter(in(c), (_, i) => alive(in("segId"), element_at(in("docIds"), i + 1))))
+        .otherwise(in(c))
+    val docIds = live("docIds")
+    in.select(in.columns.toSeq.map {
+      case c @ ("docIds" | "tfs" | "normIds" | "positions") => live(c).as(c)
+      case "lastDoc" => when(hit, array_max(docIds)).otherwise(in("lastDoc")).as("lastDoc")
+      case "blockLen" => size(docIds).as("blockLen")
+      case c => in(c)
+    }: _*).where(size($"docIds") > 0)
+  }
+
+  /** The docmap rows of live docs: what the docmap-driven leaves (AllQ,
+    * RangeQ, ExistsQ) match.
+    */
+  private lazy val liveDocmap: DataFrame =
+    deadDocs.fold(docmap)(dead => docmap.where(aliveUdf(dead)($"segId", $"docId")))
 
   /** termdict is the hot metadata path (per-query df/N lookups), so cache
     * it — but SIZE-AWARE: at 10^12 files the term dictionary is itself
@@ -89,17 +160,6 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   }
   lazy val statsDf: DataFrame =
     pin(segStore.read(spark, "stats")).coalesce(1).cache()
-
-  /** Index-global statistics (`bm25.rs:25-48`): totals summed over segments. */
-  /** Delete tombstones (`segment.<opstamp>.del` analog): an optional
-    * `(segId, docId)` table; matching docs are filtered from every query via
-    * an anti-join — the alive-bitset semantics of
-    * `src/fastfield/alive_bitset.rs` applied at scan time. Compaction
-    * happens on merge, like the reference.
-    */
-  lazy val deletesDf: Option[DataFrame] =
-    if (segStore.exists(spark, "deletes")) Some(pin(segStore.read(spark, "deletes")))
-    else None
 
   /** Per-field index-global (totalNumTokens, numDocs), cached: the manifest
     * snapshot is immutable, so a field's totals never change under this
@@ -244,22 +304,15 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 
   // ---------- query compilation ----------
 
-  /** Compile a query to its matching (segId, docId, score) set, with
-    * deleted docs filtered out (alive-bitset anti-join, applied once at the
-    * top of the tree — delete filtering is idempotent).
+  /** Compile a query to its matching (segId, docId, score) set. Every leaf
+    * reads the alive views ([[postings]], the live docmap rows), so deleted
+    * docs never match.
     */
-  def compile(q: Query): Dataset[ScoredDoc] = deletesDf match {
-    case Some(d) =>
-      compileRaw(q).join(d.select($"segId", $"docId"), Seq("segId", "docId"), "left_anti")
-        .as[ScoredDoc]
-    case None => compileRaw(q)
-  }
-
-  private def compileRaw(q: Query, fld: String = field): Dataset[ScoredDoc] = q match {
+  def compile(q: Query, fld: String = field): Dataset[ScoredDoc] = q match {
     case EmptyQ => spark.emptyDataset[ScoredDoc]
-    case FieldQ(f2, sub) => compileRaw(sub, f2)
+    case FieldQ(f2, sub) => compile(sub, f2)
     case AllQ =>
-      docmap.select($"segId", $"docId", lit(1.0f).as("score")).as[ScoredDoc]
+      liveDocmap.select($"segId", $"docId", lit(1.0f).as("score")).as[ScoredDoc]
     case TermQ(t) =>
       scoredTermDocs(Seq(t), fld).select($"segId", $"docId", $"score").as[ScoredDoc]
     case TermSetQ(ts) => docsForTerms(ts.toSeq.sorted, fld)
@@ -276,25 +329,23 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       // dictionary term is re-keyed to its 128-bit value and compared
       // numerically — a distributed termdict filter like regex/fuzzy, then
       // the same semi-join into the postings scan. Bounds parse once on the
-      // driver; unparseable bounds match nothing (the reference's boundary
-      // computation fails the query the same way).
-      val loK = lo.map { case (v, i) => (graft.analysis.Analysis.ipv6Key(v), i) }
-      val hiK = hi.map { case (v, i) => (graft.analysis.Analysis.ipv6Key(v), i) }
-      if (loK.exists(_._1.isEmpty) || hiK.exists(_._1.isEmpty))
-        spark.emptyDataset[ScoredDoc]
-      else {
-        val loB = loK.map { case (k, i) => (k.get, i) }
-        val hiB = hiK.map { case (k, i) => (k.get, i) }
-        val inRange = udf { t: String =>
-          graft.analysis.Analysis.ipv6Key(t).exists { k =>
-            loB.forall { case (b, incl) =>
-              val c = k.compareTo(b); if (incl) c >= 0 else c > 0 } &&
-            hiB.forall { case (b, incl) =>
-              val c = k.compareTo(b); if (incl) c <= 0 else c < 0 }
-          }
-        }
-        docsForTermsDf(allTermsFor(fld).where(inRange($"term")), fld)
+      // driver; an unparseable bound is an error, as the reference's
+      // boundary computation fails the query (`query_parser.rs:524`).
+      def key(b: Option[(String, Boolean)]) = b.map { case (v, i) =>
+        val k = graft.analysis.Analysis.ipv6Key(v)
+        require(k.isDefined, s"ip range bound is not an ip address: '$v'")
+        (k.get, i)
       }
+      val (loB, hiB) = (key(lo), key(hi))
+      val inRange = udf { t: String =>
+        t != null && graft.analysis.Analysis.ipv6Key(t).exists { k =>
+          loB.forall { case (b, incl) =>
+            val c = k.compareTo(b); if (incl) c >= 0 else c > 0 } &&
+          hiB.forall { case (b, incl) =>
+            val c = k.compareTo(b); if (incl) c <= 0 else c < 0 }
+        }
+      }
+      docsForTermsDf(allTermsFor(fld).where(inRange($"term")), fld)
     case RegexQ(pattern) =>
       // regex over the term dictionary (`regex_query.rs:57`), evaluated
       // DISTRIBUTED over termdict, then semi-joined into the postings scan —
@@ -351,8 +402,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         c
       }
       val df =
-        if (isArr) docmap.where(exists(col(columnName), bounds))
-        else docmap.where(bounds(col(columnName)))
+        if (isArr) liveDocmap.where(exists(col(columnName), bounds))
+        else liveDocmap.where(bounds(col(columnName)))
       df.select($"segId", $"docId", lit(1.0f).as("score")).as[ScoredDoc]
     case ExistsQ(columnName) =>
       // exists on a multivalued fast field = the doc has at least one value
@@ -363,7 +414,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       val pred =
         if (isArr) col(columnName).isNotNull && size(col(columnName)) > 0
         else col(columnName).isNotNull
-      docmap.where(pred)
+      liveDocmap.where(pred)
         .select($"segId", $"docId", lit(1.0f).as("score")).as[ScoredDoc]
     case b: BoostQ => weightedLeaf(b) match {
       // boosted TERM leaves fold the boost into the BM25 weight exactly
@@ -374,15 +425,15 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         scoredTermDocsWeighted(weightsForBoosted(Seq(t -> boost), fld), fld)
           .select($"segId", $"docId", $"score").as[ScoredDoc]
       case None =>
-        compileRaw(b.q, fld).map(s => s.copy(score = s.score * b.boost))
+        compile(b.q, fld).map(s => s.copy(score = s.score * b.boost))
     }
     case ConstScoreQ(sub, c) =>
-      compileRaw(sub, fld).map(s => s.copy(score = c))
+      compile(sub, fld).map(s => s.copy(score = c))
     case DisMaxQ(qs, tie) =>
       // max + tie * (sum of the others), accumulated in clause order
       // (`score_combiner.rs:60-90`)
       val tagged = qs.zipWithIndex.map { case (sub, i) =>
-        compileRaw(sub, fld).map(s => (s.segId, s.docId, i, s.score)) }
+        compile(sub, fld).map(s => (s.segId, s.docId, i, s.score)) }
       val all = tagged.reduceLeft(_ union _)
       all.groupByKey(r => (r._1, r._2)).mapGroups { (key, rows) =>
         val sorted = rows.toArray.sortBy(_._3)
@@ -390,7 +441,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         sorted.foreach { r => sm += r._4; if (r._4 > mx) mx = r._4 }
         ScoredDoc(key._1, key._2, mx + tie * (sm - mx))
       }
-    case m: MoreLikeThisQ => compileRaw(mltDisjunction(m, fld), fld)
+    case m: MoreLikeThisQ => compile(mltDisjunction(m, fld), fld)
     case p: PhraseQ => compilePhrase(p, fld)
     case rp: RegexPhraseQ =>
       // per-position regex expansion against the term dictionary
@@ -517,10 +568,10 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       .take(maxTerms + 1)
   }
 
-  /** Shared executor for phrase queries whose slots are TERM SETS (regex
-    * phrase, phrase prefix), scored: BM25 with tf = the slot-phrase count
-    * when `weight` is set (`phrase_scorer.rs:551-556` over union postings),
-    * otherwise const 1.0.
+  /** Shared executor for phrase queries, whose slots are TERM SETS (regex
+    * phrase, phrase prefix) or single terms (phrase), scored: BM25 with tf =
+    * the slot-phrase count when `weight` is set (`phrase_scorer.rs:551-556`
+    * over union postings), otherwise const 1.0.
     */
   private def slotPhraseDocs(slotTerms: Seq[Seq[String]], offsets: Array[Int],
                              slop: Int, fld: String,
@@ -609,7 +660,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** Boolean combination (`boolean_weight.rs:101-257`): doc matches iff all
     * Musts match, no MustNot matches, and — when there is no Must — at least
     * `minShouldMatch` Shoulds match. Score = sum of matching positive clause
-    * scores in clause order (`SumCombiner`, `score_combiner.rs:39`).
+    * scores in clause order (`SumCombiner`, `score_combiner.rs:39`), the
+    * same f32 additions as the leapfrog executor's.
     * All-TermQ positive clauses collapse into ONE postings scan (isin over
     * the term list — single pruned scan instead of one per clause).
     */
@@ -635,43 +687,13 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       val ts = leafOpts.flatten
       ts.groupBy(_._1).values.forall(g => g.map(_._2).distinct.length == 1)
     }
-    lazy val leafBoosts: Seq[(String, Float)] = leafOpts.flatten.distinct
-
-    // Pure conjunction of terms -> cost-ordered intersection
-    // (`intersection.rs:26,81`): chained equi-joins rarest-term-first, so
-    // docs missing the rarest term are dropped before any wide shuffle.
-    // Score = sum of clause scores in clause order (`score_combiner.rs:39`).
-    if (allTermLeaves && numMusts == positives.length) {
-      val clauseTerms = leafOpts.flatten.map(_._1)
-      val dfs = docFreqs(clauseTerms.distinct, fld)
-      if (clauseTerms.distinct.exists(t => !dfs.contains(t)))
-        return spark.emptyDataset[ScoredDoc]
-      val boosted = weightsForBoosted(leafBoosts, fld)
-      val ordered = clauseTerms.distinct.sortBy(t => (dfs(t), t))
-      def frame(t: String, i: Int): DataFrame =
-        scoredTermDocsWeighted(Map(t -> boosted(t)), fld)
-          .select($"segId", $"docId", $"score".as(s"sc$i"))
-      var joined = frame(ordered.head, 0)
-      for ((t, i) <- ordered.tail.zipWithIndex)
-        joined = joined.join(frame(t, i + 1), Seq("segId", "docId"))
-      val scIdx: Map[String, Int] = ordered.zipWithIndex.toMap
-      val sumCol = clauseTerms.map(t => col(s"sc${scIdx(t)}")).reduceLeft(_ + _)
-      val positive = joined
-        .select($"segId", $"docId", sumCol.as("score")).as[ScoredDoc]
-      return (if (negatives.isEmpty) positive
-      else {
-        val neg = negatives.map(q => compileRaw(q, fld)).reduceLeft(_ union _)
-          .select($"segId", $"docId").distinct()
-        positive.join(neg, Seq("segId", "docId"), "left_anti").as[ScoredDoc]
-      })
-    }
 
     val tagged: Dataset[(Int, Int, Int, Boolean, Float)] =
       if (allTermLeaves) {
         val metas = positives.zipWithIndex.map { case ((occ, q), i) =>
           (weightedLeaf(q).get._1, i, occ == Occur.Must) }
         val byTerm = metas.groupBy(_._1)
-        val scored = scoredTermDocsWeighted(weightsForBoosted(leafBoosts, fld), fld)
+        val scored = scoredTermDocsWeighted(weightsForBoosted(leafOpts.flatten.distinct, fld), fld)
         scored.select($"segId", $"docId", $"term", $"score")
           .as[(Int, Int, String, Float)]
           .flatMap { case (seg, doc, term, sc) =>
@@ -680,7 +702,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       } else {
         positives.zipWithIndex.map { case ((occ, sub), i) =>
           val isMust = occ == Occur.Must
-          compileRaw(sub, fld).map(s => (s.segId, s.docId, i, isMust, s.score))
+          compile(sub, fld).map(s => (s.segId, s.docId, i, isMust, s.score))
         }.reduceLeft(_ union _)
       }
 
@@ -694,7 +716,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 
     if (negatives.isEmpty) combined
     else {
-      val neg = negatives.map(q => compileRaw(q, fld)).reduceLeft(_ union _)
+      val neg = negatives.map(q => compile(q, fld)).reduceLeft(_ union _)
         .select($"segId", $"docId").distinct()
       combined.join(neg, Seq("segId", "docId"), "left_anti").as[ScoredDoc]
     }
@@ -703,14 +725,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** Phrase matching (`phrase_query.rs`, `phrase_scorer.rs:82-143`): docs
     * containing all terms with positions satisfying the relative offsets
     * (slop 0 = exact adjacency); phrase occurrence count is the tf fed to the
-    * multi-term BM25 weight (summed idf, `bm25.rs:115-123`).
-    *
-    * Execution is INTERSECTION-FIRST like the reference's positions-aware
-    * Intersection scorer (`intersection.rs:26,81` cost-sorts so the rarest
-    * term drives): one pruned scan per distinct term, chained inner joins on
-    * (segId, docId) in ascending-docFreq order, positions evaluated only for
-    * docs in the full intersection — a doc containing just the hot term of a
-    * phrase never ships its positions anywhere.
+    * multi-term BM25 weight (summed idf, `bm25.rs:115-123`). Runs as the
+    * slot-phrase pass with one term per slot.
     */
   private def compilePhrase(p: PhraseQ, fld: String = field): Dataset[ScoredDoc] = {
     // the reference errors when positions were not indexed
@@ -721,35 +737,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     val dfs = docFreqs(terms.distinct, fld)
     if (terms.distinct.exists(t => !dfs.contains(t))) return spark.emptyDataset[ScoredDoc]
     val weight = Bm25.forTerms(terms.map(dfs), fieldStats(fld)._2, avgFieldnormFor(fld))
-    val offsets = p.terms.map(_._1).toArray
-    val slop = p.slop
-
-    val ordered = terms.distinct.sortBy(t => (dfs(t), t))
-    def frame(t: String, i: Int): DataFrame = {
-      val base = postings
-        .where($"field" === fld && $"term" === t)
-        .select($"segId",
-          explode(arrays_zip($"docIds", $"normIds", $"positions")).as("p"))
-      if (i == 0)
-        base.select($"segId", $"p.docIds".as("docId"),
-          $"p.normIds".as("normId"), $"p.positions".as(s"pos$i"))
-      else
-        base.select($"segId", $"p.docIds".as("docId"), $"p.positions".as(s"pos$i"))
-    }
-    var joined = frame(ordered.head, 0)
-    for ((t, i) <- ordered.tail.zipWithIndex)
-      joined = joined.join(frame(t, i + 1), Seq("segId", "docId"))
-
-    val posIdx: Map[String, Int] = ordered.zipWithIndex.toMap
-    val slotCols = p.terms.map { case (_, t) => col(s"pos${posIdx(t)}") }
-    val countU = udf((slots: Seq[Seq[Int]]) =>
-      PhraseMatcher.phraseCount(offsets, slots.map(_.toArray).toArray, slop))
-    val scoreU = udf((normId: Int, cnt: Int) => weight.score(normId, cnt.toLong))
-    joined
-      .withColumn("cnt", countU(array(slotCols: _*)))
-      .where($"cnt" > 0)
-      .select($"segId", $"docId", scoreU($"normId", $"cnt").as("score"))
-      .as[ScoredDoc]
+    slotPhraseDocs(terms.map(Seq(_)), p.terms.map(_._1).toArray, p.slop, fld, weight = Some(weight))
   }
 
   // ---------- collectors ----------
@@ -810,30 +798,38 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 
   /** Decide, once per query, which executor the collectors run — the
     * reference's one eligibility test before `block_wand`
-    * (`boolean_weight.rs:56-76`). The specialized executors read postings
-    * directly, so with tombstones pinned every query takes the generic
-    * route, whose `compile` applies the alive-bitset anti-join.
+    * (`boolean_weight.rs:56-76`). Every executor reads the alive
+    * [[postings]] view, so tombstones do not change the route.
     */
-  private def route(q0: Query): Searcher.Route = {
-    val q = rewriteForCollect(q0)
-    if (deletesDf.isDefined) Generic(q)
-    else q match {
+  private def route(q0: Query): Searcher.Route =
+    rewriteForCollect(q0) match {
       case p: PhraseQ => Phrase(p)
-      case _ =>
+      case q =>
         pureMustTerms(q).map[Searcher.Route](MustTerms)
           .orElse(pureShouldWeighted(q).map(ShouldTerms))
           .getOrElse(Generic(q))
     }
-  }
+
+  /** A term's hit count without scoring — the term dictionary's doc_freq,
+    * no postings read (the reference's specialized term count reads the
+    * same TermInfo). doc_freq counts tombstoned docs until merge, so with
+    * deletes pinned the term's postings in the alive view are counted.
+    */
+  def termHitCount(t: String): Long =
+    if (deadDocs.isEmpty) docFreqs(Seq(t)).getOrElse(t, 0L)
+    else postings.where($"field" === field && $"term" === t)
+      .agg(coalesce(sum(size($"docIds")), lit(0L))).as[Long].head()
 
   /** TopDocs collector (`top_collector.rs:45-61,102-122`): global top-k by
     * (score desc, segId asc, docId asc), offset skipped after the merge.
     * Pure conjunctions and phrases route through the per-segment leapfrog
     * executor (`Intersect`), weighted pure disjunctions (incl. expanded
     * MoreLikeThis) through the block-max WAND executor, everything else
-    * through the Dataset pipeline.
+    * through the Dataset pipeline. k must be at least 1, as the reference's
+    * `TopDocs::with_limit` requires.
     */
   def topDocs(q: Query, k: Int, offset: Int = 0): Array[Hit] = {
+    require(k >= 1, s"top-k limit must be at least 1, got $k")
     val hits = route(q) match {
       case Phrase(p) => Intersect.topKPhrase(this, p, k + offset)._1
       case MustTerms(ts) => Intersect.topKMust(this, ts, k + offset)._1
@@ -852,10 +848,9 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     route(q) match {
       case Phrase(p) => Intersect.topKPhrase(this, p, 1)._2
       case MustTerms(ts) => Intersect.topKMust(this, ts, 1)._2
-      // one term's hit count IS its doc_freq (boosts change scores, not
-      // matches) — the term dictionary answers without touching postings
-      // (the reference's specialized term count reads the same TermInfo)
-      case ShouldTerms(Seq((t, _))) => docFreqs(Seq(t)).getOrElse(t, 0L)
+      // one term's hit count needs no scoring (boosts change scores, not
+      // matches)
+      case ShouldTerms(Seq((t, _))) => termHitCount(t)
       case ShouldTerms(tbs) => Wand.topK(this, tbs, 1, withCount = true)._2
       case Generic(g) => compile(g).count()
     }
@@ -867,9 +862,10 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * collector needs every match, so the pruned (WAND) path is off; each
     * partition folds its matches into a bounded k-heap plus a counter
     * (SegmentCollector), and the driver merges fruits
-    * (`top_collector.rs:102-122`).
+    * (`top_collector.rs:102-122`). k must be at least 1.
     */
   def topDocsWithCount(q: Query, k: Int): (Array[Hit], Long) = {
+    require(k >= 1, s"top-k limit must be at least 1, got $k")
     route(q) match {
       case Phrase(p) => Intersect.topKPhrase(this, p, k)
       case MustTerms(ts) => Intersect.topKMust(this, ts, k)

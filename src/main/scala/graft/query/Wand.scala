@@ -94,6 +94,7 @@ object Wand {
     * segment in any order through [[offer]].
     */
   final class TopK(k: Int, segId: Int = 0) {
+    require(k >= 1, s"top-k limit must be at least 1, got $k")
     // head = the worst kept hit: lowest score, then the largest address
     private val heap = scala.collection.mutable.PriorityQueue.empty[Hit](
       Ordering.by((h: Hit) => (-h.score, h.segId, h.docId)))
@@ -274,8 +275,9 @@ object Wand {
     * one term sum that term's score twice (`SumCombiner`), which one weight
     * per term cannot express.
     *
-    * This reads postings directly and does NOT filter tombstones; the
-    * `Searcher` collectors call it only when no deletes are pinned.
+    * It reads the `Searcher`'s alive postings view, so tombstoned docs
+    * never score; block-max bounds stay the parent blocks', which remain
+    * upper bounds over the live entries.
     */
   def topK(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
            withCount: Boolean = false, probeCutoff: Long = 20000000L,
@@ -283,15 +285,16 @@ object Wand {
     val terms = termBoosts.map(_._1)
     require(terms.distinct.length == terms.length,
       s"duplicate terms in a WAND disjunction: ${terms.diff(terms.distinct).distinct.mkString(", ")}")
+    require(k >= 1, s"top-k limit must be at least 1, got $k")
     val weights = searcher.weightsForBoosted(termBoosts)
     val present = terms.filter(weights.contains).sorted
     val noCount = if (withCount) 0L else -1L
-    if (present.isEmpty || k <= 0) return (Array.empty, noCount)
+    if (present.isEmpty) return (Array.empty, noCount)
     if (present.length == 1) {
-      // union of one term: the count IS its global doc_freq (termdict lookup,
-      // no postings touched); hits via the zero-shuffle single-term path
+      // union of one term: the count is that term's hit count (a termdict
+      // lookup on a clean index); hits via the zero-shuffle single-term path
       val t = present.head
-      val cnt = if (withCount) searcher.docFreqs(present).getOrElse(t, 0L) else noCount
+      val cnt = if (withCount) searcher.termHitCount(t) else noCount
       return (singleTerm(searcher, t, weights(t), k), cnt)
     }
     // TOP_10_COUNT in ONE pass: the count collector must see every match, so

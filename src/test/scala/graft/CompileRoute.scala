@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions.{asc, desc}
 import graft.query.{Hit, Query, ScoredDoc, Searcher}
 
-/** The unpruned reference answers: `Searcher.compile` (which applies the
-  * tombstone anti-join) + a global sort by (score desc, segId asc, docId asc).
+/** The unpruned reference answers: `Searcher.compile` (which reads the
+  * alive views, so tombstoned docs never match) + a global sort by (score
+  * desc, segId asc, docId asc).
   * The collectors route eligible shapes to the WAND and leapfrog executors,
   * so a parity test compares those executors against this route, never
   * against `topDocs` of the same shape.

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.bench.CorpusGen
 import graft.index.{Deletes, IndexBuilder, IndexConfig, Manifest}
-import graft.query.{BoolQ, Occur, PhraseQ, Query, Searcher, TermQ, Wand}
+import graft.query.{BoolQ, Hit, Intersect, Occur, PhraseQ, Query, SegmentCollect, Searcher, TermQ, TermSetQ, Wand}
 import graft.streaming.StreamIngest
 
 /** Delete tombstones + streaming (micro-batch) ingestion. */
@@ -75,6 +75,89 @@ class DeleteStreamSpec extends AnyFunSuite {
 
     // delete is idempotent: re-deleting matches nothing (already dead)
     assert(Deletes.deleteByTerm(spark, dir, "error") == 0)
+  }
+
+  test("alive view: a wholly dead block and a dead lastDoc, every executor == the compile route") {
+    import spark.implicits._
+    val dir = tmpDir("delview")
+    val rng = new scala.util.Random(11)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon")
+    // each doc carries its own id token, so a delete can name exact docs
+    val docs = (0 until 600).map { i =>
+      val words = (0 until 12).map(_ => vocab(rng.nextInt(vocab.length))) ++
+        (if (i % 13 == 0) Seq("rareterm") else Nil) :+ f"id$i%04d"
+      ("r", f"p$i%04d", "c", "en", words.mkString(" "))
+    }.toDF("repo", "path", "commit", "lang", "content")
+    IndexBuilder.build(spark, docs, dir, IndexConfig(numSegments = 2, withPositions = true))
+    val clean = new Searcher(spark, dir)
+    // (segId, blockId, lastDoc, blockLen, docIds) of alpha's blocks
+    def blocks(sr: Searcher): Array[(Int, Int, Int, Int, Array[Int])] =
+      sr.postings.where($"field" === "content" && $"term" === "alpha")
+        .select($"segId", $"blockId", $"lastDoc", $"blockLen", $"docIds")
+        .as[(Int, Int, Int, Int, Array[Int])].collect().sortBy(b => (b._1, b._2))
+    val full = blocks(clean).filter(_._4 == 128)
+    assert(full.length >= 2, "alpha needs two full blocks")
+    // tombstones: every doc of one block, and the lastDoc of another
+    val (dead, cut) = (full(1), full(0))
+    val victims = dead._5.map(d => (dead._1, d)).toSet + ((cut._1, cut._3))
+    val ids = clean.docmap.select($"segId", $"docId", $"path").as[(Int, Int, String)]
+      .collect().collect { case (s, d, p) if victims((s, d)) => "id" + p.drop(1) }
+    assert(Deletes.deleteByQuery(spark, dir, TermSetQ(ids.toSet)) == victims.size)
+    val sr = new Searcher(spark, dir)
+
+    // the view: the dead block drops, the cut block loses its lastDoc
+    val live = blocks(sr)
+    assert(!live.exists(b => (b._1, b._2) == (dead._1, dead._2)), "wholly dead block kept")
+    val after = live.find(b => (b._1, b._2) == (cut._1, cut._2)).get
+    assert(after._5.toSeq == cut._5.init.toSeq && after._3 == cut._5.init.last &&
+      after._4 == 127, "cut block not recomputed")
+    // a single term's count is its live postings, not its doc_freq
+    val alphaPostings = blocks(clean).map(_._4).sum
+    assert(sr.docFreqs(Seq("alpha"))("alpha") == alphaPostings)
+    assert(sr.count(TermQ("alpha")) == alphaPostings - victims.size)
+    assert(sr.topDocsWithCount(TermQ("alpha"), 5)._2 == alphaPostings - victims.size)
+
+    // a WAND scan on the tombstoned index still prunes on (field, term)
+    // and does not read positions
+    val scan = SegmentCollect.scan(sr, Seq("alpha", "beta"), positions = false)
+      .queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f }.head
+    assert(scan.metadata("PushedFilters").contains("EqualTo(field,content)") &&
+      scan.metadata("PushedFilters").contains("In(term, [alpha,beta])"), scan.metadata("PushedFilters"))
+    assert(!scan.requiredSchema.fieldNames.contains("positions"))
+
+    val k = 50
+    def key(hs: Array[Hit]): Seq[(Int, Int, Float)] = hs.toSeq.map(h => (h.segId, h.docId, h.score))
+    val widths = Seq(Wand.DefaultChunkDocs, 64, 1)
+    def check(name: String, q: Query)(run: Int => (Array[Hit], Long)): Unit = {
+      val want = key(CompileRoute.topK(sr, q, k))
+      val wantCount = sr.compile(q).count()
+      assert(clean.topDocs(q, k).exists(h => victims((h.segId, h.docId))),
+        s"$name: the clean top-k must hold a tombstoned doc")
+      assert(key(sr.topDocs(q, k)) == want, s"$name topDocs")
+      val (hits, cnt) = sr.topDocsWithCount(q, k)
+      assert(key(hits) == want && cnt == wantCount, s"$name topDocsWithCount")
+      assert(sr.count(q) == wantCount, s"$name count")
+      for (w <- widths) {
+        val (h, c) = run(w)
+        assert(key(h) == want && c == wantCount, s"$name at chunk width $w")
+      }
+    }
+    // two terms: an f32 sum of two scores is the same in either order, so
+    // WAND's scorer-order sum equals the compile route's clause-order sum
+    val terms = Seq("alpha", "gamma")
+    val disj = BoolQ(terms.map(t => Occur.Should -> TermQ(t)))
+    check("disjunction", disj)(w => Wand.topK(sr, terms.map(_ -> 1.0f), k, withCount = true, chunkDocs = w))
+    // the τ prefilter is armed only without the count
+    for (w <- widths)
+      assert(key(Wand.topK(sr, terms.map(_ -> 1.0f), k, probeCutoff = 0L, chunkDocs = w)._1) ==
+        key(CompileRoute.topK(sr, disj, k)), s"WAND with the τ prefilter at chunk width $w")
+    // similar dfs: plain shuffle; rareterm (df ~47 vs ~560): rare-term broadcast
+    for (ts <- Seq(Seq("alpha", "beta"), Seq("alpha", "rareterm")))
+      check(ts.mkString("+"), BoolQ(ts.map(t => Occur.Must -> TermQ(t))))(
+        w => Intersect.topKMust(sr, ts, k, chunkDocs = w))
+    val phrase = PhraseQ.of("alpha", "beta")
+    check("phrase", phrase)(w => Intersect.topKPhrase(sr, phrase, k, chunkDocs = w))
   }
 
   test("merge compacts deletes: dead docs physically dropped, results unchanged") {

@@ -152,6 +152,25 @@ class EngineE2ESpec extends AnyFunSuite {
     assert(searcher.topDocsWithCount(q, 10)._2 == naive.count(q))
   }
 
+  test("k = 0 is rejected on every route") {
+    // the reference's `TopDocs::with_limit` rejects a limit of 0; every
+    // route fails the same way, before any Spark job
+    val d = naive.docs.find(_.tokens.length >= 2).get
+    val routes: Seq[(String, Query)] = Seq(
+      "phrase" -> PhraseQ.of(d.tokens(0), d.tokens(1)),
+      "conjunction" -> BoolQ(Seq(Occur.Must -> TermQ(hotTerm), Occur.Must -> TermQ(midTerm))),
+      "disjunction" -> BoolQ(Seq(Occur.Should -> TermQ(hotTerm), Occur.Should -> TermQ(midTerm))),
+      "term" -> TermQ(hotTerm),
+      "generic" -> BoolQ(Seq(Occur.Must -> TermQ(hotTerm), Occur.MustNot -> TermQ(tailTerm))))
+    for ((name, q) <- routes) {
+      intercept[IllegalArgumentException](searcher.topDocs(q, 0))
+      intercept[IllegalArgumentException](searcher.topDocsWithCount(q, 0))
+      assert(searcher.topDocsWithCount(q, 1)._2 == searcher.count(q), name)
+    }
+    intercept[IllegalArgumentException](Wand.topK(searcher, Seq(hotTerm -> 1.0f), 0))
+    intercept[IllegalArgumentException](new Wand.TopK(0))
+  }
+
   test("conjunction (Must+Must) == naive") {
     val q = BoolQ(Seq(Occur.Must -> TermQ(hotTerm), Occur.Must -> TermQ(midTerm)))
     assertSame(searcher.topDocs(q, 10).toSeq, naive.topDocs(q, 10), "conj")

@@ -58,12 +58,26 @@ class IpRangeSpec extends AnyFunSuite {
       Set("p11"))
   }
 
-  test("const score 1.0, null field unmatched, unparseable bound matches nothing") {
+  test("const score 1.0, null field unmatched, unparseable bound is an error") {
     val scores = sr.compile(FieldQ("ipaddr",
       IpRangeQ(None, None))).collect().map(_.score).toSet
     assert(scores == Set(1.0f))
     assert(!paths(FieldQ("ipaddr", IpRangeQ(None, None))).contains("pnone"))
-    assert(paths(FieldQ("ipaddr", IpRangeQ(Some(("zzz", true)), None))).isEmpty)
+    // the reference fails the query (`IpAddr::from_str(..)?`,
+    // `query_parser.rs:524`) instead of matching nothing
+    intercept[IllegalArgumentException](
+      paths(FieldQ("ipaddr", IpRangeQ(Some(("zzz", true)), None))))
+    intercept[IllegalArgumentException](
+      paths(FieldQ("ipaddr", IpRangeQ(None, Some(("2001:db8::zz", false))))))
+  }
+
+  test("parsed: an ip-chain range bound that is not an address is a parse error") {
+    val opts = Grammar.CompileOpts(fieldTokenizers =
+      Map("content" -> "default", "ipaddr" -> "ip"))
+    intercept[Grammar.ParseException](QueryParser.parse("ipaddr:[zzz TO 2001:db8::10]", opts = opts))
+    intercept[Grammar.ParseException](QueryParser.parse("ipaddr:[2001:db8::9 TO 300.1.1.1}", opts = opts))
+    // an open bound stays open
+    assert(paths(QueryParser.parse("ipaddr:[* TO 2001:db8::9]", opts = opts)) == Set("p9", "pv4"))
   }
 
   test("parsed end-to-end: ipaddr:[2001:0db8::0009 TO 2001:db8::10} via the ip chain") {
