@@ -487,6 +487,6 @@ object Bench {
       .map { case (k, v) => f""""$k":$v%.4f""" }.mkString("{", ",", "}")
     val elapsed = (System.nanoTime() - benchStart) / 1e9
     println(
-      f"""{"metric":"headline query set (sec) + build scaling","value":$total%.4f,"unit":"sec","queries":$qjson,"sf":"$sfDir","cpus_low":$cpusLo,"cpus_high":$cpusHi,"scaling_protocol":"${if (childMode) s"local-cluster[N,1core,4g] x {$cpusLo,$cpusHi} executor JVMs via spark-submit" else s"local[N] threads, shared JVM"}","build_files_per_sec_n":$fpsLo%.1f,"build_files_per_sec_4n":$fpsHi%.1f,"scaling_efficiency":$efficiency%.3f,"converged":$converged,"scaling_reps":$scalingReps,"lo_samples":$loSamplesJson,"hi_samples":$hiSamplesJson,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsed%.0f,"p50_query_ms":$p50%.1f,"p95_query_ms":$p95%.1f,"qs_p50_ms":$qsP50%.1f,"qs_p95_ms":$qsP95%.1f,"qs_n":$qsN,"qs_docs":$qsDocs,"bench_docs":$nDocs,"query_dispersion":$qdisp,"ann_lsh_recall_at_20":$lshRecall%.2f,"ann_ivf_recall_at_20":$ivfRecall%.2f,"ann_ivf_frac_scanned":$ivfFracScanned%.3f}""")
+      f"""{"metric":"headline query set (sec) + build scaling","value":$total%.4f,"unit":"sec","queries":$qjson,"sf":"$sfDir","cpus_low":$cpusLo,"cpus_high":$cpusHi,"nproc":${Runtime.getRuntime.availableProcessors},"scaling_protocol":"${if (childMode) s"local-cluster[N,1core,4g] x {$cpusLo,$cpusHi} executor JVMs via spark-submit" else s"local[N] threads, shared JVM"}","build_files_per_sec_n":$fpsLo%.1f,"build_files_per_sec_4n":$fpsHi%.1f,"scaling_efficiency":$efficiency%.3f,"converged":$converged,"scaling_reps":$scalingReps,"lo_samples":$loSamplesJson,"hi_samples":$hiSamplesJson,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsed%.0f,"p50_query_ms":$p50%.1f,"p95_query_ms":$p95%.1f,"qs_p50_ms":$qsP50%.1f,"qs_p95_ms":$qsP95%.1f,"qs_n":$qsN,"qs_docs":$qsDocs,"bench_docs":$nDocs,"query_dispersion":$qdisp,"ann_lsh_recall_at_20":$lshRecall%.2f,"ann_ivf_recall_at_20":$ivfRecall%.2f,"ann_ivf_frac_scanned":$ivfFracScanned%.3f}""")
   }
 }

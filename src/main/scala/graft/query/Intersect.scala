@@ -6,9 +6,10 @@ import graft.score.Bm25
   * `Intersection` scorer (`src/query/intersection.rs:15-120`: docsets sorted
   * by cost, smallest drives, others gallop to the candidate) and its
   * positions-aware phrase variant (`phrase_scorer.rs:46-420`), run as
-  * kernels on the same [[SegmentCollect]] stage as the WAND executor: ONE
-  * narrow shuffle of the query terms' posting blocks grouped by (segment,
-  * docId chunk), a local in-memory leapfrog per group task, per-group
+  * kernels on the same [[SegmentCollect]] stage as the WAND executor: the
+  * query terms' posting blocks per (segment, docId chunk) group — from the
+  * Searcher's resident copy, or on the scan path through ONE narrow
+  * shuffle — a local in-memory leapfrog per group task, per-group
   * (top-k, count) fruits, driver merge (`top_collector.rs:102-122`).
   *
   * This is the fast collector path for pure conjunctions (`+a +b`) and
@@ -31,9 +32,13 @@ object Intersect {
     val empty = new TermPostings(Array.emptyIntArray, Array.emptyIntArray,
       Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
 
-    /** Concatenate one term's blocks, given in blockId order. */
-    def of(blocks: Array[SegmentCollect.BlockRow]): TermPostings = {
+    /** Concatenate one term's blocks, given in blockId order; positions
+      * only when `positions` (the blocks may carry them unasked).
+      */
+    def of(blocks: Array[SegmentCollect.BlockRow], positions: Boolean): TermPostings = {
       def cat(f: SegmentCollect.BlockRow => Array[Int]) = Array.concat(blocks.map(f): _*)
+      if (!positions) return new TermPostings(cat(_.docIds), cat(_.tfs), cat(_.normIds),
+        Array.emptyIntArray, Array.emptyIntArray)
       val lens = cat(_.posLens)
       val offsets = new Array[Int](lens.length + 1)
       var i = 0
@@ -83,50 +88,56 @@ object Intersect {
 
   /** Run `kernel(segId, lists)` on the [[SegmentCollect]] stage, `lists`
     * holding each term of `ordered` (rarest first) for one (segment, chunk)
-    * group, and merge the fruits into the top `k` and the count.
+    * group, and merge the fruits into the top `k` and the count: over the
+    * Searcher's resident copy when it has one, else on the scan path.
     *
-    * When the rarest term is small and the others are not, the rarest list
-    * rides a BROADCAST and only blocks of the other terms whose
-    * [firstDoc, lastDoc] span contains one of its docIds are shuffled — the
-    * distributed analog of the cost-ordered leapfrog (`intersection.rs:26,81`:
-    * smallest docset drives, the rest seek to its candidates): a block the
-    * driving list can never visit is dropped map-side before the shuffle. The
-    * intersection is a subset of the rare term's docs, so pruning loses no
-    * matches; the leapfrog's forward-only galloping stays correct over the
-    * gapped lists because it only ever probes for the driver's docIds. The
-    * rare list rides WHOLE into every chunk task of its segment; the leapfrog
-    * drives on it and only probes the chunk's other-term slices, so each
-    * doc is found exactly once (in its own chunk). Segments where no
-    * other-term block survived hold no intersection docs.
+    * On the scan path, when the rarest term is small and the others are
+    * not, the rarest list rides a BROADCAST and only blocks of the other
+    * terms whose [firstDoc, lastDoc] span contains one of its docIds are
+    * shuffled — the distributed analog of the cost-ordered leapfrog
+    * (`intersection.rs:26,81`: smallest docset drives, the rest seek to its
+    * candidates): a block the driving list can never visit is dropped
+    * map-side before the shuffle. The intersection is a subset of the rare
+    * term's docs, so pruning loses no matches; the leapfrog's forward-only
+    * galloping stays correct over the gapped lists because it only ever
+    * probes for the driver's docIds. The rare list rides WHOLE into every
+    * chunk task of its segment; the leapfrog drives on it and only probes
+    * the chunk's other-term slices, so each doc is found exactly once (in
+    * its own chunk). Segments where no other-term block survived hold no
+    * intersection docs. The resident path has no shuffle to shrink, so it
+    * runs no broadcast.
     */
   private def run(searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
                   positions: Boolean, chunkDocs: Int, k: Int)
                  (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit = {
     def lists(byTerm: Map[String, Array[SegmentCollect.BlockRow]], terms: Seq[String]) =
-      terms.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of)).toArray
-    val rare = ordered.head
-    val useBc = ordered.length > 1 && dfs(rare) <= RARE_BROADCAST_MAX_DF &&
-      ordered.tail.map(dfs).sum > 4 * dfs(rare)
-    if (!useBc)
-      SegmentCollect.collect(SegmentCollect.scan(searcher, ordered, positions), chunkDocs, k) {
-        (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }
-    else {
-      val rareB = searcher.spark.sparkContext.broadcast(
-        SegmentCollect.bySegment(SegmentCollect.scan(searcher, Seq(rare), positions)
-          .collect().iterator).map { case (s, byTerm) => s -> TermPostings.of(byTerm(rare)) }.toMap)
-      val rest = ordered.tail
-      val pruned = SegmentCollect.scan(searcher, rest, positions).filter { r =>
-        rareB.value.get(r.segId) match {
-          case None => false // rare term absent in segment: empty intersection
-          case Some(tp) =>
-            val docs = tp.docIds
-            val p = java.util.Arrays.binarySearch(docs, r.docIds(0))
-            val ins = if (p >= 0) p else -p - 1
-            ins < docs.length && docs(ins) <= r.lastDoc
+      terms.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of(_, positions))).toArray
+    SegmentCollect.collectResident(searcher, ordered, k) {
+      (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }.getOrElse {
+      val rare = ordered.head
+      val useBc = ordered.length > 1 && dfs(rare) <= RARE_BROADCAST_MAX_DF &&
+        ordered.tail.map(dfs).sum > 4 * dfs(rare)
+      if (!useBc)
+        SegmentCollect.collect(SegmentCollect.scan(searcher, ordered, positions), chunkDocs, k) {
+          (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }
+      else {
+        val rareB = searcher.spark.sparkContext.broadcast(
+          SegmentCollect.bySegment(SegmentCollect.scan(searcher, Seq(rare), positions)
+            .collect().iterator).map { case (s, byTerm) => s -> TermPostings.of(byTerm(rare), positions) }.toMap)
+        val rest = ordered.tail
+        val pruned = SegmentCollect.scan(searcher, rest, positions).filter { r =>
+          rareB.value.get(r.segId) match {
+            case None => false // rare term absent in segment: empty intersection
+            case Some(tp) =>
+              val docs = tp.docIds
+              val p = java.util.Arrays.binarySearch(docs, r.docIds(0))
+              val ins = if (p >= 0) p else -p - 1
+              ins < docs.length && docs(ins) <= r.lastDoc
+          }
         }
+        SegmentCollect.collect(pruned, chunkDocs, k) { (segId, byTerm) =>
+          kernel(segId, rareB.value(segId) +: lists(byTerm, rest)) }
       }
-      SegmentCollect.collect(pruned, chunkDocs, k) { (segId, byTerm) =>
-        kernel(segId, rareB.value(segId) +: lists(byTerm, rest)) }
     }
   }
 

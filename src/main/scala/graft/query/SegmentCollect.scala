@@ -1,21 +1,34 @@
 package graft.query
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The one segment collect-and-merge stage the top-k executors share — the
   * reference's collector contract, `collect_segment` per segment then
   * `merge_fruits` on the driver (`collector/mod.rs:165-204`,
-  * `top_collector.rs:102-122`):
+  * `top_collector.rs:102-122`). A kernel maps one (segId, docId chunk)
+  * group's query-term blocks to a (top-k hits, count) fruit, and [[merge]]
+  * folds the fruits. The groups reach the kernel on one of two paths:
   *
-  *  1. [[scan]]: one pruned Parquet scan of the query terms' blocks (row
-  *     groups pruned on the (field, term) predicate). Callers may filter the
-  *     block rows here, before slicing (WAND's τ block prefilter,
-  *     Intersect's rare-term broadcast filter).
-  *  1. [[slice]]: cut blocks into docId-range chunks of `chunkDocs` docs.
-  *  1. [[collect]]: one shuffle keyed (segId, chunk); each group hands a
-  *     kernel every term's blocks in blockId order, the kernel returns a
-  *     (top-k hits, count) fruit, and [[merge]] folds the fruits.
+  *  - **Resident** ([[collectResident]]): the Searcher's resident copy of
+  *    its field's alive postings ([[buildResident]]), one cached partition
+  *    per (segId, chunk) holding every term's blocks. A query runs its
+  *    kernel map-side over the cached partitions: one RDD job, no Dataset
+  *    plan, no shuffle — the reference's per-segment collector over an
+  *    already open index (`searcher.rs:220`). The Searcher builds the copy
+  *    on its first collector query when it fits in memory (its gate).
+  *  - **Scan**, when there is no copy:
+  *     1. [[scan]]: one pruned Parquet scan of the query terms' blocks (row
+  *        groups pruned on the (field, term) predicate). Callers may filter
+  *        the block rows here, before slicing (WAND's τ block prefilter,
+  *        Intersect's rare-term broadcast filter); both exist only to shrink
+  *        the shuffle.
+  *     1. [[slice]]: cut blocks into docId-range chunks of `chunkDocs` docs.
+  *     1. [[collect]]: one shuffle keyed (segId, chunk); each group hands
+  *        the kernel every term's blocks in blockId order.
   *
   * Chunking is sound because a doc's score and match are computed entirely
   * from that doc's block entries: its entries for every term land in the
@@ -24,7 +37,9 @@ import org.apache.spark.sql.functions._
   * (the same decomposability argument as the per-segment merge), and
   * counts add across disjoint chunks. The chunk width bounds per-task block
   * residency at ~`terms * chunkDocs / 128` blocks however large a segment
-  * grows, and lets several tasks work one giant segment in parallel.
+  * grows, and lets several tasks work one giant segment in parallel. Both
+  * paths feed a kernel the same groups at the default width, so they give
+  * bit-identical fruits.
   */
 object SegmentCollect {
 
@@ -44,16 +59,31 @@ object SegmentCollect {
     */
   type Fruit = (Array[Hit], Long)
 
+  /** A kernel: one group's segId and its query terms' blocks, by term in
+    * blockId order, to the group's fruit.
+    */
+  type Kernel = (Int, Map[String, Array[BlockRow]]) => Fruit
+
+  /** The resident layout: one partition per (segId, chunk), each holding
+    * that group's segId and every term's blocks, as [[byTerm]] gives them.
+    */
+  type Resident = RDD[(Int, Map[String, Array[BlockRow]])]
+
   /** The pruned scan of `terms`' blocks. Positions are flattened to CSR in
     * the scan's select, so the nested shape never leaves the scan.
     */
   def scan(searcher: Searcher, terms: Seq[String], positions: Boolean): Dataset[BlockRow] = {
     import searcher.spark.implicits._
+    blockRows(searcher.postings.where($"field" === searcher.field && $"term".isin(terms: _*)),
+      positions)
+  }
+
+  private def blockRows(postings: DataFrame, positions: Boolean): Dataset[BlockRow] = {
+    import postings.sparkSession.implicits._
     val (posFlat, posLens) =
       if (positions) (flatten($"positions"), transform($"positions", p => size(p)))
       else (typedLit(Array.emptyIntArray), typedLit(Array.emptyIntArray))
-    searcher.postings
-      .where($"field" === searcher.field && $"term".isin(terms: _*))
+    postings
       .select($"segId", $"term", $"blockId", $"lastDoc", $"maxNormId", $"maxTf",
         $"docIds", $"tfs", $"normIds", posFlat.as("posFlat"), posLens.as("posLens"))
       .as[BlockRow]
@@ -122,8 +152,7 @@ object SegmentCollect {
     * `kernel(segId, byTerm)` per group, and merge the fruits into the
     * global top `k` and the summed count.
     */
-  def collect(rows: Dataset[BlockRow], chunkDocs: Int, k: Int)
-             (kernel: (Int, Map[String, Array[BlockRow]]) => Fruit): Fruit = {
+  def collect(rows: Dataset[BlockRow], chunkDocs: Int, k: Int)(kernel: Kernel): Fruit = {
     import rows.sparkSession.implicits._
     val cw = chunkDocs
     val fruits = slice(rows, cw)
@@ -132,6 +161,50 @@ object SegmentCollect {
       .collect()
     merge(fruits, k)
   }
+
+  /** Build the resident copy of `searcher`'s field: its alive postings
+    * (with CSR positions when `positions`), sliced at the default chunk
+    * width, grouped into one partition per (segId, chunk) and cached
+    * `MEMORY_ONLY` — one job, which this runs. The (segId, chunk) keys come
+    * from the manifest's per-segment row counts: docIds are dense in
+    * [0, rows).
+    */
+  def buildResident(searcher: Searcher, positions: Boolean): Resident = {
+    import searcher.spark.implicits._
+    val cw = Wand.DefaultChunkDocs
+    val keys = searcher.indexMeta.toSeq.flatMap(_.segments).flatMap { s =>
+      (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt))
+    }.zipWithIndex.toMap
+    val rows = slice(blockRows(searcher.postings.where($"field" === searcher.field), positions), cw)
+    val copy = rows.rdd.map(r => ((r.segId, chunkOf(r, cw)), r))
+      .groupByKey(new GroupPartitioner(keys))
+      .map { case ((segId, _), rs) => (segId, byTerm(rs)) }
+      .setName(s"resident postings ${searcher.indexDir} ${searcher.field}")
+      .persist(StorageLevel.MEMORY_ONLY)
+    copy.count()
+    copy
+  }
+
+  /** One partition per (segId, chunk) key. */
+  private final class GroupPartitioner(keys: Map[(Int, Int), Int]) extends Partitioner {
+    def numPartitions: Int = math.max(1, keys.size)
+    def getPartition(key: Any): Int = keys(key.asInstanceOf[(Int, Int)])
+  }
+
+  /** The one entry point over the resident copy: when `searcher` has one,
+    * run `kernel(segId, byTerm restricted to terms)` map-side over its
+    * cached partitions — one RDD job, no shuffle — and [[merge]] the
+    * fruits; a group holding none of the terms yields no fruit. None when
+    * the Searcher has no copy: the caller takes the scan path.
+    */
+  def collectResident(searcher: Searcher, terms: Seq[String], k: Int)(kernel: Kernel): Option[Fruit] =
+    searcher.resident.map { copy =>
+      val fruits = copy.flatMap { case (segId, all) =>
+        val mine = terms.flatMap(t => all.get(t).map(t -> _)).toMap
+        if (mine.isEmpty) None else Some(kernel(segId, mine))
+      }.collect()
+      merge(fruits, k)
+    }
 
   /** The driver merge (`top_collector.rs:102-122`): global top-k by (score
     * desc, segId asc, docId asc), counts summed.

@@ -29,7 +29,11 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     }.toDF("repo", "path", "commit", "lang", "content")
     IndexBuilder.build(spark, docs, d,
       IndexConfig(numSegments = 2, withPositions = true))
-    new graft.query.Searcher(spark, d)
+    // the scan path: chunking, the τ prefilter and the rare-term broadcast
+    // live there (the resident copy is always cut at the default width)
+    val s = new graft.query.Searcher(spark, d)
+    s.forceScan = true
+    s
   }
 
   private def norm(hits: Array[graft.query.Hit]): Seq[(Int, Int, Float)] =

@@ -129,6 +129,11 @@ class DeleteStreamSpec extends AnyFunSuite {
     val k = 50
     def key(hs: Array[Hit]): Seq[(Int, Int, Float)] = hs.toSeq.map(h => (h.segId, h.docId, h.score))
     val widths = Seq(Wand.DefaultChunkDocs, 64, 1)
+    // the collectors run on sr's resident copy; the executors at each chunk
+    // width run on the scan path, where chunking, the τ prefilter and the
+    // rare-term broadcast live
+    val scanSr = new Searcher(spark, dir)
+    scanSr.forceScan = true
     def check(name: String, q: Query)(run: Int => (Array[Hit], Long)): Unit = {
       val want = key(CompileRoute.topK(sr, q, k))
       val wantCount = sr.compile(q).count()
@@ -147,17 +152,17 @@ class DeleteStreamSpec extends AnyFunSuite {
     // WAND's scorer-order sum equals the compile route's clause-order sum
     val terms = Seq("alpha", "gamma")
     val disj = BoolQ(terms.map(t => Occur.Should -> TermQ(t)))
-    check("disjunction", disj)(w => Wand.topK(sr, terms.map(_ -> 1.0f), k, withCount = true, chunkDocs = w))
+    check("disjunction", disj)(w => Wand.topK(scanSr, terms.map(_ -> 1.0f), k, withCount = true, chunkDocs = w))
     // the τ prefilter is armed only without the count
     for (w <- widths)
-      assert(key(Wand.topK(sr, terms.map(_ -> 1.0f), k, probeCutoff = 0L, chunkDocs = w)._1) ==
+      assert(key(Wand.topK(scanSr, terms.map(_ -> 1.0f), k, probeCutoff = 0L, chunkDocs = w)._1) ==
         key(CompileRoute.topK(sr, disj, k)), s"WAND with the τ prefilter at chunk width $w")
     // similar dfs: plain shuffle; rareterm (df ~47 vs ~560): rare-term broadcast
     for (ts <- Seq(Seq("alpha", "beta"), Seq("alpha", "rareterm")))
       check(ts.mkString("+"), BoolQ(ts.map(t => Occur.Must -> TermQ(t))))(
-        w => Intersect.topKMust(sr, ts, k, chunkDocs = w))
+        w => Intersect.topKMust(scanSr, ts, k, chunkDocs = w))
     val phrase = PhraseQ.of("alpha", "beta")
-    check("phrase", phrase)(w => Intersect.topKPhrase(sr, phrase, k, chunkDocs = w))
+    check("phrase", phrase)(w => Intersect.topKPhrase(scanSr, phrase, k, chunkDocs = w))
   }
 
   test("merge compacts deletes: dead docs physically dropped, results unchanged") {
