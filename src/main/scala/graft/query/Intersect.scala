@@ -7,15 +7,15 @@ import graft.score.Bm25
   * by cost, smallest drives, others gallop to the candidate) and its
   * positions-aware phrase variant (`phrase_scorer.rs:46-420`), run as
   * kernels on the same [[SegmentCollect]] stage as the WAND executor: the
-  * query terms' posting blocks per (segment, docId chunk) group — from the
-  * Searcher's resident copy, or on the scan path through ONE narrow
-  * shuffle — a local in-memory leapfrog per group task, per-group
-  * (top-k, count) fruits, driver merge (`top_collector.rs:102-122`).
+  * query terms' posting blocks per (segment, docId chunk) group, through
+  * [[SegmentCollect.collect]]; a local in-memory leapfrog per group task,
+  * per-group (top-k, count) fruits, driver merge
+  * (`top_collector.rs:102-122`). One kernel per query shape, on every path.
   *
   * This is the fast collector path for pure conjunctions (`+a +b`) and
   * phrases; `Searcher.compile`'s Dataset pipeline remains the composable
   * path (arbitrary bool trees, doc-set materialization), and shuffles
-  * every exploded posting where this executor shuffles whole blocks.
+  * every exploded posting where this executor moves whole blocks.
   */
 object Intersect {
 
@@ -81,63 +81,53 @@ object Intersect {
     }
   }
 
-  /** Arm the rare-driven block pruning when the rarest term's postings fit a
-    * broadcast and the other terms dwarf it (shuffle saving is meaningful).
+  /** Arm the rare-term block filter when the rarest term's docIds fit a
+    * broadcast and the other terms dwarf it (the gather saving is
+    * meaningful).
     */
-  private final val RARE_BROADCAST_MAX_DF: Long = 1L << 16
+  private final val RareTermMaxDf: Long = 1L << 16
 
-  /** Run `kernel(segId, lists)` on the [[SegmentCollect]] stage, `lists`
+  /** Run `kernel(segId, lists)` through [[SegmentCollect.collect]], `lists`
     * holding each term of `ordered` (rarest first) for one (segment, chunk)
-    * group, and merge the fruits into the top `k` and the count: over the
-    * Searcher's resident copy when it has one, else on the scan path.
+    * group, and merge the fruits into the top `k` and the count.
     *
     * On the scan path, when the rarest term is small and the others are
-    * not, the rarest list rides a BROADCAST and only blocks of the other
-    * terms whose [firstDoc, lastDoc] span contains one of its docIds are
-    * shuffled — the distributed analog of the cost-ordered leapfrog
-    * (`intersection.rs:26,81`: smallest docset drives, the rest seek to its
-    * candidates): a block the driving list can never visit is dropped
-    * map-side before the shuffle. The intersection is a subset of the rare
-    * term's docs, so pruning loses no matches; the leapfrog's forward-only
-    * galloping stays correct over the gapped lists because it only ever
-    * probes for the driver's docIds. The rare list rides WHOLE into every
-    * chunk task of its segment; the leapfrog drives on it and only probes
-    * the chunk's other-term slices, so each doc is found exactly once (in
-    * its own chunk). Segments where no other-term block survived hold no
-    * intersection docs. The resident path has no shuffle to shrink, so it
-    * runs no broadcast.
+    * not, only blocks of the other terms whose [firstDoc, lastDoc] span
+    * contains one of its docIds are gathered — the distributed analog of
+    * the cost-ordered leapfrog (`intersection.rs:26,81`: smallest docset
+    * drives, the rest seek to its candidates): a block the driving list can
+    * never visit is dropped before the gather. The intersection is a subset
+    * of the rare term's docs, so the filter loses no matches, and the
+    * leapfrog's forward-only galloping stays correct over the gapped lists
+    * because it only ever probes for the driver's docIds. The rare term's
+    * own blocks pass the filter and travel like every term's.
     */
   private def run(searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
-                  positions: Boolean, chunkDocs: Int, k: Int)
+                  positions: Boolean, k: Int)
                  (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit = {
-    def lists(byTerm: Map[String, Array[SegmentCollect.BlockRow]], terms: Seq[String]) =
-      terms.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of(_, positions))).toArray
-    SegmentCollect.collectResident(searcher, ordered, k) {
-      (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }.getOrElse {
-      val rare = ordered.head
-      val useBc = ordered.length > 1 && dfs(rare) <= RARE_BROADCAST_MAX_DF &&
-        ordered.tail.map(dfs).sum > 4 * dfs(rare)
-      if (!useBc)
-        SegmentCollect.collect(SegmentCollect.scan(searcher, ordered, positions), chunkDocs, k) {
-          (segId, byTerm) => kernel(segId, lists(byTerm, ordered)) }
-      else {
-        val rareB = searcher.spark.sparkContext.broadcast(
-          SegmentCollect.bySegment(SegmentCollect.scan(searcher, Seq(rare), positions)
-            .collect().iterator).map { case (s, byTerm) => s -> TermPostings.of(byTerm(rare), positions) }.toMap)
-        val rest = ordered.tail
-        val pruned = SegmentCollect.scan(searcher, rest, positions).filter { r =>
-          rareB.value.get(r.segId) match {
-            case None => false // rare term absent in segment: empty intersection
-            case Some(tp) =>
-              val docs = tp.docIds
-              val p = java.util.Arrays.binarySearch(docs, r.docIds(0))
-              val ins = if (p >= 0) p else -p - 1
-              ins < docs.length && docs(ins) <= r.lastDoc
-          }
-        }
-        SegmentCollect.collect(pruned, chunkDocs, k) { (segId, byTerm) =>
-          kernel(segId, rareB.value(segId) +: lists(byTerm, rest)) }
-      }
+    val rare = ordered.head
+    val prune = ordered.length > 1 && dfs(rare) <= RareTermMaxDf &&
+      ordered.tail.map(dfs).sum > 4 * dfs(rare)
+    SegmentCollect.collect(searcher, ordered, positions, k,
+      keep = if (prune) Some(rareTermFilter(searcher, rare)) else None) { (segId, byTerm) =>
+      kernel(segId, ordered.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of(_, positions))).toArray)
+    }
+  }
+
+  /** Keep the `rare` term's blocks, and another term's block only when its
+    * [firstDoc, lastDoc] span holds one of `rare`'s docIds in its segment;
+    * only those docIds, per segment, are broadcast.
+    */
+  private def rareTermFilter(searcher: Searcher, rare: String): SegmentCollect.BlockRow => Boolean = {
+    import searcher.spark.implicits._
+    val docs = SegmentCollect.scan(searcher, Seq(rare), positions = false)
+      .select($"segId", $"docIds").as[(Int, Array[Int])].collect()
+      .groupBy(_._1).map { case (s, bs) => s -> bs.flatMap(_._2).sorted }
+    val rareB = searcher.spark.sparkContext.broadcast(docs)
+    r => r.term == rare || rareB.value.get(r.segId).exists { ds =>
+      val p = java.util.Arrays.binarySearch(ds, r.docIds(0))
+      val ins = if (p >= 0) p else -p - 1
+      ins < ds.length && ds(ins) <= r.lastDoc
     }
   }
 
@@ -145,8 +135,7 @@ object Intersect {
     * Score = sum of per-clause BM25 term scores in clause order
     * (`SumCombiner`, `score_combiner.rs:39`), f32.
     */
-  def topKMust(searcher: Searcher, clauseTerms: Seq[String], k: Int,
-               chunkDocs: Int = Wand.DefaultChunkDocs): (Array[Hit], Long) = {
+  def topKMust(searcher: Searcher, clauseTerms: Seq[String], k: Int): (Array[Hit], Long) = {
     val distinct = clauseTerms.distinct
     val dfs = searcher.docFreqs(distinct) // one metadata job for dfs AND weights
     val weights = searcher.weightsFromDfs(dfs)
@@ -157,7 +146,7 @@ object Intersect {
     val clauseIdx = clauseTerms.map(ordIdx).toArray
     val wB = searcher.spark.sparkContext.broadcast(ordered.map(weights).toArray)
 
-    run(searcher, ordered, dfs, positions = false, chunkDocs, k) { (segId, lists) =>
+    run(searcher, ordered, dfs, positions = false, k) { (segId, lists) =>
       val ws = wB.value
       val topk = new Wand.TopK(k, segId)
       var cnt = 0L
@@ -182,8 +171,7 @@ object Intersect {
     * positions check; phrase occurrence count is the tf fed to the summed-idf
     * multi-term weight (`bm25.rs:115-123`, `phrase_scorer.rs:82-143`).
     */
-  def topKPhrase(searcher: Searcher, p: PhraseQ, k: Int,
-                 chunkDocs: Int = Wand.DefaultChunkDocs): (Array[Hit], Long) = {
+  def topKPhrase(searcher: Searcher, p: PhraseQ, k: Int): (Array[Hit], Long) = {
     require(searcher.indexMeta.forall(_.withPositions),
       s"phrase query needs positions, but the index at ${searcher.indexDir} was built with withPositions=false")
     val terms = p.terms.map(_._2)
@@ -198,7 +186,7 @@ object Intersect {
     val slop = p.slop
     val weightB = searcher.spark.sparkContext.broadcast(weight)
 
-    run(searcher, ordered, dfs, positions = true, chunkDocs, k) { (segId, lists) =>
+    run(searcher, ordered, dfs, positions = true, k) { (segId, lists) =>
       val w = weightB.value
       val topk = new Wand.TopK(k, segId)
       var cnt = 0L

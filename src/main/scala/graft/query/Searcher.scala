@@ -63,10 +63,11 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * termdict (128x smaller than postings) and stats are cached: they serve
     * the per-query df/N lookups, the hot metadata path.
     *
-    * The collectors' executors read the field's postings from the
-    * [[resident]] copy instead when it fits: built once per Searcher, on
-    * its first collector query, and cached `MEMORY_ONLY` in one partition
-    * per (segId, chunk) ([[SegmentCollect.buildResident]]). Its gate: the
+    * The collectors' kernels reach the field's postings only through
+    * [[SegmentCollect.collect]], which reads the [[resident]] copy instead
+    * when it fits: built once per Searcher, on its first collector query,
+    * and cached `MEMORY_ONLY` in one partition per (segId, chunk)
+    * ([[SegmentCollect.buildResident]]). Its gate: the
     * postings table's on-disk bytes times [[Searcher.ResidentExpansion]]
     * must fit [[Searcher.ResidentShare]] of the storage memory Spark
     * reports. Above it — at the north star's scale a per-Searcher copy of
@@ -111,7 +112,7 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * each block row keeps only its live entries of `docIds`/`tfs`/`normIds`/
     * `positions`, `lastDoc` and `blockLen` are recomputed, and blocks left
     * empty drop. `maxNormId`/`maxTf` stay the parent block's, still an upper
-    * bound over any subset of it, so every block-max skip and prefilter
+    * bound over any subset of it, so every block-max skip and block filter
     * stays sound. Each column is its own expression over the scan, so the
     * (field, term) predicates still push into it and a query that does not
     * select `positions` does not read it. Only rows whose
@@ -148,10 +149,16 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     */
   private[graft] var forceScan: Boolean = false
 
+  /** Test seam: the docId-range chunk width that cuts both the resident
+    * copy (set it before the first collector query) and the scan path's
+    * gather ([[SegmentCollect]]).
+    */
+  private[graft] var chunkDocs: Int = SegmentCollect.DefaultChunkDocs
+
   /** The resident copy of this field's alive postings, built on first use
     * when it passes the gate; None means the scan path.
     */
-  private[query] lazy val resident: Option[SegmentCollect.Resident] = {
+  private[query] lazy val resident: Option[SegmentCollect.Groups] = {
     def storage = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
     def need = segStore.bytes(spark, "postings").toDouble * Searcher.ResidentExpansion
     if (forceScan || indexMeta.isEmpty || need > storage * Searcher.ResidentShare) None
@@ -843,16 +850,14 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** A term's hit count without scoring — the term dictionary's doc_freq,
     * no postings read (the reference's specialized term count reads the
     * same TermInfo). doc_freq counts tombstoned docs until merge, so with
-    * deletes pinned the term's live entries are counted: in the resident
-    * copy when there is one, else in the alive view's postings.
+    * deletes pinned a kernel on [[SegmentCollect.collect]] counts the
+    * term's live entries.
     */
   def termHitCount(t: String): Long =
     if (deadDocs.isEmpty) docFreqs(Seq(t)).getOrElse(t, 0L)
-    else SegmentCollect.collectResident(this, Seq(t), 1) { (_, byTerm) =>
+    else SegmentCollect.collect(this, Seq(t), positions = false, 1) { (_, byTerm) =>
       (Array.empty[Hit], byTerm(t).map(_.docIds.length.toLong).sum)
-    }.map(_._2).getOrElse(
-      postings.where($"field" === field && $"term" === t)
-        .agg(coalesce(sum(size($"docIds")), lit(0L))).as[Long].head())
+    }._2
 
   /** TopDocs collector (`top_collector.rs:45-61,102-122`): global top-k by
     * (score desc, segId asc, docId asc), offset skipped after the merge.

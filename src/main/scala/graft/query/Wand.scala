@@ -14,9 +14,9 @@ import graft.score.Bm25
   * executors. Per-chunk top-k fruits are merged on the driver
   * (`top_collector.rs:102-122`).
   *
-  * A task reads the query terms' blocks from the Searcher's resident copy,
-  * or on the scan path from a scan pruned on the `term` predicate (Parquet
-  * row groups); within a task, whole 128-doc blocks are skipped
+  * A task reads the query terms' blocks through [[SegmentCollect.collect]]
+  * (the Searcher's resident copy, or a scan pruned on the `term` predicate
+  * when there is none); within a task, whole 128-doc blocks are skipped
   * when their stored (maxNormId, maxTf) upper bound cannot beat the running
   * threshold — strict `>` semantics (`block_wand.rs:206`).
   */
@@ -267,48 +267,42 @@ object Wand {
     * the boost, so every pruning bound stays sound. Unboosted callers pass
     * boost 1.0, which is exact (`weight * 1.0f == weight`).
     *
-    * One WAND run per (segment, chunk) group, driver merge with (score
-    * desc, segId asc, docId asc) (`top_collector.rs:102-122`). Returns
-    * (hits, count): with `withCount` the count is the union's hit count from
-    * the unpruned pass
-    * (the count collector must see every match, `multi_collector.rs:166`);
-    * otherwise it is -1. Terms must be distinct: duplicate Should clauses of
-    * one term sum that term's score twice (`SumCombiner`), which one weight
-    * per term cannot express.
+    * One kernel on the [[SegmentCollect]] stage: per (segment, chunk) group
+    * the BMW loop (`blockWandSingle` for one present term), driver merge
+    * with (score desc, segId asc, docId asc) (`top_collector.rs:102-122`).
+    * Returns (hits, count): with `withCount` the count is the union's hit
+    * count, computed in the same kernel from the unpruned block lists (the
+    * count collector must see every match, `multi_collector.rs:166`), so
+    * TOP_10_COUNT is one pass; otherwise it is -1. Terms must be distinct:
+    * duplicate Should clauses of one term sum that term's score twice
+    * (`SumCombiner`), which one weight per term cannot express.
     *
-    * It reads the `Searcher`'s resident copy of the alive postings, or the
-    * alive view itself on the scan path, so tombstoned docs never score;
-    * block-max bounds stay the parent blocks', which remain upper bounds
-    * over the live entries. `probeCutoff` and `chunkDocs` shape the scan
-    * path only (see [[multiTerm]]); the resident copy is cut at
-    * [[DefaultChunkDocs]].
+    * The kernel reads the alive postings, so tombstoned docs never score
+    * nor count; block-max bounds stay the parent blocks', which remain
+    * upper bounds over the live entries, and a sliced block keeps its
+    * parent's pair, still a valid bound for the BMW skips.
     */
   def topK(searcher: Searcher, termBoosts: Seq[(String, Float)], k: Int,
-           withCount: Boolean = false, probeCutoff: Long = 20000000L,
-           chunkDocs: Int = DefaultChunkDocs): (Array[Hit], Long) = {
+           withCount: Boolean = false): (Array[Hit], Long) = {
     val terms = termBoosts.map(_._1)
     require(terms.distinct.length == terms.length,
       s"duplicate terms in a WAND disjunction: ${terms.diff(terms.distinct).distinct.mkString(", ")}")
     require(k >= 1, s"top-k limit must be at least 1, got $k")
     val weights = searcher.weightsForBoosted(termBoosts)
     val present = terms.filter(weights.contains).sorted
-    val noCount = if (withCount) 0L else -1L
-    if (present.isEmpty) return (Array.empty, noCount)
-    if (present.length == 1) {
-      // union of one term: hits via the zero-shuffle single-term path; the
-      // count is that term's live entries, counted by the same pass on the
-      // resident copy, else its hit count (a termdict lookup on a clean index)
-      val t = present.head
-      val (hits, live) = singleTerm(searcher, t, weights(t), k)
-      val cnt = if (!withCount) noCount else if (live >= 0) live else searcher.termHitCount(t)
-      return (hits, cnt)
+    if (present.isEmpty) return (Array.empty, if (withCount) 0L else -1L)
+    val (hits, cnt) = SegmentCollect.collect(searcher, present, positions = false, k) { (segId, byTerm) =>
+      val perTerm = byTerm.toSeq.sortBy(_._1)
+      val cnt =
+        if (withCount) unionCount(perTerm.map(_._2.flatMap(_.docIds)).toArray)
+        else 0L
+      val scorers = perTerm.map { case (term, blks) => new TermScorer(weights(term), blks.map(toBlock)) }
+      val topk = new TopK(k, segId)
+      if (scorers.length == 1) blockWandSingle(scorers.head, topk.threshold, topk.insert)
+      else blockWand(scorers, topk.threshold, topk.insert)
+      (topk.hits, cnt)
     }
-    // TOP_10_COUNT in ONE pass: the count collector must see every match, so
-    // the threshold probe and prefilter stay off, and the union count is
-    // computed inside the same per-chunk task that runs the BMW loop instead
-    // of a second groupBy-shuffle over per-doc rows
-    multiTerm(searcher, present, weights, k, withCount,
-      probe = !withCount && searcher.docFreqs(present).values.sum > probeCutoff, chunkDocs)
+    (hits, if (withCount) cnt else -1L)
   }
 
   /** Count of distinct docIds across sorted lists (union cardinality). */
@@ -337,108 +331,6 @@ object Wand {
     cnt
   }
 
-  /** Single-term top-k with ZERO shuffle: per-doc scoring makes a term's
-    * top-k decomposable over ANY partition of its posting list (chunk
-    * top-ks ∪-merge to the global top-k), so each resident partition, or on
-    * the scan path each scan partition, runs `blockWandSingle` over the
-    * complete (segId-grouped) block runs it holds and ships only its k best.
-    * One stage, driver merge — no posting bytes cross the network beyond k
-    * hits per task. The count is the term's live entries on the resident
-    * path; the scan path ships bare hits and gives -1.
-    */
-  private def singleTerm(searcher: Searcher, term: String, w: Bm25.Weight,
-                         k: Int): SegmentCollect.Fruit = {
-    import searcher.spark.implicits._
-    val kernel: SegmentCollect.Kernel = { (segId, byTerm) =>
-      val blocks = byTerm(term)
-      val topk = new TopK(k, segId)
-      blockWandSingle(new TermScorer(w, blocks.map(toBlock)), topk.threshold, topk.insert)
-      (topk.hits, blocks.map(_.docIds.length.toLong).sum)
-    }
-    SegmentCollect.collectResident(searcher, Seq(term), k)(kernel).getOrElse {
-      val hits = SegmentCollect.scan(searcher, Seq(term), positions = false).mapPartitions { it =>
-        SegmentCollect.bySegment(it).flatMap { case (segId, byTerm) => kernel(segId, byTerm)._1 }
-      }.collect()
-      (SegmentCollect.top(hits, k), -1L)
-    }
-  }
-
   private def toBlock(r: SegmentCollect.BlockRow): Block =
     Block(r.lastDoc, r.maxNormId, r.maxTf, r.docIds, r.tfs, r.normIds)
-
-  /** DocId-range width of one multi-term task (see [[SegmentCollect]]):
-    * bounds per-task block residency at ~`terms * chunkDocs/128` blocks no
-    * matter how large a segment grows, and lets several tasks work one giant
-    * segment in parallel. 2^20 docs/chunk keeps every realistic segment in
-    * one chunk at test scale while capping the worst case (8-term query,
-    * saturated postings) near ~100 MB per task.
-    */
-  final val DefaultChunkDocs: Int = 1 << 20
-
-  /** The multi-term BMW kernel on the shared [[SegmentCollect]] stage: the
-    * query terms' blocks gathered per (segment, docId-range chunk); per
-    * chunk the BMW loop (plus the union count when `withCount`); driver
-    * merge. A sliced block keeps its parent's block-max pair, a still-valid
-    * upper bound for the BMW skips.
-    *
-    * On the scan path, when `probe` is set, an initial threshold is probed
-    * before the shuffle: τ = nextDown(k-th best score of the highest-max-
-    * score term alone, via the zero-shuffle single-term path). A block of
-    * term t can only hold a doc scoring > τ if blockMax_t + Σ_{u≠t}
-    * termMax_u > τ, so hopeless blocks are dropped MAP-SIDE before the
-    * shuffle — the distributed analog of BMW's "skip without decoding".
-    * Soundness: every true top-k doc's full score ≥ its single-term scores,
-    * so the true k-th best ≥ θ0; nextDown keeps θ0-tied docs eligible,
-    * preserving the strict-`>` threshold and (score, docId) tie semantics.
-    * The probe costs one extra job, so callers arm it only above a df
-    * cutoff where shuffle volume dominates. It ranks by THIS query's
-    * (boosted) weight, or its k-th score would not be a lower bound for the
-    * boosted sums. The resident path has no shuffle to shrink and skips it.
-    */
-  private def multiTerm(searcher: Searcher, present: Seq[String],
-                        weights: Map[String, Bm25.Weight], k: Int,
-                        withCount: Boolean, probe: Boolean,
-                        chunkDocs: Int): (Array[Hit], Long) = {
-    val wB = searcher.spark.sparkContext.broadcast(weights)
-    def kernel(tau: Float): SegmentCollect.Kernel = { (segId, byTerm) =>
-      val ws = wB.value
-      val perTerm = byTerm.toSeq.sortBy(_._1)
-      val cnt =
-        if (withCount) unionCount(perTerm.map(_._2.flatMap(_.docIds)).toArray)
-        else 0L
-      val scorers = perTerm.map { case (term, blks) => new TermScorer(ws(term), blks.map(toBlock)) }
-      val topk = new TopK(k, segId)
-      // pre-seed the probe threshold; the callback keeps it as a floor while
-      // the heap fills (the heap's own threshold is MinValue until k hits)
-      val cb: (Int, Float) => Float = (d, s) => math.max(tau, topk.insert(d, s))
-      if (scorers.length == 1)
-        blockWandSingle(scorers.head, math.max(tau, topk.threshold), cb)
-      else if (scorers.nonEmpty)
-        blockWand(scorers, math.max(tau, topk.threshold), cb)
-      (topk.hits, cnt)
-    }
-
-    val (hits, cnt) = SegmentCollect.collectResident(searcher, present, k)(kernel(Float.MinValue))
-      .getOrElse {
-        val tau = if (!probe) Float.MinValue else {
-          val probeTerm = present.maxBy(t => weights(t).maxScore)
-          val probeHits = singleTerm(searcher, probeTerm, weights(probeTerm), k)._1
-          if (probeHits.length == k) java.lang.Math.nextDown(probeHits.last.score) else Float.MinValue
-        }
-        val sumMax = present.map(weights(_).maxScore).sum
-        val rows = SegmentCollect.scan(searcher, present, positions = false)
-        val pruned = if (tau == Float.MinValue) rows else rows.filter { r =>
-          val w = wB.value(r.term)
-          // strictly-conservative upper bound: compute in double and allow
-          // 2 ulps of f32 slack — the per-doc score sums this prunes against
-          // are f32 in a different association order, and a bound rounding a
-          // few ulps low could drop a block holding a doc that ties tau
-          val bound = (w.score(r.maxNormId, decodeMaxTf(r.maxTf)).toDouble
-            + sumMax.toDouble - w.maxScore.toDouble).toFloat
-          Math.nextUp(Math.nextUp(bound)) > tau
-        }
-        SegmentCollect.collect(pruned, chunkDocs, k)(kernel(tau))
-      }
-    (hits, if (withCount) cnt else -1L)
-  }
 }

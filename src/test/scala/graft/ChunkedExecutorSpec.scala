@@ -2,23 +2,25 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.query.{Intersect, PhraseQ, SegmentCollect, Wand}
+import graft.query.{Intersect, PhraseQ, SegmentCollect, Searcher, Wand}
 
 /** DocId-range chunking of the shared collect stage (`SegmentCollect`) that
   * the multi-term executors (Wand.topK, Intersect.topKMust,
   * Intersect.topKPhrase) run on: per-task block residency is bounded by the
   * chunk width instead of the segment size, so the answer must be IDENTICAL at
   * any chunk width — including widths far below the 128-entry block length,
-  * which force map-side block slicing at chunk boundaries, and width 1
-  * (every doc its own chunk). This is the residency hardening the round-3
-  * audit asked for: a forced multi-chunk query returns bit-identical
-  * (hits, count) fruit to the single-chunk run.
+  * which force block slicing at chunk boundaries, and width 1 (every doc its
+  * own chunk) — and on both sources of groups: the Searcher's resident copy
+  * and the scan path's gather, each cut at the Searcher's chunk width. This
+  * is the residency hardening the round-3 audit asked for: a forced
+  * multi-chunk query returns bit-identical (hits, count) fruit to the
+  * single-chunk run.
   */
 class ChunkedExecutorSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private lazy val sr = {
+  private lazy val dir = {
     val d = java.nio.file.Files.createTempDirectory("graft-chunk").toString
     val rng = new scala.util.Random(7)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon")
@@ -29,67 +31,91 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     }.toDF("repo", "path", "commit", "lang", "content")
     IndexBuilder.build(spark, docs, d,
       IndexConfig(numSegments = 2, withPositions = true))
-    // the scan path: chunking, the τ prefilter and the rare-term broadcast
-    // live there (the resident copy is always cut at the default width)
-    val s = new graft.query.Searcher(spark, d)
-    s.forceScan = true
-    s
+    d
   }
+
+  private val widths = Seq(SegmentCollect.DefaultChunkDocs, 64, 1)
+
+  /** One Searcher per (path, chunk width): the resident copy or the forced
+    * scan path, cut at the width.
+    */
+  private lazy val searchers: Map[(String, Int), Searcher] =
+    (for (path <- Seq("resident", "scan"); w <- widths) yield {
+      val s = new Searcher(spark, dir)
+      s.forceScan = path == "scan"
+      s.chunkDocs = w
+      (path, w) -> s
+    }).toMap
 
   private def norm(hits: Array[graft.query.Hit]): Seq[(Int, Int, Float)] =
     hits.toSeq.map(h => (h.segId, h.docId, h.score))
 
+  /** `run` on every (path, width) Searcher == on the unchunked resident
+    * copy; that answer.
+    */
+  private def chunked(run: Searcher => (Array[graft.query.Hit], Long)): (Array[graft.query.Hit], Long) = {
+    val (h0, c0) = run(searchers(("resident", SegmentCollect.DefaultChunkDocs)))
+    for (((path, w), sr) <- searchers) {
+      val (h, c) = run(sr)
+      assert(norm(h) == norm(h0), s"$path path, width $w hits")
+      assert(c == c0, s"$path path, width $w count")
+    }
+    (h0, c0)
+  }
+
   test("WAND multi-term: chunked == unchunked at widths 64 and 1") {
     val terms = Seq("alpha", "beta", "gamma").map(_ -> 1.0f)
-    val (h0, c0) = Wand.topK(sr, terms, 10, withCount = true, chunkDocs = Int.MaxValue)
-    for (w <- Seq(64, 1)) {
-      val (h, c) = Wand.topK(sr, terms, 10, withCount = true, chunkDocs = w)
-      assert(norm(h) == norm(h0), s"width $w hits")
-      assert(c == c0, s"width $w count")
-    }
+    val (h0, c0) = chunked(Wand.topK(_, terms, 10, withCount = true))
     assert(c0 > 0 && h0.length == 10)
+    // without the count: the same hits
+    assert(norm(chunked(Wand.topK(_, terms, 10))._1) == norm(h0))
   }
 
   test("conjunction top-k: chunked == unchunked, shuffle path") {
-    // similar dfs => the rare-broadcast prune stays OFF: exercises the
-    // plain (segId, chunk)-grouped shuffle path
-    val (h0, c0) = Intersect.topKMust(sr, Seq("alpha", "beta"), 10)
-    for (w <- Seq(64, 1)) {
-      val (h, c) = Intersect.topKMust(sr, Seq("alpha", "beta"), 10, chunkDocs = w)
-      assert(norm(h) == norm(h0), s"width $w hits")
-      assert(c == c0, s"width $w count")
-    }
+    // similar dfs => the rare-term block filter stays OFF: every block of
+    // both terms is gathered per (segId, chunk)
+    val (_, c0) = chunked(Intersect.topKMust(_, Seq("alpha", "beta"), 10))
     assert(c0 > 0)
   }
 
   test("conjunction top-k: chunked == unchunked, rare-broadcast path") {
-    // rareterm df ~7 vs alpha df ~600 => the rare list rides the broadcast
-    // WHOLE into every chunk task and drives the leapfrog there
-    val (h0, c0) = Intersect.topKMust(sr, Seq("alpha", "rareterm"), 10)
-    for (w <- Seq(64, 1)) {
-      val (h, c) = Intersect.topKMust(sr, Seq("alpha", "rareterm"), 10, chunkDocs = w)
-      assert(norm(h) == norm(h0), s"width $w hits")
-      assert(c == c0, s"width $w count")
-    }
+    // rareterm df ~7 vs alpha df ~600 => on the scan path only the alpha
+    // blocks whose span holds a rareterm doc are gathered
+    val (_, c0) = chunked(Intersect.topKMust(_, Seq("alpha", "rareterm"), 10))
     assert(c0 > 0)
   }
 
-  test("WAND multi-term with the τ prefilter armed: chunked == unchunked at widths 64 and 1") {
-    // probeCutoff = 0 arms the single-term threshold probe, so blocks are
-    // dropped map-side BEFORE slicing; withCount = false keeps it armed
-    val terms = Seq("alpha", "beta", "gamma").map(_ -> 1.0f)
-    val (h0, _) = Wand.topK(sr, terms, 10, probeCutoff = 0L, chunkDocs = Int.MaxValue)
-    for (w <- Seq(64, 1)) {
-      val (h, c) = Wand.topK(sr, terms, 10, probeCutoff = 0L, chunkDocs = w)
-      assert(norm(h) == norm(h0), s"width $w hits")
-      assert(c == -1L, s"width $w count")
+  test("resident copy: one partition per (segId, chunk) at widths 64 and 1") {
+    for (w <- widths) {
+      val sr = searchers(("resident", w))
+      sr.topDocs(graft.query.TermQ("alpha"), 10) // builds the copy
+      val rows = sr.indexMeta.get.segments.map(s => s.segId -> s.rows).toMap
+      val want = rows.toSeq.flatMap { case (s, n) => (0L to (n - 1) / w).map(c => (s, c.toInt)) }.sorted
+      // the copies over this index differ in their partition count
+      val copy = spark.sparkContext.getPersistentRDDs.values.toSeq
+        .filter(r => r.name == s"resident postings $dir content" && r.getNumPartitions == want.length)
+      assert(copy.length == 1, s"width $w: ${copy.length} copies")
+      // per partition: its groups as (segId, the chunks of its docIds, blocks
+      // in blockId order with exact lastDocs and at most w entries)
+      val groups = copy.head.asInstanceOf[SegmentCollect.Groups].mapPartitionsWithIndex { (p, it) =>
+        it.map { case (segId, byTerm) =>
+          val chunks = byTerm.values.flatten.flatMap(_.docIds).map(_ / w).toSet
+          val sound = byTerm.values.forall { bs =>
+            bs.map(_.blockId).toSeq == bs.map(_.blockId).sorted.toSeq &&
+              bs.forall(b => b.lastDoc == b.docIds.last && b.docIds.length <= w)
+          }
+          (p, segId, chunks, sound)
+        }
+      }.collect()
+      assert(groups.forall(_._3.size == 1), s"width $w: a group spans chunks")
+      assert(groups.forall(_._4), s"width $w: a group's blocks are out of order or unsliced")
+      assert(groups.map(g => (g._2, g._3.head)).sorted.toSeq == want, s"width $w: groups")
+      assert(groups.map(_._1).distinct.length == groups.length, s"width $w: a partition holds two groups")
     }
-    assert(h0.length == 10)
-    assert(norm(h0) == norm(Wand.topK(sr, terms, 10, withCount = true)._1), "probe changed hits")
   }
 
   test("per-task residency is BOUNDED by the chunk width") {
-    // direct assertion on the sliced shuffle rows: within every
+    // direct assertion on the sliced gather rows: within every
     // (segId, chunk) group, each term holds at most `width` posting
     // entries and every docId lies inside the chunk's range — the
     // residency invariant that holds no matter how large a segment grows.
@@ -97,9 +123,10 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     // block-max pair; positions off and on take the same slicer
     val width = 64
     for (positions <- Seq(false, true)) {
-      val scanned = SegmentCollect.scan(sr, Seq("alpha", "beta", "gamma"), positions)
-      val parents = scanned.collect().map(r => (r.segId, r.term, r.blockId) -> r).toMap
-      val rows = SegmentCollect.slice(scanned, width).collect()
+      val scanned = SegmentCollect.scan(searchers(("scan", width)), Seq("alpha", "beta", "gamma"), positions)
+        .collect()
+      val parents = scanned.map(r => (r.segId, r.term, r.blockId) -> r).toMap
+      val rows = scanned.flatMap(SegmentCollect.slice(_, width))
         .map(r => (r, SegmentCollect.chunkOf(r, width)))
       assert(rows.nonEmpty)
       rows.foreach { case (r, chunk) =>
@@ -135,13 +162,7 @@ class ChunkedExecutorSpec extends AnyFunSuite {
   }
 
   test("phrase top-k: chunked == unchunked (CSR position slices)") {
-    val p = PhraseQ.of("alpha", "beta")
-    val (h0, c0) = Intersect.topKPhrase(sr, p, 10)
-    for (w <- Seq(64, 1)) {
-      val (h, c) = Intersect.topKPhrase(sr, p, 10, chunkDocs = w)
-      assert(norm(h) == norm(h0), s"width $w hits")
-      assert(c == c0, s"width $w count")
-    }
+    val (_, c0) = chunked(Intersect.topKPhrase(_, PhraseQ.of("alpha", "beta"), 10))
     assert(c0 > 0)
   }
 }

@@ -128,13 +128,16 @@ class DeleteStreamSpec extends AnyFunSuite {
 
     val k = 50
     def key(hs: Array[Hit]): Seq[(Int, Int, Float)] = hs.toSeq.map(h => (h.segId, h.docId, h.score))
-    val widths = Seq(Wand.DefaultChunkDocs, 64, 1)
-    // the collectors run on sr's resident copy; the executors at each chunk
-    // width run on the scan path, where chunking, the τ prefilter and the
-    // rare-term broadcast live
-    val scanSr = new Searcher(spark, dir)
-    scanSr.forceScan = true
-    def check(name: String, q: Query)(run: Int => (Array[Hit], Long)): Unit = {
+    val widths = Seq(SegmentCollect.DefaultChunkDocs, 64, 1)
+    // the collectors on a resident copy and on the forced scan path, each
+    // cut at every chunk width
+    val paths = for (path <- Seq("resident", "scan"); w <- widths) yield {
+      val s = new Searcher(spark, dir)
+      s.forceScan = path == "scan"
+      s.chunkDocs = w
+      s"$path path at chunk width $w" -> s
+    }
+    def check(name: String, q: Query)(run: Searcher => (Array[Hit], Long)): Unit = {
       val want = key(CompileRoute.topK(sr, q, k))
       val wantCount = sr.compile(q).count()
       assert(clean.topDocs(q, k).exists(h => victims((h.segId, h.docId))),
@@ -143,26 +146,26 @@ class DeleteStreamSpec extends AnyFunSuite {
       val (hits, cnt) = sr.topDocsWithCount(q, k)
       assert(key(hits) == want && cnt == wantCount, s"$name topDocsWithCount")
       assert(sr.count(q) == wantCount, s"$name count")
-      for (w <- widths) {
-        val (h, c) = run(w)
-        assert(key(h) == want && c == wantCount, s"$name at chunk width $w")
+      for ((where, s) <- paths) {
+        val (h, c) = run(s)
+        assert(key(h) == want && c == wantCount, s"$name on the $where")
       }
     }
     // two terms: an f32 sum of two scores is the same in either order, so
     // WAND's scorer-order sum equals the compile route's clause-order sum
     val terms = Seq("alpha", "gamma")
     val disj = BoolQ(terms.map(t => Occur.Should -> TermQ(t)))
-    check("disjunction", disj)(w => Wand.topK(scanSr, terms.map(_ -> 1.0f), k, withCount = true, chunkDocs = w))
-    // the τ prefilter is armed only without the count
-    for (w <- widths)
-      assert(key(Wand.topK(scanSr, terms.map(_ -> 1.0f), k, probeCutoff = 0L, chunkDocs = w)._1) ==
-        key(CompileRoute.topK(sr, disj, k)), s"WAND with the τ prefilter at chunk width $w")
-    // similar dfs: plain shuffle; rareterm (df ~47 vs ~560): rare-term broadcast
+    check("disjunction", disj)(Wand.topK(_, terms.map(_ -> 1.0f), k, withCount = true))
+    // the hits alone, without the count
+    for ((where, s) <- paths)
+      assert(key(Wand.topK(s, terms.map(_ -> 1.0f), k)._1) == key(CompileRoute.topK(sr, disj, k)),
+        s"WAND without the count on the $where")
+    // similar dfs: every block gathered; rareterm (df ~47 vs ~560): on the
+    // scan path only the alpha blocks whose span holds a rareterm doc
     for (ts <- Seq(Seq("alpha", "beta"), Seq("alpha", "rareterm")))
-      check(ts.mkString("+"), BoolQ(ts.map(t => Occur.Must -> TermQ(t))))(
-        w => Intersect.topKMust(scanSr, ts, k, chunkDocs = w))
+      check(ts.mkString("+"), BoolQ(ts.map(t => Occur.Must -> TermQ(t))))(Intersect.topKMust(_, ts, k))
     val phrase = PhraseQ.of("alpha", "beta")
-    check("phrase", phrase)(w => Intersect.topKPhrase(scanSr, phrase, k, chunkDocs = w))
+    check("phrase", phrase)(Intersect.topKPhrase(_, phrase, k))
   }
 
   test("merge compacts deletes: dead docs physically dropped, results unchanged") {

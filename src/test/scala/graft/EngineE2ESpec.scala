@@ -123,19 +123,18 @@ class EngineE2ESpec extends AnyFunSuite {
     assert(searcher.topDocs(q, 10).toSeq == wand, "disj3 topDocs == wand")
   }
 
-  test("WAND with probe-seeded threshold + map-side block prefilter == naive") {
-    // probeCutoff 0 forces the θ0 probe and block prefilter even on the
-    // small corpus; results must still be rank-identical with f32 scores
-    // within the reference's own nearly-equals bound (scorer-order sums).
-    // The probe runs on the scan path only, so this searcher is held there
+  test("WAND on the scan path == naive") {
+    // the scan path's gather feeds the same kernel as the resident copy;
+    // results must still be rank-identical with f32 scores within the
+    // reference's own nearly-equals bound (scorer-order sums)
     val scanSearcher = new Searcher(spark, indexDir)
     scanSearcher.forceScan = true
     val ts2 = Seq(hotTerm, midTerm).sorted
-    assertSame(Wand.topK(scanSearcher, ts2.map(_ -> 1.0f), 10, probeCutoff = 0L)._1.toSeq,
-      naive.topDocs(BoolQ(ts2.map(t => Occur.Should -> TermQ(t))), 10), "probe disj2")
+    assertSame(Wand.topK(scanSearcher, ts2.map(_ -> 1.0f), 10)._1.toSeq,
+      naive.topDocs(BoolQ(ts2.map(t => Occur.Should -> TermQ(t))), 10), "scan disj2")
     val ts3 = Seq(hotTerm, hot2, midTerm).sorted
     val oracle = naive.topDocs(BoolQ(ts3.map(t => Occur.Should -> TermQ(t))), 10)
-    val wand = Wand.topK(scanSearcher, ts3.map(_ -> 1.0f), 10, probeCutoff = 0L)._1.toSeq
+    val wand = Wand.topK(scanSearcher, ts3.map(_ -> 1.0f), 10)._1.toSeq
     assert(wand.map(h => (h.segId, h.docId)) == oracle.map(h => (h.segId, h.docId)))
     wand.zip(oracle).foreach { case (e, o) =>
       assert(math.abs(e.score - o.score) <= 1e-6f * math.max(math.abs(e.score), math.abs(o.score)))

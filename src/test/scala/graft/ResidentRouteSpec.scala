@@ -12,8 +12,10 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ
   * two-batch, four-segment index with positions and tombstones pinned (every
   * doc of one block, and the lastDoc of another), each collector route
   * gives bit-identical hits and counts on the resident copy, on the forced
-  * scan path, and on the compile route; and a resident query runs one job
-  * of one stage that reads no Parquet and moves no shuffle bytes.
+  * scan path, and on the compile route; a resident query runs one job of
+  * one stage that reads no Parquet and moves no shuffle bytes; and on the
+  * scan path a query of one distinct term moves no shuffle bytes, while a
+  * multi-term WAND is one gather job.
   */
 class ResidentRouteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -151,5 +153,30 @@ class ResidentRouteSpec extends AnyFunSuite {
     warm(scan)
     val (_, _, rdds, shuffle) = shapeOf("scan")(scan.topDocs(disj, k))
     assert(rdds("FileScanRDD") && shuffle > 0, s"scan path ran $rdds, $shuffle shuffle bytes")
+  }
+
+  test("scan path: one-term queries shuffle nothing, a 2-term WAND is one job") {
+    // one distinct term needs no gather, the tombstoned count and a
+    // one-term phrase included
+    val phrase = PhraseQ.of("alpha", "alpha")
+    val oneTerm: Seq[(String, () => Any)] = Seq(
+      "single term topDocs" -> (() => scan.topDocs(TermQ("alpha"), k)),
+      "single term topDocsWithCount" -> (() => scan.topDocsWithCount(TermQ("alpha"), k)),
+      "single term count" -> (() => scan.count(TermQ("alpha"))),
+      "one-term phrase topDocs" -> (() => scan.topDocs(phrase, k)))
+    warm(scan)
+    oneTerm.foreach(_._2()) // the first query reads the tombstones
+    for ((what, run) <- oneTerm) {
+      val (jobs, _, rdds, shuffle) = shapeOf(s"scan $what")(run())
+      assert(jobs == 1 && rdds("FileScanRDD"), s"$what: $jobs jobs, ran $rdds")
+      assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
+    }
+    val wantCount = resident.compile(phrase).count()
+    assert(wantCount > 0, "the one-term phrase matches nothing")
+    assert(key(scan.topDocs(phrase, k)) == key(CompileRoute.topK(resident, phrase, k)))
+    assert(scan.count(phrase) == wantCount && resident.count(phrase) == wantCount)
+    // several terms: one gather job of two stages, with no threshold probe
+    val (jobs, stages, _, shuffle) = shapeOf("scan WAND")(scan.topDocs(disj, k))
+    assert(jobs == 1 && stages == 2 && shuffle > 0, s"2-term WAND: $jobs jobs, $stages stages, $shuffle shuffle bytes")
   }
 }
