@@ -81,55 +81,19 @@ object Intersect {
     }
   }
 
-  /** Arm the rare-term block filter when the rarest term's docIds fit a
-    * broadcast and the other terms dwarf it (the gather saving is
-    * meaningful).
-    */
-  private final val RareTermMaxDf: Long = 1L << 16
-
   /** Run `kernel(segId, lists)` through [[SegmentCollect.collect]], `lists`
     * holding each term of `ordered` (rarest first) for one (segment, chunk)
-    * group, and merge the fruits into the top `k` and the count.
-    *
-    * On the scan path, when the rarest term is small and the others are
-    * not, only blocks of the other terms whose [firstDoc, lastDoc] span
-    * contains one of its docIds are gathered — the distributed analog of
-    * the cost-ordered leapfrog (`intersection.rs:26,81`: smallest docset
-    * drives, the rest seek to its candidates): a block the driving list can
-    * never visit is dropped before the gather. The intersection is a subset
-    * of the rare term's docs, so the filter loses no matches, and the
-    * leapfrog's forward-only galloping stays correct over the gapped lists
-    * because it only ever probes for the driver's docIds. The rare term's
-    * own blocks pass the filter and travel like every term's.
+    * group, and merge the fruits into the top `k` and the count. Every
+    * block of every term is gathered: a filter that broadcasts the rarest
+    * term's docIds to drop the other terms' blocks it never visits costs
+    * one more Spark job than it saves in gather bytes, measured on a
+    * 20k-doc and a 600k-doc index.
     */
-  private def run(searcher: Searcher, ordered: Seq[String], dfs: Map[String, Long],
-                  positions: Boolean, k: Int)
-                 (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit = {
-    val rare = ordered.head
-    val prune = ordered.length > 1 && dfs(rare) <= RareTermMaxDf &&
-      ordered.tail.map(dfs).sum > 4 * dfs(rare)
-    SegmentCollect.collect(searcher, ordered, positions, k,
-      keep = if (prune) Some(rareTermFilter(searcher, rare)) else None) { (segId, byTerm) =>
+  private def run(searcher: Searcher, ordered: Seq[String], positions: Boolean, k: Int)
+                 (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit =
+    SegmentCollect.collect(searcher, ordered, positions, k) { (segId, byTerm) =>
       kernel(segId, ordered.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of(_, positions))).toArray)
     }
-  }
-
-  /** Keep the `rare` term's blocks, and another term's block only when its
-    * [firstDoc, lastDoc] span holds one of `rare`'s docIds in its segment;
-    * only those docIds, per segment, are broadcast.
-    */
-  private def rareTermFilter(searcher: Searcher, rare: String): SegmentCollect.BlockRow => Boolean = {
-    import searcher.spark.implicits._
-    val docs = SegmentCollect.scan(searcher, Seq(rare), positions = false)
-      .select($"segId", $"docIds").as[(Int, Array[Int])].collect()
-      .groupBy(_._1).map { case (s, bs) => s -> bs.flatMap(_._2).sorted }
-    val rareB = searcher.spark.sparkContext.broadcast(docs)
-    r => r.term == rare || rareB.value.get(r.segId).exists { ds =>
-      val p = java.util.Arrays.binarySearch(ds, r.docIds(0))
-      val ins = if (p >= 0) p else -p - 1
-      ins < ds.length && ds(ins) <= r.lastDoc
-    }
-  }
 
   /** Scored conjunction of terms: top-k + total count in one pass.
     * Score = sum of per-clause BM25 term scores in clause order
@@ -146,7 +110,7 @@ object Intersect {
     val clauseIdx = clauseTerms.map(ordIdx).toArray
     val wB = searcher.spark.sparkContext.broadcast(ordered.map(weights).toArray)
 
-    run(searcher, ordered, dfs, positions = false, k) { (segId, lists) =>
+    run(searcher, ordered, positions = false, k) { (segId, lists) =>
       val ws = wB.value
       val topk = new Wand.TopK(k, segId)
       var cnt = 0L
@@ -186,7 +150,7 @@ object Intersect {
     val slop = p.slop
     val weightB = searcher.spark.sparkContext.broadcast(weight)
 
-    run(searcher, ordered, dfs, positions = true, k) { (segId, lists) =>
+    run(searcher, ordered, positions = true, k) { (segId, lists) =>
       val w = weightB.value
       val topk = new Wand.TopK(k, segId)
       var cnt = 0L

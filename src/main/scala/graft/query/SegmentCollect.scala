@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.Partitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -22,22 +22,27 @@ import org.apache.spark.storage.StorageLevel
   *    it on its first collector query when it fits in memory (its gate).
   *  - **The scan path**, when there is no copy: one pruned Parquet scan of
   *    the query terms' blocks ([[scan]], row groups pruned on the (field,
-  *    term) predicate), filtered by the caller's `keep`. One distinct term
-  *    needs no gather — a doc's entries for one term never span blocks, so
-  *    each scan partition's blocks, grouped per segment, hold complete docs.
-  *    Several terms go through the same [[gather]] that builds the copy.
+  *    term) predicate). One distinct term needs no gather — a doc's
+  *    entries for one term never span blocks, so each scan partition's
+  *    blocks, grouped per segment, hold complete docs. Several terms go
+  *    through the same [[gather]] that builds the copy.
   *
   * The gather cuts blocks into docId-range chunks of the Searcher's chunk
-  * width ([[slice]]) and puts each (segId, chunk) group in its own
-  * partition. Chunking is sound because a doc's score and match are computed
-  * entirely from that doc's block entries: its entries for every term land
-  * in the same chunk, so each chunk's kernel sees complete docs, each
-  * chunk's top-k contains every doc of that chunk that can reach the global
-  * top-k (the same decomposability argument as the per-segment merge), and
-  * counts add across disjoint chunks. The chunk width bounds per-task block
-  * residency at ~`terms * chunkDocs / 128` blocks however large a segment
-  * grows, and lets several tasks work one giant segment in parallel. Both
-  * sources feed a kernel complete docs, so they give bit-identical answers.
+  * width ([[slice]]) and groups them per (segId, chunk). The copy keeps
+  * each group in its own partition, its caching unit; the scan path deals
+  * its groups over the cluster's task slots: on a 600k-doc, 32-segment
+  * index on 4 cores, a task per group made multi-term queries ~10% slower,
+  * the extra tasks costing more in scheduling than they gained in
+  * parallelism. Chunking is sound because a doc's score and match are
+  * computed entirely from that doc's block entries: its entries for every
+  * term land in the same chunk, so each chunk's kernel sees complete docs,
+  * each chunk's top-k contains every doc of that chunk that can reach the
+  * global top-k (the same decomposability argument as the per-segment
+  * merge), and counts add across disjoint chunks. The chunk width bounds a
+  * kernel's block residency at ~`terms * chunkDocs / 128` blocks however
+  * large a segment grows, and lets several tasks work one giant segment in
+  * parallel. Both sources feed a kernel complete docs, so they give
+  * bit-identical answers.
   */
 object SegmentCollect {
 
@@ -145,26 +150,30 @@ object SegmentCollect {
   private def byTerm(rows: Iterable[BlockRow]): Map[String, Array[BlockRow]] =
     rows.groupBy(_.term).map { case (t, bs) => t -> bs.toArray.sortBy(_.blockId) }
 
-  /** Slice `rows` at `searcher`'s chunk width and put each (segId, chunk)
-    * group in its own partition, its blocks [[byTerm]]. The keys come from
-    * the manifest's per-segment row counts: docIds are dense in [0, rows).
+  /** Slice `rows` at `searcher`'s chunk width and group them per (segId,
+    * chunk), each group's blocks [[byTerm]], in at most `maxParts`
+    * partitions. The keys come from the manifest's per-segment row counts:
+    * docIds are dense in [0, rows). A Searcher without a manifest hashes
+    * the groups over `maxParts` partitions instead.
     */
-  private def gather(searcher: Searcher, rows: RDD[BlockRow]): Groups = {
+  private def gather(searcher: Searcher, rows: RDD[BlockRow], maxParts: Int): Groups = {
     val cw = searcher.chunkDocs
-    val keys = searcher.indexMeta.toSeq.flatMap(_.segments).flatMap { s =>
-      (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt))
-    }.zipWithIndex.toMap
+    val part = searcher.indexMeta.fold[Partitioner](new HashPartitioner(maxParts)) { m =>
+      new GroupPartitioner(m.segments.flatMap { s =>
+        (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt))
+      }.zipWithIndex.toMap, maxParts)
+    }
     rows.flatMap(slice(_, cw)).map(r => ((r.segId, chunkOf(r, cw)), r))
-      .groupByKey(new GroupPartitioner(keys))
+      .groupByKey(part)
       .map { case ((segId, _), rs) => (segId, byTerm(rs)) }
   }
 
-  /** One partition per (segId, chunk) key. Without a pinned manifest there
-    * are no keys, and every group shares partition 0.
+  /** The manifest's (segId, chunk) keys dealt round-robin over at most
+    * `maxParts` partitions; any other key is an error.
     */
-  private final class GroupPartitioner(keys: Map[(Int, Int), Int]) extends Partitioner {
-    def numPartitions: Int = math.max(1, keys.size)
-    def getPartition(key: Any): Int = keys.getOrElse(key.asInstanceOf[(Int, Int)], 0)
+  private final class GroupPartitioner(keys: Map[(Int, Int), Int], maxParts: Int) extends Partitioner {
+    def numPartitions: Int = math.max(1, math.min(keys.size, maxParts))
+    def getPartition(key: Any): Int = keys(key.asInstanceOf[(Int, Int)]) % numPartitions
   }
 
   /** Build the resident copy of `searcher`'s field: the [[gather]] of its
@@ -173,7 +182,8 @@ object SegmentCollect {
     */
   def buildResident(searcher: Searcher, positions: Boolean): Groups = {
     import searcher.spark.implicits._
-    val copy = gather(searcher, blockRows(searcher.postings.where($"field" === searcher.field), positions).rdd)
+    val copy = gather(searcher, blockRows(searcher.postings.where($"field" === searcher.field), positions).rdd,
+      maxParts = Int.MaxValue)
       .setName(s"resident postings ${searcher.indexDir} ${searcher.field}")
       .persist(StorageLevel.MEMORY_ONLY)
     copy.count()
@@ -182,19 +192,16 @@ object SegmentCollect {
 
   /** The one way a kernel reaches posting blocks: run `kernel(segId, byTerm
     * restricted to terms)` per group of `searcher`'s resident copy, or,
-    * when it has none, of the scan path's groups (`positions` and `keep`,
-    * a block filter evaluated only there, shape the scan); a group holding
-    * none of the terms yields no fruit. [[merge]] folds the fruits into the
-    * global top `k` and the summed count.
+    * when it has none, of the scan path's groups (`positions` shapes the
+    * scan); a group holding none of the terms yields no fruit. [[merge]]
+    * folds the fruits into the global top `k` and the summed count.
     */
-  def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int,
-              keep: => Option[BlockRow => Boolean] = None)(kernel: Kernel): Fruit = {
+  def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int)(kernel: Kernel): Fruit = {
     val groups = searcher.resident.getOrElse {
       val rows = scan(searcher, terms, positions).rdd
-      val kept = keep.fold(rows)(rows.filter)
       if (terms.distinct.length == 1)
-        kept.mapPartitions(_.toSeq.groupBy(_.segId).iterator.map { case (s, rs) => s -> byTerm(rs) })
-      else gather(searcher, kept)
+        rows.mapPartitions(_.toSeq.groupBy(_.segId).iterator.map { case (s, rs) => s -> byTerm(rs) })
+      else gather(searcher, rows, searcher.spark.sparkContext.defaultParallelism)
     }
     val fruits = groups.flatMap { case (segId, all) =>
       val mine = terms.flatMap(t => all.get(t).map(t -> _)).toMap

@@ -67,20 +67,20 @@ class ChunkedExecutorSpec extends AnyFunSuite {
     val terms = Seq("alpha", "beta", "gamma").map(_ -> 1.0f)
     val (h0, c0) = chunked(Wand.topK(_, terms, 10, withCount = true))
     assert(c0 > 0 && h0.length == 10)
-    // without the count: the same hits
-    assert(norm(chunked(Wand.topK(_, terms, 10))._1) == norm(h0))
+    // without the count: the same hits, and count -1 (not counted)
+    val (h, c) = chunked(Wand.topK(_, terms, 10))
+    assert(c == -1L && norm(h) == norm(h0))
   }
 
   test("conjunction top-k: chunked == unchunked, shuffle path") {
-    // similar dfs => the rare-term block filter stays OFF: every block of
-    // both terms is gathered per (segId, chunk)
+    // similar dfs: every block of both terms is gathered per (segId, chunk)
     val (_, c0) = chunked(Intersect.topKMust(_, Seq("alpha", "beta"), 10))
     assert(c0 > 0)
   }
 
   test("conjunction top-k: chunked == unchunked, rare-broadcast path") {
-    // rareterm df ~7 vs alpha df ~600 => on the scan path only the alpha
-    // blocks whose span holds a rareterm doc are gathered
+    // rareterm df ~7 vs alpha df ~600: the leapfrog's rare driver gallops
+    // over alpha blocks cut at every width
     val (_, c0) = chunked(Intersect.topKMust(_, Seq("alpha", "rareterm"), 10))
     assert(c0 > 0)
   }

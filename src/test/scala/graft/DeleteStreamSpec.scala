@@ -160,8 +160,7 @@ class DeleteStreamSpec extends AnyFunSuite {
     for ((where, s) <- paths)
       assert(key(Wand.topK(s, terms.map(_ -> 1.0f), k)._1) == key(CompileRoute.topK(sr, disj, k)),
         s"WAND without the count on the $where")
-    // similar dfs: every block gathered; rareterm (df ~47 vs ~560): on the
-    // scan path only the alpha blocks whose span holds a rareterm doc
+    // similar dfs, and a rare driver: rareterm (df ~47 vs ~560)
     for (ts <- Seq(Seq("alpha", "beta"), Seq("alpha", "rareterm")))
       check(ts.mkString("+"), BoolQ(ts.map(t => Occur.Must -> TermQ(t))))(Intersect.topKMust(_, ts, k))
     val phrase = PhraseQ.of("alpha", "beta")

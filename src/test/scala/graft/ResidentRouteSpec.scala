@@ -179,4 +179,23 @@ class ResidentRouteSpec extends AnyFunSuite {
     val (jobs, stages, _, shuffle) = shapeOf("scan WAND")(scan.topDocs(disj, k))
     assert(jobs == 1 && stages == 2 && shuffle > 0, s"2-term WAND: $jobs jobs, $stages stages, $shuffle shuffle bytes")
   }
+
+  test("a Searcher without a manifest takes the scan path: same answers") {
+    // a copy of the index minus its manifest; no segment was merged away,
+    // so the unpinned Searcher sees the same segments and tombstones
+    val src = java.nio.file.Paths.get(dir)
+    val bare = java.nio.file.Files.createTempDirectory("graft-bare")
+    java.nio.file.Files.walk(src).forEach { p =>
+      val rel = src.relativize(p)
+      if (rel.toString.nonEmpty && !rel.startsWith("_meta"))
+        java.nio.file.Files.copy(p, bare.resolve(rel.toString))
+    }
+    val sr = new Searcher(spark, bare.toString)
+    assert(sr.indexMeta.isEmpty)
+    for ((name, q) <- routes) {
+      val (hits, cnt) = sr.topDocsWithCount(q, k)
+      val (want, wantCount) = resident.topDocsWithCount(q, k)
+      assert(key(hits) == key(want) && cnt == wantCount, s"$name without a manifest")
+    }
+  }
 }
