@@ -536,7 +536,8 @@ object IndexBuilder {
           .parquet(s"$indexDir/postings/batch=$b")
         phase("postings shuffle+write")
 
-        // term dictionary from the written blocks (128x smaller than postings)
+        // term dictionary from the written blocks (about 0.3-0.6x the
+        // postings' Parquet bytes on CorpusGen indexes of 500-8,000 docs)
         val postingsW = spark.read.parquet(s"$indexDir/postings/batch=$b")
         // blockLen is a scalar column, so this reads no posting arrays
         postingsW.groupBy($"segId", $"field", $"term")

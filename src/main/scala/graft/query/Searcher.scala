@@ -10,11 +10,14 @@ final case class Hit(segId: Int, docId: Int, score: Float)
 
 /** A pinned view over one committed index (the reference `Searcher`,
   * `src/core/searcher.rs`): global BM25 statistics are summed across
-  * segments (`bm25.rs:25-48`) on the driver — a tiny metadata job. The
-  * top-k collectors run executor kernels over a resident copy of the
-  * field's postings, or over a pruned scan when the copy does not fit
-  * (see [[postings]]); [[compile]] is a Catalyst Dataset pipeline over the
-  * segment tables.
+  * segments (`bm25.rs:25-48`) on the driver. When the field fits the
+  * resident gate (see [[postings]]), the Searcher holds its field's term
+  * dictionary on the driver, so a df lookup is a map read, and the top-k
+  * collectors run executor kernels over a resident copy of the field's
+  * postings, pruned to the segments holding a query term; above the gate
+  * df lookups read the cached termdict table and the collectors a pruned
+  * scan. [[compile]] is a Catalyst Dataset pipeline over the segment
+  * tables.
   *
   * All scoring on the tantivy-parity path is single-precision float in the
   * reference operation order; per-document combination across clauses sums in
@@ -60,22 +63,26 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * (field, term) / (segId, docId), and leaving them as plain Parquet scans
     * keeps Catalyst pushing those filters into the scan (PushedFilters +
     * row-group min/max pruning on the sort order the builder wrote).
-    * termdict (128x smaller than postings) and stats are cached: they serve
-    * the per-query df/N lookups, the hot metadata path.
+    * termdict (about 0.4x the postings' bytes on the `churn` benchmark
+    * index, 361,171 vs 860,995) and stats are cached tables: stats serve
+    * the N lookups, termdict the df lookups above the resident gate and the
+    * term-dictionary expansions.
     *
     * The collectors' kernels reach the field's postings only through
     * [[SegmentCollect.collect]], which reads the [[resident]] copy instead
     * when it fits: built once per Searcher, on its first collector query,
     * and cached `MEMORY_ONLY` in one partition per (segId, chunk)
-    * ([[SegmentCollect.buildResident]]). Its gate: the
-    * postings table's on-disk bytes times [[Searcher.ResidentExpansion]]
-    * must fit [[Searcher.ResidentShare]] of the storage memory Spark
-    * reports. Above it — at the north star's scale a per-Searcher copy of
-    * every posting is unaffordable — every query takes the pruned scan
-    * path. The copy lives as long as the Searcher: once the Searcher is
-    * unreachable, Spark's `ContextCleaner` unpersists it (and the block
-    * manager may evict it earlier under memory pressure; an evicted
-    * partition is rebuilt from the build's shuffle output).
+    * ([[SegmentCollect.buildResident]]). Its gate ([[fits]]): the postings
+    * table's on-disk bytes times [[Searcher.ResidentExpansion]], plus the
+    * termdict table's times [[Searcher.DictExpansion]] for the driver
+    * dictionary the same gate admits ([[dict]]), must fit
+    * [[Searcher.ResidentShare]] of the storage memory Spark reports. Above
+    * it — at the north star's scale a per-Searcher copy of every posting is
+    * unaffordable — every query takes the pruned scan path and every df
+    * lookup a termdict job. The copy lives as long as the Searcher: once
+    * the Searcher is unreachable, Spark's `ContextCleaner` unpersists it
+    * (and the block manager may evict it earlier under memory pressure; an
+    * evicted partition is rebuilt from the build's shuffle output).
     *
     * `allPostings` and `docmap` are the pinned tables as written, tombstoned
     * docs included: by-address reads (`fetch`, `mltSelect`, `Explain`,
@@ -144,8 +151,9 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     }: _*).where(size($"docIds") > 0)
   }
 
-  /** Test seam: true before the first collector query sends every
-    * collector down the scan path, as when the copy does not fit.
+  /** Test seam: true before the first collector query or df lookup sends
+    * every collector down the scan path and every df lookup to the termdict
+    * table, as when the field does not fit the gate.
     */
   private[graft] var forceScan: Boolean = false
 
@@ -155,15 +163,36 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     */
   private[graft] var chunkDocs: Int = SegmentCollect.DefaultChunkDocs
 
+  /** The resident gate (see [[postings]]), decided once per Searcher. */
+  private lazy val fits: Boolean = !forceScan && indexMeta.nonEmpty && {
+    val need = segStore.bytes(spark, "postings").toDouble * Searcher.ResidentExpansion +
+      segStore.bytes(spark, "termdict").toDouble * Searcher.DictExpansion
+    need <= spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum * Searcher.ResidentShare
+  }
+
   /** The resident copy of this field's alive postings, built on first use
     * when it passes the gate; None means the scan path.
     */
-  private[query] lazy val resident: Option[SegmentCollect.Groups] = {
-    def storage = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
-    def need = segStore.bytes(spark, "postings").toDouble * Searcher.ResidentExpansion
-    if (forceScan || indexMeta.isEmpty || need > storage * Searcher.ResidentShare) None
-    else Some(SegmentCollect.buildResident(this, positions = indexMeta.exists(_.withPositions)))
-  }
+  private[query] lazy val resident: Option[SegmentCollect.Resident] =
+    if (fits) Some(SegmentCollect.buildResident(this, positions = indexMeta.exists(_.withPositions)))
+    else None
+
+  /** This field's term dictionary on the driver, loaded on first use when
+    * the field passes the gate: one collect of the pinned termdict
+    * Parquet, filtered to the field.
+    */
+  private lazy val dict: Option[TermDict] =
+    if (!fits) None
+    else Some(TermDict(pin(segStore.read(spark, "termdict")).where($"field" === field)
+      .select($"term", $"segId", $"docFreq").as[(String, Int, Long)].collect()))
+
+  /** The segments holding at least one of `terms` in this field — every
+    * live segment when there is no driver dictionary. A tombstoned doc
+    * still counts in its segment's df, so this is a superset of the
+    * segments with live postings of `terms`.
+    */
+  private[query] def segmentsHolding(terms: Seq[String]): Set[Int] =
+    dict.fold(liveSegIds.toSet)(_.segmentsOf(terms))
 
   /** The docmap rows of live docs: what the docmap-driven leaves (AllQ,
     * RangeQ, ExistsQ) match.
@@ -234,34 +263,39 @@ class Searcher(val spark: SparkSession, val indexDir: String,
       if (p.docFreq(fld, t) > 0) Some(t -> Bm25.weightForTerm(p, fld, t)) else None
     }.toMap
 
-  /** Global doc_freq per term: per-segment df summed (`bm25.rs:45-48`).
-    * The per-segment rows are collected and summed on the driver — one
-    * single-stage job over the coalesced cached termdict instead of a
-    * groupBy's two-stage shuffle; the result is ≤ (#segments × #terms) tiny
-    * rows regardless of index size.
-    */
+  /** Resolved dfs of the termdict-table path, by (field, term). */
   private val dfCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
+  /** Global doc_freq per term, terms of df 0 left out: per-segment df
+    * summed (`bm25.rs:45-48`), tombstoned docs counted until merge. Two
+    * sources, the same numbers:
+    *  - [[field]], when it passes the resident gate: the driver dictionary
+    *    ([[dict]]), loaded once per Searcher — no Spark job per lookup, as
+    *    a df lookup in the reference is an in-process term-dictionary read.
+    *  - any other field, or above the gate: one job over the cached
+    *    [[termdict]] table (repartitioned to ~32 MB partitions) whose
+    *    per-segment rows are summed on the driver. The Searcher pins an
+    *    immutable snapshot, so each resolved df, 0 included, is cached and
+    *    a repeat lookup runs no job.
+    */
   def docFreqs(terms: Seq[String], fld: String = field): Map[String, Long] = {
     if (terms.isEmpty) return Map.empty
-    // the Searcher pins an immutable manifest snapshot, so a term's global
-    // df can never change under it — cache resolved dfs on the driver (the
-    // reference's analog is the mmap'd term dictionary: a repeat df lookup
-    // costs nanoseconds there and must not cost a Spark job here). A term
-    // absent from the index is cached as df 0 and filtered from the result.
-    val missing = terms.distinct.filterNot(t => dfCache.contains((fld, t)))
-    if (missing.nonEmpty) {
-      val fetched = termdict
-        .where($"field" === fld && $"term".isin(missing: _*))
-        .select($"term", $"docFreq")
-        .as[(String, Long)].collect()
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sum }
-      missing.foreach(t => dfCache.put((fld, t), fetched.getOrElse(t, 0L)))
+    val distinct = terms.distinct
+    val df: String => Long = (if (fld == field) dict else None) match {
+      case Some(d) => d.docFreq
+      case None =>
+        val missing = distinct.filterNot(t => dfCache.contains((fld, t)))
+        if (missing.nonEmpty) {
+          val fetched = termdict
+            .where($"field" === fld && $"term".isin(missing: _*))
+            .select($"term", $"docFreq")
+            .as[(String, Long)].collect()
+            .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sum }
+          missing.foreach(t => dfCache.put((fld, t), fetched.getOrElse(t, 0L)))
+        }
+        t => dfCache((fld, t))
     }
-    terms.distinct.flatMap { t =>
-      val df = dfCache((fld, t))
-      if (df > 0) Some(t -> df) else None
-    }.toMap
+    distinct.flatMap { t => val n = df(t); if (n > 0) Some(t -> n) else None }.toMap
   }
 
   def weightsFor(terms: Seq[String], fld: String = field): Map[String, Bm25.Weight] =
@@ -948,6 +982,11 @@ object Searcher {
     * positions, 23.3 without).
     */
   private final val ResidentExpansion: Double = 24.0
+  /** Driver bytes of the term dictionary ([[TermDict]], by `SizeEstimator`)
+    * per on-disk termdict byte: the largest ratio measured on CorpusGen
+    * indexes of 500 to 8,000 docs in 4 and 8 segments (8.7-10.8).
+    */
+  private final val DictExpansion: Double = 11.0
   /** The share of Spark's reported storage memory the copy may take. */
   private final val ResidentShare: Double = 0.25
 

@@ -3,8 +3,9 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.sum
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{Deletes, IndexBuilder, IndexConfig}
+import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig}
 import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ}
 
 /** The resident route: a Searcher's cached copy of its field's alive
@@ -15,7 +16,10 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ
   * scan path, and on the compile route; a resident query runs one job of
   * one stage that reads no Parquet and moves no shuffle bytes; and on the
   * scan path a query of one distinct term moves no shuffle bytes, while a
-  * multi-term WAND is one gather job.
+  * multi-term WAND is one gather job. The resident Searcher's df lookups
+  * read its driver-side term dictionary: a query over terms it has not
+  * seen yet is still one job, a lookup runs none, and every df equals the
+  * termdict table's, tombstoned docs counted.
   */
 class ResidentRouteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -32,7 +36,8 @@ class ResidentRouteSpec extends AnyFunSuite {
       ("r", f"p$i%04d", "c", "en", words.mkString(" "))
     }.toDF("repo", "path", "commit", "lang", "content")
     IndexBuilder.build(spark, docs, d,
-      IndexConfig(numSegments = 4, buildBatches = 2, withPositions = true))
+      IndexConfig(numSegments = 4, buildBatches = 2, withPositions = true,
+        extraFields = Seq(FieldDef.STRING("path"))))
     // tombstones: every doc of one full alpha block, and the lastDoc of another
     val clean = new Searcher(spark, d)
     val full = clean.postings.where($"field" === "content" && $"term" === "alpha" && $"blockLen" === 128)
@@ -67,7 +72,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     */
   private final class Shape extends SparkListener {
     @volatile var group: String = ""
-    val jobs, stages = new AtomicInteger
+    val jobs, stages, tasks = new AtomicInteger
     val shuffleWrite, shuffleRead = new AtomicLong
     val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -82,15 +87,17 @@ class ResidentRouteSpec extends AnyFunSuite {
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (mine.contains(e.stageId) && e.taskMetrics != null) {
+        tasks.incrementAndGet()
         shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
         shuffleRead.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
       }
   }
 
-  /** Run `f` in its own job group; its (jobs, stages, RDD names, shuffle
-    * bytes).
-    */
-  private def shapeOf(name: String)(f: => Any): (Int, Int, Set[String], Long) = {
+  /** What one job group ran. */
+  private final case class Ran(jobs: Int, stages: Int, rdds: Set[String], shuffle: Long, tasks: Int)
+
+  /** Run `f` in its own job group; what it ran. */
+  private def shapeOf(name: String)(f: => Any): Ran = {
     val sc = spark.sparkContext
     val l = new Shape
     l.group = s"resident-$name-${System.nanoTime()}"
@@ -99,8 +106,8 @@ class ResidentRouteSpec extends AnyFunSuite {
       sc.setJobGroup(l.group, name)
       try f finally sc.clearJobGroup()
       ListenerBusDrain(sc)
-      (l.jobs.get, l.stages.get, l.rdds.toArray(Array.empty[String]).toSet,
-        l.shuffleWrite.get + l.shuffleRead.get)
+      Ran(l.jobs.get, l.stages.get, l.rdds.toArray(Array.empty[String]).toSet,
+        l.shuffleWrite.get + l.shuffleRead.get, l.tasks.get)
     } finally sc.removeSparkListener(l)
   }
 
@@ -144,14 +151,14 @@ class ResidentRouteSpec extends AnyFunSuite {
     }
     for ((what, run) <- asked) {
       // a single term's count with deletes pinned counts the copy's entries
-      val (jobs, stages, rdds, shuffle) = shapeOf(what)(run())
+      val Ran(jobs, stages, rdds, shuffle, _) = shapeOf(what)(run())
       assert(jobs == 1 && stages == 1, s"$what: $jobs jobs, $stages stages")
       assert(rdds(name) && !rdds("FileScanRDD"), s"$what: ran $rdds")
       assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
     }
     // the forced scan path reads Parquet and shuffles
     warm(scan)
-    val (_, _, rdds, shuffle) = shapeOf("scan")(scan.topDocs(disj, k))
+    val Ran(_, _, rdds, shuffle, _) = shapeOf("scan")(scan.topDocs(disj, k))
     assert(rdds("FileScanRDD") && shuffle > 0, s"scan path ran $rdds, $shuffle shuffle bytes")
   }
 
@@ -167,7 +174,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     warm(scan)
     oneTerm.foreach(_._2()) // the first query reads the tombstones
     for ((what, run) <- oneTerm) {
-      val (jobs, _, rdds, shuffle) = shapeOf(s"scan $what")(run())
+      val Ran(jobs, _, rdds, shuffle, _) = shapeOf(s"scan $what")(run())
       assert(jobs == 1 && rdds("FileScanRDD"), s"$what: $jobs jobs, ran $rdds")
       assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
     }
@@ -176,8 +183,82 @@ class ResidentRouteSpec extends AnyFunSuite {
     assert(key(scan.topDocs(phrase, k)) == key(CompileRoute.topK(resident, phrase, k)))
     assert(scan.count(phrase) == wantCount && resident.count(phrase) == wantCount)
     // several terms: one gather job of two stages, with no threshold probe
-    val (jobs, stages, _, shuffle) = shapeOf("scan WAND")(scan.topDocs(disj, k))
+    val Ran(jobs, stages, _, shuffle, _) = shapeOf("scan WAND")(scan.topDocs(disj, k))
     assert(jobs == 1 && stages == 2 && shuffle > 0, s"2-term WAND: $jobs jobs, $stages stages, $shuffle shuffle bytes")
+  }
+
+  test("an unwarmed resident Searcher: unseen terms cost no df job, an absent term no job") {
+    val absent = TermQ("zzabsent")
+    for ((name, q) <- routes) {
+      // a fresh Searcher per route, opened on a term no route uses: the
+      // copy, the dictionary, the tombstones and the field statistics load
+      val cold = new Searcher(spark, dir)
+      cold.topDocs(TermQ("epsilon"), 1)
+      val asked: Seq[(String, () => Any)] = Seq(
+        s"$name topDocs" -> (() => cold.topDocs(q, k)),
+        s"$name topDocsWithCount" -> (() => cold.topDocsWithCount(q, k)),
+        s"$name count" -> (() => cold.count(q)))
+      for ((what, run) <- asked) {
+        val ran = shapeOf(s"cold $what")(run())
+        assert(ran.jobs == 1 && ran.stages == 1 && !ran.rdds("FileScanRDD"), s"cold $what: $ran")
+      }
+      if (name == "single term") {
+        val none: Seq[(String, () => Any)] = Seq(
+          "absent count" -> (() => assert(cold.count(absent) == 0L)),
+          "absent topDocs" -> (() => assert(cold.topDocs(absent, k).isEmpty)),
+          "absent conjunction" -> (() => assert(cold.count(BoolQ(Seq(
+            Occur.Must -> TermQ("alpha"), Occur.Must -> absent))) == 0L)),
+          "absent docFreqs" -> (() => assert(cold.docFreqs(Seq("zzabsent", "zzother")).isEmpty)),
+          "unseen docFreqs" -> (() => cold.docFreqs(Seq("delta", "rareterm", "id0001"))))
+        for ((what, run) <- none) {
+          val ran = shapeOf(s"cold $what")(run())
+          assert(ran.jobs == 0, s"cold $what: $ran")
+        }
+      }
+    }
+  }
+
+  test("a resident query runs only the partitions of segments holding its terms") {
+    // an id token lives in one segment; alpha in all four
+    val alive = (0 until 20).map(i => f"id$i%04d").find(t => resident.compile(TermQ(t)).count() == 1).get
+    resident.topDocs(TermQ("alpha"), k) // builds the copy
+    val one = shapeOf("one segment")(resident.topDocs(TermQ(alive), k))
+    assert(one.jobs == 1 && one.tasks == 1, s"one-segment term: $one")
+    val two = shapeOf("two terms")(resident.topDocsWithCount(
+      BoolQ(Seq(alive, "alpha").map(t => Occur.Should -> TermQ(t))), k))
+    assert(two.jobs == 1 && two.tasks == 4, s"alpha and an id token: $two")
+    assert(key(resident.topDocs(TermQ(alive), k)) == key(scan.topDocs(TermQ(alive), k)))
+  }
+
+  test("df parity: driver dictionary == termdict table, tombstones, absent and duplicate terms") {
+    // a fresh dictionary Searcher and a fresh table Searcher
+    val dict = new Searcher(spark, dir)
+    dict.docFreqs(Seq("alpha")) // loads the dictionary
+    val table = new Searcher(spark, dir)
+    table.forceScan = true
+    val all = table.allTerms.as[String].collect().toSeq.sorted
+    assert(all.length > 1200, s"${all.length} terms")
+    val asked = all ++ Seq("zzabsent", "", "ALPHA") ++ all.take(5) ++ Seq("alpha", "alpha")
+    val fromTable = table.docFreqs(asked)
+    val ran = shapeOf("dictionary docFreqs")(assert(dict.docFreqs(asked) == fromTable))
+    assert(ran.jobs == 0, s"dictionary lookups: $ran")
+    val want = table.termdict.where($"field" === "content").groupBy($"term").agg(sum($"docFreq"))
+      .as[(String, Long)].collect().toMap
+    assert(dict.docFreqs(asked) == want)
+    for (t <- asked.take(50) ++ asked.takeRight(10))
+      assert(dict.docFreq("content", t) == table.docFreq("content", t), t)
+    // tombstoned docs still count, as in the table
+    val liveAlpha = dict.compile(TermQ("alpha")).count()
+    assert(dict.docFreq("content", "alpha") > liveAlpha)
+    def bits(ws: Map[String, graft.score.Bm25.Weight]) = ws.map { case (t, w) =>
+      t -> (java.lang.Float.floatToRawIntBits(w.weight), w.cache.toSeq.map(java.lang.Float.floatToRawIntBits),
+        java.lang.Float.floatToRawIntBits(w.avgFieldnorm)) }
+    assert(bits(dict.weightsFromProvider(dict, asked)) == bits(table.weightsFromProvider(table, asked)))
+    // another field reads the termdict table on both
+    val paths = (0 until 1200 by 7).map(i => f"p$i%04d") ++ Seq("zz", "p0007")
+    val dictPaths = dict.docFreqs(paths, "path")
+    assert(dictPaths == table.docFreqs(paths, "path"))
+    assert(dictPaths.size == 172 && dictPaths.values.forall(_ == 1L), dictPaths)
   }
 
   test("a Searcher without a manifest takes the scan path: same answers") {
