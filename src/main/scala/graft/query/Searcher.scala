@@ -11,13 +11,12 @@ final case class Hit(segId: Int, docId: Int, score: Float)
 /** A pinned view over one committed index (the reference `Searcher`,
   * `src/core/searcher.rs`): global BM25 statistics are summed across
   * segments (`bm25.rs:25-48`) on the driver. When the field fits the
-  * resident gate (see [[postings]]), the Searcher holds its field's term
-  * dictionary on the driver, so a df lookup is a map read, and the top-k
-  * collectors run executor kernels over a resident copy of the field's
-  * postings, pruned to the segments holding a query term; above the gate
-  * df lookups read the cached termdict table and the collectors a pruned
-  * scan. [[compile]] is a Catalyst Dataset pipeline over the segment
-  * tables.
+  * resident gate (see [[postings]]), the top-k collectors run executor
+  * kernels over a resident copy of the field's postings, and the Searcher
+  * holds its field's term dictionary on the driver when that fits too, so
+  * a df lookup is a map read; otherwise df lookups read the cached
+  * termdict table and the collectors a pruned scan. [[compile]] is a
+  * Catalyst Dataset pipeline over the segment tables.
   *
   * All scoring on the tantivy-parity path is single-precision float in the
   * reference operation order; per-document combination across clauses sums in
@@ -73,13 +72,13 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * when it fits: built once per Searcher, on its first collector query,
     * and cached `MEMORY_ONLY` in one partition per (segId, chunk)
     * ([[SegmentCollect.buildResident]]). Its gate ([[fits]]): the postings
-    * table's on-disk bytes times [[Searcher.ResidentExpansion]], plus the
-    * termdict table's times [[Searcher.DictExpansion]] for the driver
-    * dictionary the same gate admits ([[dict]]), must fit
+    * table's on-disk bytes times [[Searcher.ResidentExpansion]] must fit
     * [[Searcher.ResidentShare]] of the storage memory Spark reports. Above
     * it — at the north star's scale a per-Searcher copy of every posting is
     * unaffordable — every query takes the pruned scan path and every df
-    * lookup a termdict job. The copy lives as long as the Searcher: once
+    * lookup of unseen terms a termdict job; below it the driver term
+    * dictionary ([[dict]]) answers df lookups when it passes its own gate
+    * on the driver heap. The copy lives as long as the Searcher: once
     * the Searcher is unreachable, Spark's `ContextCleaner` unpersists it
     * (and the block manager may evict it earlier under memory pressure; an
     * evicted partition is rebuilt from the build's shuffle output).
@@ -163,36 +162,40 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     */
   private[graft] var chunkDocs: Int = SegmentCollect.DefaultChunkDocs
 
-  /** The resident gate (see [[postings]]), decided once per Searcher. */
-  private lazy val fits: Boolean = !forceScan && indexMeta.nonEmpty && {
-    val need = segStore.bytes(spark, "postings").toDouble * Searcher.ResidentExpansion +
-      segStore.bytes(spark, "termdict").toDouble * Searcher.DictExpansion
-    need <= spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum * Searcher.ResidentShare
-  }
+  /** Test seam: the driver heap the dictionary gate ([[dict]]) weighs. */
+  private[graft] var driverMemory: Long = Runtime.getRuntime.maxMemory
 
   /** The resident copy of this field's alive postings, built on first use
     * when it passes the gate; None means the scan path.
     */
-  private[query] lazy val resident: Option[SegmentCollect.Resident] =
+  private[query] lazy val resident: Option[SegmentCollect.Groups] =
     if (fits) Some(SegmentCollect.buildResident(this, positions = indexMeta.exists(_.withPositions)))
     else None
 
-  /** This field's term dictionary on the driver, loaded on first use when
-    * the field passes the gate: one collect of the pinned termdict
-    * Parquet, filtered to the field.
-    */
-  private lazy val dict: Option[TermDict] =
-    if (!fits) None
-    else Some(TermDict(pin(segStore.read(spark, "termdict")).where($"field" === field)
-      .select($"term", $"segId", $"docFreq").as[(String, Int, Long)].collect()))
+  /** The resident copy's gate (see [[postings]]), decided once per Searcher. */
+  private lazy val fits: Boolean = !forceScan && indexMeta.nonEmpty && {
+    val need = segStore.bytes(spark, "postings").toDouble * Searcher.ResidentExpansion
+    need <= spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum * Searcher.ResidentShare
+  }
 
-  /** The segments holding at least one of `terms` in this field — every
-    * live segment when there is no driver dictionary. A tombstoned doc
-    * still counts in its segment's df, so this is a superset of the
-    * segments with live postings of `terms`.
+  /** This field's term dictionary on the driver ([[TermDict.load]]: one job
+    * over the pinned termdict Parquet, filtered to the field), loaded on
+    * first use when the field passes the resident copy's gate ([[fits]])
+    * and the dictionary its own, weighed on the JVM that holds it: the
+    * termdict table's bytes times [[Searcher.DictExpansion]], the driver's
+    * peak while loading, must fit [[Searcher.DictShare]] of the driver
+    * heap, and, as that peak holds the serialized results too,
+    * `spark.driver.maxResultSize`. Otherwise, and when the load fails, df
+    * lookups read the termdict table.
     */
-  private[query] def segmentsHolding(terms: Seq[String]): Set[Int] =
-    dict.fold(liveSegIds.toSet)(_.segmentsOf(terms))
+  private lazy val dict: Option[TermDict] = {
+    val need = segStore.bytes(spark, "termdict").toDouble * Searcher.DictExpansion
+    val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (!fits || need > driverMemory * Searcher.DictShare ||
+        (maxResult > 0 && need > maxResult)) None
+    else scala.util.Try(TermDict.load(pin(segStore.read(spark, "termdict")).where($"field" === field)
+      .select($"term", $"docFreq").as[(String, Long)])).toOption
+  }
 
   /** The docmap rows of live docs: what the docmap-driven leaves (AllQ,
     * RangeQ, ExistsQ) match.
@@ -269,10 +272,11 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** Global doc_freq per term, terms of df 0 left out: per-segment df
     * summed (`bm25.rs:45-48`), tombstoned docs counted until merge. Two
     * sources, the same numbers:
-    *  - [[field]], when it passes the resident gate: the driver dictionary
-    *    ([[dict]]), loaded once per Searcher — no Spark job per lookup, as
-    *    a df lookup in the reference is an in-process term-dictionary read.
-    *  - any other field, or above the gate: one job over the cached
+    *  - [[field]], when it passes the resident copy's gate and the
+    *    dictionary's: the driver dictionary ([[dict]]), loaded once per
+    *    Searcher — no Spark job per lookup, as a df lookup in the reference
+    *    is an in-process term-dictionary read.
+    *  - any other field, or above either gate: one job over the cached
     *    [[termdict]] table (repartitioned to ~32 MB partitions) whose
     *    per-segment rows are summed on the driver. The Searcher pins an
     *    immutable snapshot, so each resolved df, 0 included, is cached and
@@ -885,10 +889,11 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * no postings read (the reference's specialized term count reads the
     * same TermInfo). doc_freq counts tombstoned docs until merge, so with
     * deletes pinned a kernel on [[SegmentCollect.collect]] counts the
-    * term's live entries.
+    * term's live entries, unless the driver dictionary ([[dict]]) shows it
+    * has none.
     */
   def termHitCount(t: String): Long =
-    if (deadDocs.isEmpty) docFreqs(Seq(t)).getOrElse(t, 0L)
+    if (deadDocs.isEmpty || dict.exists(_.docFreq(t) == 0)) docFreqs(Seq(t)).getOrElse(t, 0L)
     else SegmentCollect.collect(this, Seq(t), positions = false, 1) { (_, byTerm) =>
       (Array.empty[Hit], byTerm(t).map(_.docIds.length.toLong).sum)
     }._2
@@ -982,13 +987,19 @@ object Searcher {
     * positions, 23.3 without).
     */
   private final val ResidentExpansion: Double = 24.0
-  /** Driver bytes of the term dictionary ([[TermDict]], by `SizeEstimator`)
-    * per on-disk termdict byte: the largest ratio measured on CorpusGen
-    * indexes of 500 to 8,000 docs in 4 and 8 segments (8.7-10.8).
-    */
-  private final val DictExpansion: Double = 11.0
   /** The share of Spark's reported storage memory the copy may take. */
   private final val ResidentShare: Double = 0.25
+  /** Driver bytes per on-disk termdict byte at the peak of
+    * [[TermDict.load]], a bound over `SizeEstimator` measurements on
+    * CorpusGen indexes of 500 to 20,000 docs in 4 and 8 segments: the
+    * finished dictionary takes 7.0-13.1, and the peak — one merge's two
+    * inputs and output plus a partition's serialized result (1.8-3.5) —
+    * 15.3-28.3. Two partitions that each held every term would need about
+    * 2.4 times the finished dictionary plus that result, 35.
+    */
+  private final val DictExpansion: Double = 36.0
+  /** The share of the driver heap the term dictionary's load may take. */
+  private final val DictShare: Double = 0.1
 
   /** The executor a collector query runs on, chosen by `route`. */
   private sealed trait Route

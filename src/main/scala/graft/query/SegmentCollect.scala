@@ -1,7 +1,7 @@
 package graft.query
 
 import org.apache.spark.{HashPartitioner, Partitioner}
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -20,8 +20,6 @@ import org.apache.spark.storage.StorageLevel
   *    holding every term's blocks — the reference's per-segment collector
   *    over an already open index (`searcher.rs:220`). The Searcher builds
   *    it on its first collector query when it fits in memory (its gate).
-  *    A query runs only the partitions of segments whose driver-side term
-  *    dictionary holds one of its terms.
   *  - **The scan path**, when there is no copy: one pruned Parquet scan of
   *    the query terms' blocks ([[scan]], row groups pruned on the (field,
   *    term) predicate). One distinct term needs no gather — a doc's
@@ -161,18 +159,14 @@ object SegmentCollect {
   private def gather(searcher: Searcher, rows: RDD[BlockRow], maxParts: Int): Groups = {
     val cw = searcher.chunkDocs
     val part = searcher.indexMeta.fold[Partitioner](new HashPartitioner(maxParts)) { m =>
-      new GroupPartitioner(groupKeys(m, cw).zipWithIndex.toMap, maxParts)
+      new GroupPartitioner(m.segments.flatMap { s =>
+        (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt))
+      }.zipWithIndex.toMap, maxParts)
     }
     rows.flatMap(slice(_, cw)).map(r => ((r.segId, chunkOf(r, cw)), r))
       .groupByKey(part)
       .map { case ((segId, _), rs) => (segId, byTerm(rs)) }
   }
-
-  /** The manifest's (segId, chunk) group keys at chunk width `cw`, in
-    * manifest order.
-    */
-  private def groupKeys(m: graft.index.Manifest.IndexMeta, cw: Int): Seq[(Int, Int)] =
-    m.segments.flatMap(s => (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt)))
 
   /** The manifest's (segId, chunk) keys dealt round-robin over at most
     * `maxParts` partitions; any other key is an error.
@@ -182,47 +176,32 @@ object SegmentCollect {
     def getPartition(key: Any): Int = keys(key.asInstanceOf[(Int, Int)]) % numPartitions
   }
 
-  /** The resident copy: its cached groups, one partition per (segId,
-    * chunk) key, and `segIds(i)`, the segment of partition `i`'s group.
-    */
-  final case class Resident(groups: Groups, segIds: Array[Int])
-
   /** Build the resident copy of `searcher`'s field: the [[gather]] of its
     * alive postings (with CSR positions when `positions`), cached
-    * `MEMORY_ONLY` — one job, which this runs. With no cap on the partition
-    * count, partition `i` holds group key `i`.
+    * `MEMORY_ONLY` — one job, which this runs.
     */
-  def buildResident(searcher: Searcher, positions: Boolean): Resident = {
+  def buildResident(searcher: Searcher, positions: Boolean): Groups = {
     import searcher.spark.implicits._
     val copy = gather(searcher, blockRows(searcher.postings.where($"field" === searcher.field), positions).rdd,
       maxParts = Int.MaxValue)
       .setName(s"resident postings ${searcher.indexDir} ${searcher.field}")
       .persist(StorageLevel.MEMORY_ONLY)
     copy.count()
-    Resident(copy, groupKeys(searcher.indexMeta.get, searcher.chunkDocs).map(_._1).toArray)
+    copy
   }
 
   /** The one way a kernel reaches posting blocks: run `kernel(segId, byTerm
     * restricted to terms)` per group of `searcher`'s resident copy, or,
     * when it has none, of the scan path's groups (`positions` shapes the
-    * scan); a group holding none of the terms yields no fruit. On the copy
-    * only the partitions of segments holding a query term run
-    * ([[Searcher.segmentsHolding]]), and when there are none no job runs.
-    * [[merge]] folds the fruits into the global top `k` and the summed
-    * count.
+    * scan); a group holding none of the terms yields no fruit. [[merge]]
+    * folds the fruits into the global top `k` and the summed count.
     */
   def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int)(kernel: Kernel): Fruit = {
-    val groups = searcher.resident match {
-      case Some(Resident(copy, segIds)) =>
-        val holding = searcher.segmentsHolding(terms)
-        val pruned = PartitionPruningRDD.create(copy, i => segIds.lift(i).exists(holding))
-        if (pruned.partitions.isEmpty) return merge(Array.empty, k)
-        pruned
-      case None =>
-        val rows = scan(searcher, terms, positions).rdd
-        if (terms.distinct.length == 1)
-          rows.mapPartitions(_.toSeq.groupBy(_.segId).iterator.map { case (s, rs) => s -> byTerm(rs) })
-        else gather(searcher, rows, searcher.spark.sparkContext.defaultParallelism)
+    val groups = searcher.resident.getOrElse {
+      val rows = scan(searcher, terms, positions).rdd
+      if (terms.distinct.length == 1)
+        rows.mapPartitions(_.toSeq.groupBy(_.segId).iterator.map { case (s, rs) => s -> byTerm(rs) })
+      else gather(searcher, rows, searcher.spark.sparkContext.defaultParallelism)
     }
     val fruits = groups.flatMap { case (segId, all) =>
       val mine = terms.flatMap(t => all.get(t).map(t -> _)).toMap

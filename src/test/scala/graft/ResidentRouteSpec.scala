@@ -19,7 +19,9 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ
   * multi-term WAND is one gather job. The resident Searcher's df lookups
   * read its driver-side term dictionary: a query over terms it has not
   * seen yet is still one job, a lookup runs none, and every df equals the
-  * termdict table's, tombstoned docs counted.
+  * termdict table's, tombstoned docs counted; a dictionary over its gate
+  * on the driver heap leaves df lookups on the termdict table and the
+  * collectors on the copy.
   */
 class ResidentRouteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -72,7 +74,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     */
   private final class Shape extends SparkListener {
     @volatile var group: String = ""
-    val jobs, stages, tasks = new AtomicInteger
+    val jobs, stages = new AtomicInteger
     val shuffleWrite, shuffleRead = new AtomicLong
     val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -87,17 +89,15 @@ class ResidentRouteSpec extends AnyFunSuite {
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (mine.contains(e.stageId) && e.taskMetrics != null) {
-        tasks.incrementAndGet()
         shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
         shuffleRead.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
       }
   }
 
-  /** What one job group ran. */
-  private final case class Ran(jobs: Int, stages: Int, rdds: Set[String], shuffle: Long, tasks: Int)
-
-  /** Run `f` in its own job group; what it ran. */
-  private def shapeOf(name: String)(f: => Any): Ran = {
+  /** Run `f` in its own job group; its (jobs, stages, RDD names, shuffle
+    * bytes).
+    */
+  private def shapeOf(name: String)(f: => Any): (Int, Int, Set[String], Long) = {
     val sc = spark.sparkContext
     val l = new Shape
     l.group = s"resident-$name-${System.nanoTime()}"
@@ -106,8 +106,8 @@ class ResidentRouteSpec extends AnyFunSuite {
       sc.setJobGroup(l.group, name)
       try f finally sc.clearJobGroup()
       ListenerBusDrain(sc)
-      Ran(l.jobs.get, l.stages.get, l.rdds.toArray(Array.empty[String]).toSet,
-        l.shuffleWrite.get + l.shuffleRead.get, l.tasks.get)
+      (l.jobs.get, l.stages.get, l.rdds.toArray(Array.empty[String]).toSet,
+        l.shuffleWrite.get + l.shuffleRead.get)
     } finally sc.removeSparkListener(l)
   }
 
@@ -151,14 +151,14 @@ class ResidentRouteSpec extends AnyFunSuite {
     }
     for ((what, run) <- asked) {
       // a single term's count with deletes pinned counts the copy's entries
-      val Ran(jobs, stages, rdds, shuffle, _) = shapeOf(what)(run())
+      val (jobs, stages, rdds, shuffle) = shapeOf(what)(run())
       assert(jobs == 1 && stages == 1, s"$what: $jobs jobs, $stages stages")
       assert(rdds(name) && !rdds("FileScanRDD"), s"$what: ran $rdds")
       assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
     }
     // the forced scan path reads Parquet and shuffles
     warm(scan)
-    val Ran(_, _, rdds, shuffle, _) = shapeOf("scan")(scan.topDocs(disj, k))
+    val (_, _, rdds, shuffle) = shapeOf("scan")(scan.topDocs(disj, k))
     assert(rdds("FileScanRDD") && shuffle > 0, s"scan path ran $rdds, $shuffle shuffle bytes")
   }
 
@@ -174,7 +174,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     warm(scan)
     oneTerm.foreach(_._2()) // the first query reads the tombstones
     for ((what, run) <- oneTerm) {
-      val Ran(jobs, _, rdds, shuffle, _) = shapeOf(s"scan $what")(run())
+      val (jobs, _, rdds, shuffle) = shapeOf(s"scan $what")(run())
       assert(jobs == 1 && rdds("FileScanRDD"), s"$what: $jobs jobs, ran $rdds")
       assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
     }
@@ -183,7 +183,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     assert(key(scan.topDocs(phrase, k)) == key(CompileRoute.topK(resident, phrase, k)))
     assert(scan.count(phrase) == wantCount && resident.count(phrase) == wantCount)
     // several terms: one gather job of two stages, with no threshold probe
-    val Ran(jobs, stages, _, shuffle, _) = shapeOf("scan WAND")(scan.topDocs(disj, k))
+    val (jobs, stages, _, shuffle) = shapeOf("scan WAND")(scan.topDocs(disj, k))
     assert(jobs == 1 && stages == 2 && shuffle > 0, s"2-term WAND: $jobs jobs, $stages stages, $shuffle shuffle bytes")
   }
 
@@ -199,8 +199,8 @@ class ResidentRouteSpec extends AnyFunSuite {
         s"$name topDocsWithCount" -> (() => cold.topDocsWithCount(q, k)),
         s"$name count" -> (() => cold.count(q)))
       for ((what, run) <- asked) {
-        val ran = shapeOf(s"cold $what")(run())
-        assert(ran.jobs == 1 && ran.stages == 1 && !ran.rdds("FileScanRDD"), s"cold $what: $ran")
+        val (jobs, stages, rdds, _) = shapeOf(s"cold $what")(run())
+        assert(jobs == 1 && stages == 1 && !rdds("FileScanRDD"), s"cold $what: $jobs jobs, $stages stages, ran $rdds")
       }
       if (name == "single term") {
         val none: Seq[(String, () => Any)] = Seq(
@@ -211,23 +211,11 @@ class ResidentRouteSpec extends AnyFunSuite {
           "absent docFreqs" -> (() => assert(cold.docFreqs(Seq("zzabsent", "zzother")).isEmpty)),
           "unseen docFreqs" -> (() => cold.docFreqs(Seq("delta", "rareterm", "id0001"))))
         for ((what, run) <- none) {
-          val ran = shapeOf(s"cold $what")(run())
-          assert(ran.jobs == 0, s"cold $what: $ran")
+          val (jobs, _, _, _) = shapeOf(s"cold $what")(run())
+          assert(jobs == 0, s"cold $what: $jobs jobs")
         }
       }
     }
-  }
-
-  test("a resident query runs only the partitions of segments holding its terms") {
-    // an id token lives in one segment; alpha in all four
-    val alive = (0 until 20).map(i => f"id$i%04d").find(t => resident.compile(TermQ(t)).count() == 1).get
-    resident.topDocs(TermQ("alpha"), k) // builds the copy
-    val one = shapeOf("one segment")(resident.topDocs(TermQ(alive), k))
-    assert(one.jobs == 1 && one.tasks == 1, s"one-segment term: $one")
-    val two = shapeOf("two terms")(resident.topDocsWithCount(
-      BoolQ(Seq(alive, "alpha").map(t => Occur.Should -> TermQ(t))), k))
-    assert(two.jobs == 1 && two.tasks == 4, s"alpha and an id token: $two")
-    assert(key(resident.topDocs(TermQ(alive), k)) == key(scan.topDocs(TermQ(alive), k)))
   }
 
   test("df parity: driver dictionary == termdict table, tombstones, absent and duplicate terms") {
@@ -240,8 +228,8 @@ class ResidentRouteSpec extends AnyFunSuite {
     assert(all.length > 1200, s"${all.length} terms")
     val asked = all ++ Seq("zzabsent", "", "ALPHA") ++ all.take(5) ++ Seq("alpha", "alpha")
     val fromTable = table.docFreqs(asked)
-    val ran = shapeOf("dictionary docFreqs")(assert(dict.docFreqs(asked) == fromTable))
-    assert(ran.jobs == 0, s"dictionary lookups: $ran")
+    val (jobs, _, _, _) = shapeOf("dictionary docFreqs")(assert(dict.docFreqs(asked) == fromTable))
+    assert(jobs == 0, s"dictionary lookups: $jobs jobs")
     val want = table.termdict.where($"field" === "content").groupBy($"term").agg(sum($"docFreq"))
       .as[(String, Long)].collect().toMap
     assert(dict.docFreqs(asked) == want)
@@ -259,6 +247,27 @@ class ResidentRouteSpec extends AnyFunSuite {
     val dictPaths = dict.docFreqs(paths, "path")
     assert(dictPaths == table.docFreqs(paths, "path"))
     assert(dictPaths.size == 172 && dictPaths.values.forall(_ == 1L), dictPaths)
+  }
+
+  test("a dictionary over its driver gate: the copy stays, df lookups read the termdict table") {
+    val dict = new Searcher(spark, dir)
+    val over = new Searcher(spark, dir)
+    over.driverMemory = 1L // no dictionary fits in a one-byte driver heap
+    val asked = Seq("alpha", "beta", "rareterm", "zzabsent", "alpha", "id0001")
+    val (jobs, _, _, _) = shapeOf("over the gate docFreqs")(assert(over.docFreqs(asked) == dict.docFreqs(asked)))
+    assert(jobs >= 1, "a df lookup over the gate reads the termdict table")
+    val (again, _, _, _) = shapeOf("over the gate repeat")(over.docFreqs(asked))
+    assert(again == 0, s"a repeat lookup: $again jobs")
+    for (t <- asked) assert(over.docFreq("content", t) == dict.docFreq("content", t), t)
+    // the collectors still read the resident copy, with the same answers
+    for ((name, q) <- routes) {
+      val (hits, cnt) = over.topDocsWithCount(q, k)
+      val (want, wantCount) = dict.topDocsWithCount(q, k)
+      assert(key(hits) == key(want) && cnt == wantCount, s"$name over the dictionary gate")
+    }
+    val copy = s"resident postings $dir content"
+    val (_, _, rdds, _) = shapeOf("over the gate query")(over.topDocs(TermQ("epsilon"), k))
+    assert(rdds(copy) && !rdds("FileScanRDD"), s"over the gate ran $rdds")
   }
 
   test("a Searcher without a manifest takes the scan path: same answers") {
