@@ -59,7 +59,7 @@ final class GraftIndex(val spark: SparkSession, val dir: String, val cfg: IndexC
     IndexBuilder.append(spark, docs, dir, cfg)
 
   /** Tombstone every doc matching `q`; visible to new searchers. */
-  def delete(q: Query): Long = Deletes.deleteByQuery(spark, dir, q)
+  def delete(q: Query): Long = Deletes.deleteByQuery(spark, dir, q, cfg.field)
 
   /** `IndexWriter::rollback` (`src/indexer/index_writer.rs:564-577`):
     * discard everything since the last commit — orphan `batch=<b>` dirs
@@ -79,11 +79,12 @@ final class GraftIndex(val spark: SparkSession, val dir: String, val cfg: IndexC
     */
   def registerWarmer(w: Warmer): Unit = warmers.add(w)
 
-  /** A pinned snapshot over the current manifest (`Index::reader`): default
-    * warming materializes the termdict/stats caches (the reference mmap +
-    * hot-metadata equivalent); registered warmers then run, and each is told
-    * the new generation is the only live one (single-snapshot reader
-    * semantics — the reference GC's against all inventoried generations).
+  /** A pinned snapshot over the current manifest (`Index::reader`). Opening
+    * one reads only the manifest; the tables, the termdict/stats caches and
+    * the resident copy load on the first query that needs them. Registered
+    * warmers then run, and each is told the new generation is the only live
+    * one (single-snapshot reader semantics — the reference GC's against all
+    * inventoried generations); a warmer that queries loads those caches.
     */
   def searcher: Searcher = {
     val sr = new Searcher(spark, dir, cfg.field)

@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Delete tombstones (`IndexWriter::delete_term` / `delete_query`,
@@ -17,17 +18,35 @@ import org.apache.spark.sql.functions._
   */
 object Deletes {
 
-  /** Record tombstones for every doc matched by `q` (delete_query). The
-    * matching runs against the CURRENT index state (deletes already applied
-    * — deleting twice is a no-op). Appends to the deletes table.
+  /** Record tombstones for every doc matched by `q` in `field` (delete_query).
+    * The matching runs against the CURRENT index state (deletes already
+    * applied — deleting twice is a no-op). Appends to the deletes table.
+    * The query plan runs once, as the reference's `delete_query` runs its
+    * query once (`index_writer.rs:680,698`): the matches are written to an
+    * underscore-prefixed staging directory, counted on the way by an
+    * [[Observation]], and their part files move into `deletes/` only when
+    * the count is above 0, so a delete that matches nothing leaves the
+    * table, and with it [[stamp]], untouched.
     */
   def deleteByQuery(spark: SparkSession, indexDir: String,
-                    q: graft.query.Query): Long = {
-    val sr = new graft.query.Searcher(spark, indexDir)
-    val victims = sr.compile(q).select(col("segId"), col("docId")).distinct()
-    val n = victims.count()
-    if (n > 0) victims.write.mode("append").parquet(s"$indexDir/deletes")
-    n
+                    q: graft.query.Query, field: String = "content"): Long = {
+    val sr = new graft.query.Searcher(spark, indexDir, field)
+    val seen = Observation()
+    val staging = new Path(s"$indexDir/_deletes-${java.util.UUID.randomUUID()}")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      sr.compile(q).select(col("segId"), col("docId")).distinct()
+        .observe(seen, count(lit(1)).as("n"))
+        .write.parquet(staging.toString)
+      val n = seen.get("n").asInstanceOf[Long]
+      if (n > 0) {
+        val table = new Path(s"$indexDir/deletes")
+        fs.mkdirs(table)
+        fs.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("part-"))
+          .foreach(p => require(fs.rename(p, new Path(table, p.getName)), s"cannot move $p into $table"))
+      }
+      n
+    } finally fs.delete(staging, true)
   }
 
   /** delete_term convenience. */

@@ -363,7 +363,9 @@ object IndexBuilder {
           .parquet(s"$indexDir/docmap/batch=$b")
         phase("docmap write (analyze+window)")
 
-        val docmapW = spark.read.parquet(s"$indexDir/docmap/batch=$b")
+        // re-reads of what this batch just wrote pass the written frame's
+        // schema, so they run no schema-inference job
+        val docmapW = spark.read.schema(docmap.schema).parquet(s"$indexDir/docmap/batch=$b")
 
         // The postings pass reads (segId, docId, content) back from the
         // just-written docmap (the docstore) instead of branching off `base`:
@@ -538,14 +540,14 @@ object IndexBuilder {
 
         // term dictionary from the written blocks (about 0.3-0.6x the
         // postings' Parquet bytes on CorpusGen indexes of 500-8,000 docs)
-        val postingsW = spark.read.parquet(s"$indexDir/postings/batch=$b")
+        val postingsW = spark.read.schema(blocks.schema).parquet(s"$indexDir/postings/batch=$b")
         // blockLen is a scalar column, so this reads no posting arrays
-        postingsW.groupBy($"segId", $"field", $"term")
+        val termdict = postingsW.groupBy($"segId", $"field", $"term")
           .agg(sum($"blockLen").as("docFreq"), count(lit(1)).cast("int").as("numBlocks"))
-          .write.mode("overwrite").parquet(s"$indexDir/termdict/batch=$b")
+        termdict.write.mode("overwrite").parquet(s"$indexDir/termdict/batch=$b")
         phase("termdict")
 
-        val termCounts = spark.read.parquet(s"$indexDir/termdict/batch=$b")
+        val termCounts = spark.read.schema(termdict.schema).parquet(s"$indexDir/termdict/batch=$b")
           .groupBy($"segId").agg(count(lit(1)).as("terms"))
           .as[(Int, Long)].collect().toMap
         phase("termCounts collect")

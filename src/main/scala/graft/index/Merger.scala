@@ -84,11 +84,11 @@ object Merger {
     // `IndexMerger::write`, `merger.rs:148`); surviving docs get fresh dense
     // ids, and the tombstones die with the old segIds (pin() keys the
     // deletes table by live segments).
-    val delFile = new java.io.File(s"$indexDir/deletes")
+    val store = new ParquetSegmentStore(indexDir)
     val tombstones: Option[DataFrame] =
-      if (!delFile.exists()) None
+      if (!store.exists(spark, "deletes")) None
       else {
-        val d = spark.read.parquet(delFile.toString)
+        val d = store.read(spark, "deletes")
           .where($"segId".isin(sources: _*))
           .select($"segId", $"docId").distinct().cache()
         if (d.isEmpty) None else Some(d)
@@ -119,14 +119,14 @@ object Merger {
         // startRank(field, term, seg) = prefix sum of doc_freq over segment
         // order — ALL fields merge in one pass (each field's posting space is
         // disjoint under the (field, term) key)
-        val td = spark.read.parquet(s"$indexDir/termdict")
+        val td = store.read(spark, "termdict")
           .where($"segId".isin(sources: _*))
         val w = Window.partitionBy($"field", $"term").orderBy($"segId")
           .rowsBetween(Window.unboundedPreceding, -1)
         val startRanks = td.select($"segId", $"field", $"term",
           coalesce(sum($"docFreq").over(w), lit(0L)).as("startRank"))
 
-        val ex = spark.read.parquet(s"$indexDir/postings")
+        val ex = store.read(spark, "postings")
           .where($"segId".isin(sources: _*))
           .select($"segId", $"field", $"term", $"blockId",
             posexplode(arrays_zip($"docIds", $"tfs", $"normIds", $"positions")).as(Seq("pos", "p")))
@@ -137,7 +137,7 @@ object Merger {
             $"p.tfs".as("tf"), $"p.normIds".as("normId"), $"p.positions".as("positions"))
 
         // merged per-field stats: exact by summation of the source rows
-        val mergedStats = spark.read.parquet(s"$indexDir/stats")
+        val mergedStats = store.read(spark, "stats")
           .where($"segId".isin(sources: _*))
           .groupBy($"field")
           .agg(sum($"totalNumTokens").as("tt"), sum($"numDocs").as("nd"))
@@ -205,7 +205,7 @@ object Merger {
 
         val aliveRows = aliveCounts.values.sum
 
-        val joined = spark.read.parquet(s"$indexDir/postings")
+        val joined = store.read(spark, "postings")
           .where($"segId".isin(sources: _*))
           .select($"segId".as("srcSegId"), $"field", $"term",
             posexplode(arrays_zip($"docIds", $"tfs", $"normIds", $"positions")).as(Seq("pos", "p")))
@@ -278,12 +278,13 @@ object Merger {
       .option("parquet.block.size", IndexBuilder.PRUNE_BLOCK_BYTES)
       .parquet(s"$indexDir/postings/batch=$newBatch")
 
-    val postingsW = spark.read.parquet(s"$indexDir/postings/batch=$newBatch")
-    postingsW.groupBy($"segId", $"field", $"term")
+    // re-reads of what this merge just wrote pass the written frame's schema
+    val postingsW = spark.read.schema(blocks.schema).parquet(s"$indexDir/postings/batch=$newBatch")
+    val termdict = postingsW.groupBy($"segId", $"field", $"term")
       .agg(sum($"blockLen").as("docFreq"), count(lit(1)).cast("int").as("numBlocks"))
-      .write.mode("overwrite").parquet(s"$indexDir/termdict/batch=$newBatch")
+    termdict.write.mode("overwrite").parquet(s"$indexDir/termdict/batch=$newBatch")
 
-    val terms = spark.read.parquet(s"$indexDir/termdict/batch=$newBatch").count()
+    val terms = spark.read.schema(termdict.schema).parquet(s"$indexDir/termdict/batch=$newBatch").count()
     val wallMs = (System.nanoTime() - t0) / 1000000
     val mergedMeta = SegmentMeta(newSegId, newBatch, mergedRows, mergedTokens,
       terms, wallMs, srcMetas.forall(_.sha256ok))

@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Storage seam promised by SURVEY §7 — the analog of the reference's
   * `Directory` abstraction (`src/directory/mod.rs`): the query side
@@ -24,6 +25,22 @@ trait SegmentStore {
   def bytes(spark: SparkSession, component: String): Long
 }
 
+object SegmentStore {
+  /** The schema the builder, `Merger` and `Deletes` write a component's
+    * files with (the reference keeps it in `meta.json`,
+    * `index_meta.rs:301-312`), without the `batch` partition column, which
+    * the read discovers from the paths; None for docmap.
+    */
+  def schemaOf(component: String): Option[StructType] = component match {
+    case "postings" => Some(Encoders.product[PostingBlock].schema)
+    case "termdict" => Some(Encoders.product[TermDictRow].schema)
+    case "stats" => Some(Encoders.product[StatsRow].schema)
+    case "deletes" => Some(StructType(Seq(
+      StructField("segId", IntegerType), StructField("docId", IntegerType))))
+    case _ => None
+  }
+}
+
 /** The default store: the builder's Parquet directory layout, sized and
   * probed through the Hadoop FS abstraction (local disk, HDFS, or s3a —
   * whatever the path's scheme resolves to).
@@ -31,8 +48,12 @@ trait SegmentStore {
 class ParquetSegmentStore(val indexDir: String) extends SegmentStore {
   protected def path(component: String) = s"$indexDir/$component"
 
+  /** Reads with the component's declared schema ([[SegmentStore.schemaOf]]),
+    * so opening a table runs no schema-inference job; docmap, whose
+    * extra-field columns vary per index, is inferred.
+    */
   override def read(spark: SparkSession, component: String): DataFrame =
-    spark.read.parquet(path(component))
+    SegmentStore.schemaOf(component).fold(spark.read)(spark.read.schema(_)).parquet(path(component))
 
   override def exists(spark: SparkSession, component: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path(component))

@@ -981,12 +981,14 @@ class Searcher(val spark: SparkSession, val indexDir: String,
 }
 
 object Searcher {
-  /** In-memory bytes of the resident copy per on-disk postings byte: the
-    * largest ratio of its cached `memSize` to the postings' Parquet bytes
-    * measured on CorpusGen indexes of 500 to 8,000 docs (18.5-20.4 with
-    * positions, 23.3 without).
+  /** In-memory bytes of the resident copy per on-disk postings byte: a
+    * bound over the ratio of its cached `memSize` to the postings table's
+    * bytes, measured on CorpusGen indexes of 500 to 8,000 docs in 4
+    * segments with the packed groups ([[SegmentCollect.Group]]): 7.1-8.3
+    * with positions, 7.8-9.4 without, falling as the index grows (a copy
+    * of one `BlockRow` object per block took 17.1-20.4 and 20.5-24.8).
     */
-  private final val ResidentExpansion: Double = 24.0
+  private final val ResidentExpansion: Double = 10.0
   /** The share of Spark's reported storage memory the copy may take. */
   private final val ResidentShare: Double = 0.25
   /** Driver bytes per on-disk termdict byte at the peak of

@@ -28,9 +28,11 @@ import org.apache.spark.storage.StorageLevel
   *    through the same [[gather]] that builds the copy.
   *
   * The gather cuts blocks into docId-range chunks of the Searcher's chunk
-  * width ([[slice]]) and groups them per (segId, chunk). The copy keeps
-  * each group in its own partition, its caching unit; the scan path deals
-  * its groups over the cluster's task slots: on a 600k-doc, 32-segment
+  * width ([[slice]]), packs each scan partition's blocks per (segId, chunk)
+  * into a [[Group]] before its shuffle, and merges a group's packed pieces
+  * after it. The copy keeps each group in its own partition, its caching
+  * unit; the scan path deals its groups over the cluster's task slots: on
+  * a 600k-doc, 32-segment
   * index on 4 cores, a task per group made multi-term queries ~10% slower,
   * the extra tasks costing more in scheduling than they gained in
   * parallelism. Chunking is sound because a doc's score and match are
@@ -46,7 +48,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object SegmentCollect {
 
-  /** One posting block as the stage carries it. Positions ride in CSR form,
+  /** One posting block as the scan reads it and a kernel receives it (a
+    * [[Group]] holds its blocks packed). Positions ride in CSR form,
     * one flat array plus per-doc lengths, because the nested
     * `Array[Array[Int]]` shape pays a per-inner-array encoder cost for
     * every posting of a hot term; both are empty when positions were not
@@ -67,10 +70,105 @@ object SegmentCollect {
     */
   type Kernel = (Int, Map[String, Array[BlockRow]]) => Fruit
 
-  /** Groups as a kernel reads them: a segId and its terms' blocks, as
-    * [[byTerm]] gives them. The resident copy is one such RDD, cached.
+  /** One (segId, chunk) group's blocks, packed term-sorted into flat
+    * primitive arrays — the reference's contiguous posting blocks
+    * (`serializer.rs:339-451`) and the columnar in-memory posting layout of
+    * "Columnar Formatted Inverted Index" (ICDE 2025, PAPERS.md) — so the
+    * resident copy caches, sizes and ships a handful of arrays per group
+    * instead of an object per block. Term `i`'s blocks are
+    * `[termStart(i), termStart(i + 1))` in blockId order; block `b`'s
+    * entries are `[docStart(b), docStart(b + 1))` of `docIds`/`tfs`/
+    * `normIds`; with positions, entry `e`'s are `[posStart(e),
+    * posStart(e + 1))` of `posFlat` (CSR), and `posStart` is empty without.
     */
-  type Groups = RDD[(Int, Map[String, Array[BlockRow]])]
+  final class Group private (val segId: Int, val hasPositions: Boolean,
+                             terms: Array[String], termStart: Array[Int],
+                             blockIds: Array[Int], lastDocs: Array[Int],
+                             maxNormIds: Array[Int], maxTfs: Array[Int],
+                             docStart: Array[Int], docIds: Array[Int], tfs: Array[Int],
+                             normIds: Array[Int], posStart: Array[Int], posFlat: Array[Int])
+      extends Serializable {
+
+    /** Term `t`'s blocks in blockId order, copied out as [[BlockRow]]s
+      * (with CSR positions when `positions` and the group holds them);
+      * None when the group holds no block of `t`.
+      */
+    def blocks(t: String, positions: Boolean): Option[Array[BlockRow]] = {
+      val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], t)
+      if (i < 0) None
+      else Some(Array.tabulate(termStart(i + 1) - termStart(i))(j => row(t, termStart(i) + j, positions)))
+    }
+
+    /** Every block, term by term, positions included when held. */
+    def rows: Iterator[BlockRow] =
+      terms.indices.iterator.flatMap(i => (termStart(i) until termStart(i + 1)).iterator.map(row(terms(i), _, true)))
+
+    private def row(t: String, b: Int, positions: Boolean): BlockRow = {
+      import java.util.Arrays.copyOfRange
+      val (from, until) = (docStart(b), docStart(b + 1))
+      val (pf, pl) =
+        if (!positions || !hasPositions) (Array.emptyIntArray, Array.emptyIntArray)
+        else (copyOfRange(posFlat, posStart(from), posStart(until)),
+          Array.tabulate(until - from)(e => posStart(from + e + 1) - posStart(from + e)))
+      BlockRow(segId, t, blockIds(b), lastDocs(b), maxNormIds(b), maxTfs(b),
+        copyOfRange(docIds, from, until), copyOfRange(tfs, from, until),
+        copyOfRange(normIds, from, until), pf, pl)
+    }
+  }
+
+  object Group {
+    /** Pack `rows` of one segment, distinct by (term, blockId), into a
+      * group; with `positions`, a row without positions holds none per
+      * entry.
+      */
+    def pack(segId: Int, positions: Boolean, rows: Array[BlockRow]): Group = {
+      val bs = rows.sortWith((a, b) => a.term.compareTo(b.term) match {
+        case 0 => a.blockId < b.blockId
+        case c => c < 0
+      })
+      val has = bs.map(r => positions && r.posLens.length == r.docIds.length)
+      val n = bs.length
+      val nDocs = bs.map(_.docIds.length).sum
+      val terms = Array.newBuilder[String]
+      val termStart = new scala.collection.mutable.ArrayBuilder.ofInt
+      val (blockIds, lastDocs, maxNormIds, maxTfs) = (new Array[Int](n), new Array[Int](n), new Array[Int](n), new Array[Int](n))
+      val docStart = new Array[Int](n + 1)
+      val (docIds, tfs, normIds) = (new Array[Int](nDocs), new Array[Int](nDocs), new Array[Int](nDocs))
+      val posStart = new Array[Int](if (positions) nDocs + 1 else 0)
+      val posFlat = new Array[Int](bs.indices.map(b => if (has(b)) bs(b).posFlat.length else 0).sum)
+      var b = 0
+      while (b < n) {
+        val r = bs(b)
+        if (b == 0 || r.term != bs(b - 1).term) { terms += r.term; termStart += b }
+        blockIds(b) = r.blockId; lastDocs(b) = r.lastDoc; maxNormIds(b) = r.maxNormId; maxTfs(b) = r.maxTf
+        val (from, len) = (docStart(b), r.docIds.length)
+        System.arraycopy(r.docIds, 0, docIds, from, len)
+        System.arraycopy(r.tfs, 0, tfs, from, len)
+        System.arraycopy(r.normIds, 0, normIds, from, len)
+        docStart(b + 1) = from + len
+        if (positions) {
+          val p0 = posStart(from)
+          var e = 0
+          while (e < len) { posStart(from + e + 1) = posStart(from + e) + (if (has(b)) r.posLens(e) else 0); e += 1 }
+          if (has(b)) System.arraycopy(r.posFlat, 0, posFlat, p0, r.posFlat.length)
+        }
+        b += 1
+      }
+      termStart += n
+      new Group(segId, positions, terms.result(), termStart.result(), blockIds, lastDocs,
+        maxNormIds, maxTfs, docStart, docIds, tfs, normIds, posStart, posFlat)
+    }
+
+    /** One group from packed pieces of it: the reduce side of the gather. */
+    def merge(pieces: Iterable[Group]): Group =
+      if (pieces.size == 1) pieces.head
+      else pack(pieces.head.segId, pieces.head.hasPositions, pieces.iterator.flatMap(_.rows).toArray)
+  }
+
+  /** Groups as a kernel reads them. The resident copy is one such RDD,
+    * cached.
+    */
+  type Groups = RDD[Group]
 
   /** DocId-range width of one group (see above): 2^20 docs keeps every
     * realistic segment in one chunk at test scale while capping the worst
@@ -146,26 +244,26 @@ object SegmentCollect {
     lo
   }
 
-  /** Each term's blocks, in blockId order (= docId order). */
-  private def byTerm(rows: Iterable[BlockRow]): Map[String, Array[BlockRow]] =
-    rows.groupBy(_.term).map { case (t, bs) => t -> bs.toArray.sortBy(_.blockId) }
+  /** Each `key` group of `rows` packed: a scan partition's pieces. */
+  private def pack[K](rows: Iterator[BlockRow], positions: Boolean)(key: BlockRow => K): Iterator[(K, Group)] =
+    rows.toArray.groupBy(key).iterator.map { case (k, rs) => k -> Group.pack(rs(0).segId, positions, rs) }
 
-  /** Slice `rows` at `searcher`'s chunk width and group them per (segId,
-    * chunk), each group's blocks [[byTerm]], in at most `maxParts`
-    * partitions. The keys come from the manifest's per-segment row counts:
-    * docIds are dense in [0, rows). A Searcher without a manifest hashes
-    * the groups over `maxParts` partitions instead.
+  /** Slice `rows` at `searcher`'s chunk width, pack them per (segId, chunk)
+    * in each partition, and merge each group's pieces, in at most
+    * `maxParts` partitions. The keys come from the manifest's per-segment
+    * row counts: docIds are dense in [0, rows). A Searcher without a
+    * manifest hashes the groups over `maxParts` partitions instead.
     */
-  private def gather(searcher: Searcher, rows: RDD[BlockRow], maxParts: Int): Groups = {
+  private def gather(searcher: Searcher, rows: RDD[BlockRow], positions: Boolean, maxParts: Int): Groups = {
     val cw = searcher.chunkDocs
     val part = searcher.indexMeta.fold[Partitioner](new HashPartitioner(maxParts)) { m =>
       new GroupPartitioner(m.segments.flatMap { s =>
         (0L to math.max(0L, s.rows - 1) / cw).map(c => (s.segId, c.toInt))
       }.zipWithIndex.toMap, maxParts)
     }
-    rows.flatMap(slice(_, cw)).map(r => ((r.segId, chunkOf(r, cw)), r))
+    rows.mapPartitions(it => pack(it.flatMap(slice(_, cw)), positions)(r => (r.segId, chunkOf(r, cw))))
       .groupByKey(part)
-      .map { case ((segId, _), rs) => (segId, byTerm(rs)) }
+      .map { case (_, pieces) => Group.merge(pieces) }
   }
 
   /** The manifest's (segId, chunk) keys dealt round-robin over at most
@@ -183,7 +281,7 @@ object SegmentCollect {
   def buildResident(searcher: Searcher, positions: Boolean): Groups = {
     import searcher.spark.implicits._
     val copy = gather(searcher, blockRows(searcher.postings.where($"field" === searcher.field), positions).rdd,
-      maxParts = Int.MaxValue)
+      positions, maxParts = Int.MaxValue)
       .setName(s"resident postings ${searcher.indexDir} ${searcher.field}")
       .persist(StorageLevel.MEMORY_ONLY)
     copy.count()
@@ -199,13 +297,12 @@ object SegmentCollect {
   def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int)(kernel: Kernel): Fruit = {
     val groups = searcher.resident.getOrElse {
       val rows = scan(searcher, terms, positions).rdd
-      if (terms.distinct.length == 1)
-        rows.mapPartitions(_.toSeq.groupBy(_.segId).iterator.map { case (s, rs) => s -> byTerm(rs) })
-      else gather(searcher, rows, searcher.spark.sparkContext.defaultParallelism)
+      if (terms.distinct.length == 1) rows.mapPartitions(pack(_, positions)(_.segId).map(_._2))
+      else gather(searcher, rows, positions, searcher.spark.sparkContext.defaultParallelism)
     }
-    val fruits = groups.flatMap { case (segId, all) =>
-      val mine = terms.flatMap(t => all.get(t).map(t -> _)).toMap
-      if (mine.isEmpty) None else Some(kernel(segId, mine))
+    val fruits = groups.flatMap { g =>
+      val mine = terms.flatMap(t => g.blocks(t, positions).map(t -> _)).toMap
+      if (mine.isEmpty) None else Some(kernel(g.segId, mine))
     }.collect()
     merge(fruits, k)
   }

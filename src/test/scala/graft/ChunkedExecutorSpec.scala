@@ -98,7 +98,8 @@ class ChunkedExecutorSpec extends AnyFunSuite {
       // per partition: its groups as (segId, the chunks of its docIds, blocks
       // in blockId order with exact lastDocs and at most w entries)
       val groups = copy.head.asInstanceOf[SegmentCollect.Groups].mapPartitionsWithIndex { (p, it) =>
-        it.map { case (segId, byTerm) =>
+        it.map { g =>
+          val (segId, byTerm) = (g.segId, g.rows.toSeq.groupBy(_.term))
           val chunks = byTerm.values.flatten.flatMap(_.docIds).map(_ / w).toSet
           val sound = byTerm.values.forall { bs =>
             bs.map(_.blockId).toSeq == bs.map(_.blockId).sorted.toSeq &&

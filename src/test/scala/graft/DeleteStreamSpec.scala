@@ -73,8 +73,32 @@ class DeleteStreamSpec extends AnyFunSuite {
       assert(after.count(q) == live, s"$name count")
     }
 
-    // delete is idempotent: re-deleting matches nothing (already dead)
+    // delete is idempotent: re-deleting matches nothing (already dead),
+    // and a delete that matches nothing leaves the tombstone state, and with
+    // it the Searcher generation, untouched
+    val stamp = Deletes.stamp(dir)
+    val generation = new Searcher(spark, dir).generation
     assert(Deletes.deleteByTerm(spark, dir, "error") == 0)
+    assert(Deletes.deleteByTerm(spark, dir, "zzabsent") == 0)
+    assert(Deletes.stamp(dir) == stamp && new Searcher(spark, dir).generation == generation)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_deletes")), "a staging directory was left behind")
+  }
+
+  test("GraftIndex.delete matches in the index's own primary field") {
+    val dir = tmpDir("delfield")
+    val cfg = IndexConfig(numSegments = 2, field = "body")
+    val idx = Graft.build(spark, CorpusGen.corpus(spark, 200).toDF(), dir, cfg)
+    val before = idx.searcher
+    val matched = before.count(TermQ("error"))
+    assert(matched > 0 && before.count(TermQ("val")) > 0, "the corpus must contain the terms")
+    // the default field holds nothing on this index
+    assert(new Searcher(spark, dir).count(TermQ("error")) == 0)
+    assert(idx.delete(TermQ("error")) == matched)
+    val after = idx.searcher
+    assert(after.count(TermQ("error")) == 0)
+    assert(after.count(TermQ("val")) == before.compile(BoolQ(Seq(
+      Occur.Must -> TermQ("val"), Occur.MustNot -> TermQ("error")))).count())
+    assert(idx.delete(TermQ("error")) == 0)
   }
 
   test("alive view: a wholly dead block and a dead lastDoc, every executor == the compile route") {

@@ -3,10 +3,10 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{spark_partition_id, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig}
-import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ}
+import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, SegmentCollect, Searcher, TermQ, TermSetQ}
 
 /** The resident route: a Searcher's cached copy of its field's alive
   * postings answers every top-k collector with one map-side job. On a
@@ -21,13 +21,19 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, Searcher, TermQ, TermSetQ
   * seen yet is still one job, a lookup runs none, and every df equals the
   * termdict table's, tombstoned docs counted; a dictionary over its gate
   * on the driver heap leaves df lookups on the termdict table and the
-  * collectors on the copy.
+  * collectors on the copy. A group packed from several scan partitions
+  * is bit-identical to one packed whole, and with every group merged from
+  * such pieces the routes still match the compile route, positions on and
+  * off.
   */
 class ResidentRouteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private lazy val dir: String = {
+  private lazy val dir: String = tombstoned(withPositions = true)
+
+  /** The test index, with or without positions. */
+  private def tombstoned(withPositions: Boolean): String = {
     val d = java.nio.file.Files.createTempDirectory("graft-resident").toString
     val rng = new scala.util.Random(23)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon")
@@ -38,7 +44,7 @@ class ResidentRouteSpec extends AnyFunSuite {
       ("r", f"p$i%04d", "c", "en", words.mkString(" "))
     }.toDF("repo", "path", "commit", "lang", "content")
     IndexBuilder.build(spark, docs, d,
-      IndexConfig(numSegments = 4, buildBatches = 2, withPositions = true,
+      IndexConfig(numSegments = 4, buildBatches = 2, withPositions = withPositions,
         extraFields = Seq(FieldDef.STRING("path"))))
     // tombstones: every doc of one full alpha block, and the lastDoc of another
     val clean = new Searcher(spark, d)
@@ -134,6 +140,62 @@ class ResidentRouteSpec extends AnyFunSuite {
     // the copy skipped the whole dead block and the dead lastDoc
     val dead = resident.deletesDf.get.select($"segId", $"docId").as[(Int, Int)].collect().toSet
     assert(!resident.topDocs(TermQ("alpha"), 1200).exists(h => dead((h.segId, h.docId))))
+  }
+
+  test("packed groups: pieces from several scan partitions merge bit-identically") {
+    // a group packed whole == the same group merged from interleaved pieces,
+    // and a term's blocks come back as scanned, bit for bit
+    def flat(r: SegmentCollect.BlockRow) = (r.segId, r.term, r.blockId, r.lastDoc, r.maxNormId, r.maxTf,
+      r.docIds.toSeq, r.tfs.toSeq, r.normIds.toSeq, r.posFlat.toSeq, r.posLens.toSeq)
+    val terms = Seq("alpha", "beta", "rareterm", "id0001")
+    for (positions <- Seq(true, false)) {
+      val rows = SegmentCollect.scan(scan, terms, positions).collect().filter(_.segId == 0)
+      val whole = SegmentCollect.Group.pack(0, positions, rows)
+      val pieces = (0 until 3).map(i => SegmentCollect.Group.pack(0, positions,
+        rows.zipWithIndex.collect { case (r, j) if j % 3 == i => r }))
+      val merged = SegmentCollect.Group.merge(pieces)
+      assert(merged.rows.map(flat).toSeq == whole.rows.map(flat).toSeq, s"positions $positions: merge")
+      for (t <- terms :+ "zzabsent") {
+        val want = rows.filter(_.term == t).sortBy(_.blockId).map(flat).toSeq
+        assert(merged.blocks(t, positions).fold(Seq.empty[Any])(_.map(flat).toSeq) == want,
+          s"positions $positions: $t's blocks")
+      }
+    }
+  }
+
+  test("groups from several scan partitions, positions on and off: resident == forced scan == compile route") {
+    for (positions <- Seq(true, false)) {
+      // small row groups read in small splits: every segment's blocks come
+      // from two or more scan partitions, so each group of the copy and of
+      // the scan path's gather is merged from packed pieces
+      val d = {
+        sys.props("graft.postings.rowgroup.bytes") = "4096"
+        try tombstoned(positions) finally sys.props -= "graft.postings.rowgroup.bytes"
+      }
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+      try {
+        val res = new Searcher(spark, d)
+        val sc = { val s = new Searcher(spark, d); s.forceScan = true; s }
+        val parts = res.postings.where($"field" === "content")
+          .select($"segId", spark_partition_id().as("p")).distinct()
+          .groupBy($"segId").count().as[(Int, Long)].collect()
+        assert(parts.length == 4 && parts.forall(_._2 >= 2), s"scan partitions per segment: ${parts.toSeq}")
+        for ((name, q) <- routes if positions || !q.isInstanceOf[PhraseQ]) {
+          val want = key(CompileRoute.topK(res, q, k))
+          val wantCount = res.compile(q).count()
+          assert(wantCount > 0, s"$name matches nothing")
+          for ((sr, path) <- Seq(res -> "resident", sc -> "scan")) {
+            val where = s"$name on the $path path, positions $positions"
+            assert(key(sr.topDocs(q, k)) == want, s"$where: topDocs")
+            val (hits, cnt) = sr.topDocsWithCount(q, k)
+            assert(key(hits) == want && cnt == wantCount, s"$where: topDocsWithCount")
+            assert(sr.count(q) == wantCount, s"$where: count")
+          }
+        }
+        assert(spark.sparkContext.getRDDStorageInfo.exists(_.name == s"resident postings $d content"),
+          s"positions $positions: no resident copy")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
   }
 
   test("a resident query is one job of one stage: no Parquet read, no shuffle") {
