@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{FieldDef, IndexBuilder, IndexConfig, Manifest}
-import graft.query.{Query, Searcher}
+import graft.query.{Query, Searcher, TermQ}
 
 /** Session-scoped engine facade used by SparkEntry/Verify/Bench: builds (or
   * reuses) the inverted index over a test-data directory's `documents` table
@@ -241,7 +241,7 @@ object Engine {
         IndexBuilder.build(spark, documentsAsSource(spark, sfDir), dir, docsConfig)
       }
       if (!new java.io.File(s"$dir/deletes").exists()) {
-        index.Deletes.deleteByTerm(spark, dir, deleteTerm)
+        index.Deletes.deleteByQuery(spark, dir, TermQ(deleteTerm), docsConfig.field)
         ()
       }
       new Searcher(spark, dir)

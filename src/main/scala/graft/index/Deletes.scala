@@ -29,7 +29,7 @@ object Deletes {
     * table, and with it [[stamp]], untouched.
     */
   def deleteByQuery(spark: SparkSession, indexDir: String,
-                    q: graft.query.Query, field: String = "content"): Long = {
+                    q: graft.query.Query, field: String): Long = {
     val sr = new graft.query.Searcher(spark, indexDir, field)
     val seen = Observation()
     val staging = new Path(s"$indexDir/_deletes-${java.util.UUID.randomUUID()}")
@@ -48,10 +48,6 @@ object Deletes {
       n
     } finally fs.delete(staging, true)
   }
-
-  /** delete_term convenience. */
-  def deleteByTerm(spark: SparkSession, indexDir: String, term: String): Long =
-    deleteByQuery(spark, indexDir, graft.query.TermQ(term))
 
   /** Fingerprint of the tombstone state (file names + lengths), folded into
     * Searcher generation ids; 0 when no deletes exist. Driver-side FS

@@ -467,9 +467,10 @@ object IndexBuilder {
         // are equal (w.h.p.), i.e. every indexed row's content sha256 matches
         // its source row; and a pure scan+partial-agg has no shuffle to steal
         // cores from the postings job (the join was measured as a flat ~15 s
-        // non-scaling tail at every parallelism level).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
+        // non-scaling tail at every parallelism level). It runs with the
+        // caller's local properties (job group, description, tags), so its
+        // jobs belong to the caller's job group like the rest of the batch,
+        // and names them by its own call site.
         def rowCheck(df: DataFrame, shaCol: org.apache.spark.sql.Column): (Long, Long) =
           // coalesce: bit_xor over an empty batch is NULL, and .as[(Long,
           // Long)] on a null primitive throws — an empty batch must compare
@@ -477,7 +478,10 @@ object IndexBuilder {
           df.select(xxhash64($"repo", $"path", $"commit", shaCol).as("h"))
             .agg(coalesce(expr("bit_xor(h)"), lit(0L)), count(lit(1)))
             .as[(Long, Long)].head()
-        val shaF: Future[Boolean] = Future {
+        val shaF = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+            java.util.concurrent.ForkJoinPool.commonPool()) {
+          spark.sparkContext.setCallSite(s"sha256 verify of batch $b")
           rowCheck(docmapW, $"sha256") ==
             rowCheck(batchDocs, sha2($"content", 256))
         }
@@ -551,7 +555,8 @@ object IndexBuilder {
           .groupBy($"segId").agg(count(lit(1)).as("terms"))
           .as[(Int, Long)].collect().toMap
         phase("termCounts collect")
-        val shaOk = Await.result(shaF, scala.concurrent.duration.Duration.Inf)
+        val shaOk =
+          try shaF.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
         phase("sha256 verify join")
         val wallMs = (System.nanoTime() - t0) / 1000000
         // one SegmentMeta per segment (primary-field stats row), not per field

@@ -6,11 +6,13 @@ import graft.score.Bm25
   * `Intersection` scorer (`src/query/intersection.rs:15-120`: docsets sorted
   * by cost, smallest drives, others gallop to the candidate) and its
   * positions-aware phrase variant (`phrase_scorer.rs:46-420`), run as
-  * kernels on the same [[SegmentCollect]] stage as the WAND executor: the
-  * query terms' posting blocks per (segment, docId chunk) group, through
-  * [[SegmentCollect.collect]]; a local in-memory leapfrog per group task,
-  * per-group (top-k, count) fruits, driver merge
-  * (`top_collector.rs:102-122`). One kernel per query shape, on every path.
+  * kernels on the same [[SegmentCollect]] stage as the WAND executor: one
+  * (segment, docId chunk) packed group per kernel call, through
+  * [[SegmentCollect.collect]]; a local leapfrog over the query terms'
+  * entry ranges, read in place in the group's flat arrays, with phrase
+  * positions read from its CSR arrays; per-group (top-k, count) fruits,
+  * driver merge (`top_collector.rs:102-122`). One kernel per query shape,
+  * on every path.
   *
   * This is the fast collector path for pure conjunctions (`+a +b`) and
   * phrases; `Searcher.compile`'s Dataset pipeline remains the composable
@@ -19,59 +21,32 @@ import graft.score.Bm25
   */
 object Intersect {
 
-  /** One term's postings within one segment (or chunk), blocks concatenated
-    * in docId order; positions in CSR form, one flat array plus per-doc
-    * offsets (empty when positions were not requested).
+  /** Leapfrog over sorted docId ranges of one array, `[from(j),
+    * until(j))` per term (rarest first = index 0); invokes
+    * `onMatch(docId, idxPerTerm)` for every doc present in all ranges, each
+    * index absolute in `docIds`. Pointers only move forward; seeks gallop
+    * via ranged binary search — the `intersection.rs:66-101` loop without
+    * the block machinery (a term's blocks are one contiguous range of a
+    * packed group; Parquet row-group pruning replaced the skip lists on
+    * the way in).
     */
-  final class TermPostings(val docIds: Array[Int], val tfs: Array[Int],
-                           val normIds: Array[Int],
-                           val posFlat: Array[Int], val posOffsets: Array[Int])
-    extends Serializable
-
-  object TermPostings {
-    val empty = new TermPostings(Array.emptyIntArray, Array.emptyIntArray,
-      Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
-
-    /** Concatenate one term's blocks, given in blockId order; positions
-      * only when `positions` (the blocks may carry them unasked).
-      */
-    def of(blocks: Array[SegmentCollect.BlockRow], positions: Boolean): TermPostings = {
-      def cat(f: SegmentCollect.BlockRow => Array[Int]) = Array.concat(blocks.map(f): _*)
-      if (!positions) return new TermPostings(cat(_.docIds), cat(_.tfs), cat(_.normIds),
-        Array.emptyIntArray, Array.emptyIntArray)
-      val lens = cat(_.posLens)
-      val offsets = new Array[Int](lens.length + 1)
-      var i = 0
-      while (i < lens.length) { offsets(i + 1) = offsets(i) + lens(i); i += 1 }
-      new TermPostings(cat(_.docIds), cat(_.tfs), cat(_.normIds), cat(_.posFlat), offsets)
-    }
-  }
-
-  /** Leapfrog over per-term sorted docId arrays (rarest first = index 0);
-    * invokes `onMatch(docId, idxPerTerm)` for every doc present in all lists.
-    * Pointers only move forward; seeks gallop via ranged binary search —
-    * the `intersection.rs:66-101` loop without the block machinery (blocks
-    * are already concatenated here; Parquet row-group pruning replaced the
-    * skip lists on the way in).
-    */
-  def leapfrog(lists: Array[TermPostings])(onMatch: (Int, Array[Int]) => Unit): Unit = {
-    val n = lists.length
-    if (n == 0 || lists.exists(_.docIds.length == 0)) return
-    val idx = new Array[Int](n)
-    val lead = lists(0).docIds
-    var i0 = 0
-    while (i0 < lead.length) {
-      val d = lead(i0)
+  def leapfrog(docIds: Array[Int], from: Array[Int], until: Array[Int])
+              (onMatch: (Int, Array[Int]) => Unit): Unit = {
+    val n = from.length
+    if (n == 0 || from.indices.exists(j => from(j) >= until(j))) return
+    val idx = from.clone()
+    var i0 = from(0)
+    while (i0 < until(0)) {
+      val d = docIds(i0)
       var ok = true
       var j = 1
       while (ok && j < n) {
-        val arr = lists(j).docIds
-        var p = java.util.Arrays.binarySearch(arr, idx(j), arr.length, d)
+        var p = java.util.Arrays.binarySearch(docIds, idx(j), until(j), d)
         if (p >= 0) idx(j) = p
         else {
           p = -p - 1
           idx(j) = p
-          if (p >= arr.length) return // some list exhausted: no more matches
+          if (p >= until(j)) return // some range exhausted: no more matches
           ok = false
         }
         j += 1
@@ -81,18 +56,21 @@ object Intersect {
     }
   }
 
-  /** Run `kernel(segId, lists)` through [[SegmentCollect.collect]], `lists`
-    * holding each term of `ordered` (rarest first) for one (segment, chunk)
-    * group, and merge the fruits into the top `k` and the count. Every
+  /** Run `kernel(group, from, until)` through [[SegmentCollect.collect]],
+    * `[from(j), until(j))` holding term `ordered(j)`'s (rarest first)
+    * entries in one (segment, chunk) group, and merge the fruits into the
+    * top `k` and the count; a group missing a term matches nothing. Every
     * block of every term is gathered: a filter that broadcasts the rarest
     * term's docIds to drop the other terms' blocks it never visits costs
     * one more Spark job than it saves in gather bytes, measured on a
     * 20k-doc and a 600k-doc index.
     */
   private def run(searcher: Searcher, ordered: Seq[String], positions: Boolean, k: Int)
-                 (kernel: (Int, Array[TermPostings]) => SegmentCollect.Fruit): SegmentCollect.Fruit =
-    SegmentCollect.collect(searcher, ordered, positions, k) { (segId, byTerm) =>
-      kernel(segId, ordered.map(t => byTerm.get(t).fold(TermPostings.empty)(TermPostings.of(_, positions))).toArray)
+                 (kernel: (SegmentCollect.Group, Array[Int], Array[Int]) => SegmentCollect.Fruit)
+      : SegmentCollect.Fruit =
+    SegmentCollect.collect(searcher, ordered, positions, k) { (g, at) =>
+      if (at.exists(_ < 0)) (Array.empty, 0L)
+      else kernel(g, at.map(g.entryStart), at.map(g.entryEnd))
     }
 
   /** Scored conjunction of terms: top-k + total count in one pass.
@@ -110,17 +88,17 @@ object Intersect {
     val clauseIdx = clauseTerms.map(ordIdx).toArray
     val wB = searcher.spark.sparkContext.broadcast(ordered.map(weights).toArray)
 
-    run(searcher, ordered, positions = false, k) { (segId, lists) =>
+    run(searcher, ordered, positions = false, k) { (g, from, until) =>
       val ws = wB.value
-      val topk = new Wand.TopK(k, segId)
+      val topk = new Wand.TopK(k, g.segId)
       var cnt = 0L
-      leapfrog(lists) { (doc, idx) =>
-        val normId = lists(0).normIds(idx(0))
+      leapfrog(g.docIds, from, until) { (doc, idx) =>
+        val normId = g.normIds(idx(0))
         var score = 0.0f
         var c = 0
         while (c < clauseIdx.length) {
           val ti = clauseIdx(c)
-          score += ws(ti).score(normId, lists(ti).tfs(idx(ti)).toLong)
+          score += ws(ti).score(normId, g.tfs(idx(ti)).toLong)
           c += 1
         }
         cnt += 1
@@ -150,25 +128,25 @@ object Intersect {
     val slop = p.slop
     val weightB = searcher.spark.sparkContext.broadcast(weight)
 
-    run(searcher, ordered, positions = true, k) { (segId, lists) =>
+    run(searcher, ordered, positions = true, k) { (g, from, until) =>
       val w = weightB.value
-      val topk = new Wand.TopK(k, segId)
+      val topk = new Wand.TopK(k, g.segId)
       var cnt = 0L
-      val flats = new Array[Array[Int]](slotIdx.length)
+      // every slot's positions are the group's one CSR array
+      val flats = Array.fill(slotIdx.length)(g.posFlat)
       val starts = new Array[Int](slotIdx.length)
       val ends = new Array[Int](slotIdx.length)
-      leapfrog(lists) { (doc, idx) =>
+      leapfrog(g.docIds, from, until) { (doc, idx) =>
         var s = 0
         while (s < slotIdx.length) {
-          val tp = lists(slotIdx(s)); val i = idx(slotIdx(s))
-          flats(s) = tp.posFlat
-          starts(s) = tp.posOffsets(i); ends(s) = tp.posOffsets(i + 1)
+          val e = idx(slotIdx(s))
+          starts(s) = g.posStart(e); ends(s) = g.posStart(e + 1)
           s += 1
         }
         val c = PhraseMatcher.phraseCountCsr(offsets, flats, starts, ends, slop)
         if (c > 0) {
           cnt += 1
-          topk.insert(doc, w.score(lists(0).normIds(idx(0)), c.toLong))
+          topk.insert(doc, w.score(g.normIds(idx(0)), c.toLong))
           ()
         }
       }

@@ -894,8 +894,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     */
   def termHitCount(t: String): Long =
     if (deadDocs.isEmpty || dict.exists(_.docFreq(t) == 0)) docFreqs(Seq(t)).getOrElse(t, 0L)
-    else SegmentCollect.collect(this, Seq(t), positions = false, 1) { (_, byTerm) =>
-      (Array.empty[Hit], byTerm(t).map(_.docIds.length.toLong).sum)
+    else SegmentCollect.collect(this, Seq(t), positions = false, 1) { (g, at) =>
+      (Array.empty[Hit], (g.entryEnd(at(0)) - g.entryStart(at(0))).toLong)
     }._2
 
   /** TopDocs collector (`top_collector.rs:45-61,102-122`): global top-k by

@@ -9,11 +9,13 @@ import org.apache.spark.storage.StorageLevel
 /** The one segment collect-and-merge stage the top-k executors share — the
   * reference's collector contract, `collect_segment` per segment then
   * `merge_fruits` on the driver (`collector/mod.rs:165-204`,
-  * `top_collector.rs:102-122`). A kernel maps one (segId, docId chunk)
-  * group's query-term blocks to a (top-k hits, count) fruit; [[collect]],
-  * the only way a kernel reaches posting blocks, runs it per group and
-  * [[merge]]s the fruits. The groups come from one of two sources, chosen
-  * inside [[collect]]:
+  * `top_collector.rs:102-122`). A kernel reads one (segId, docId chunk)
+  * [[Group]] — the one in-memory posting layout, flat term-sorted arrays —
+  * in place, at its query terms' ranges, and maps it to a (top-k hits,
+  * count) fruit, as the reference's scorers read posting blocks where they
+  * sit (`term_scorer.rs:9-135`); [[collect]], the only way a kernel
+  * reaches posting blocks, runs it per group and [[merge]]s the fruits.
+  * The groups come from one of two sources, chosen inside [[collect]]:
   *
   *  - **The resident copy**: the Searcher's cached copy of its field's
   *    alive postings ([[buildResident]]), one partition per (segId, chunk)
@@ -48,12 +50,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object SegmentCollect {
 
-  /** One posting block as the scan reads it and a kernel receives it (a
-    * [[Group]] holds its blocks packed). Positions ride in CSR form,
-    * one flat array plus per-doc lengths, because the nested
-    * `Array[Array[Int]]` shape pays a per-inner-array encoder cost for
-    * every posting of a hot term; both are empty when positions were not
-    * requested.
+  /** One posting block as the scan reads it, before [[Group.pack]] packs
+    * it into a group. Positions ride in CSR form, one flat array plus
+    * per-doc lengths, because the nested `Array[Array[Int]]` shape pays a
+    * per-inner-array encoder cost for every posting of a hot term; both
+    * are empty when positions were not requested.
     */
   final case class BlockRow(segId: Int, term: String, blockId: Int, lastDoc: Int,
                             maxNormId: Int, maxTf: Int,
@@ -65,49 +66,57 @@ object SegmentCollect {
     */
   type Fruit = (Array[Hit], Long)
 
-  /** A kernel: one group's segId and its query terms' blocks, by term in
-    * blockId order, to the group's fruit.
+  /** A kernel: one group and each query term's index in it
+    * ([[Group.termIndex]], -1 when the group holds none of its blocks), in
+    * the order of [[collect]]'s `terms`, to the group's fruit. It reads the
+    * group's arrays in place.
     */
-  type Kernel = (Int, Map[String, Array[BlockRow]]) => Fruit
+  type Kernel = (Group, Array[Int]) => Fruit
 
   /** One (segId, chunk) group's blocks, packed term-sorted into flat
     * primitive arrays — the reference's contiguous posting blocks
     * (`serializer.rs:339-451`) and the columnar in-memory posting layout of
-    * "Columnar Formatted Inverted Index" (ICDE 2025, PAPERS.md) — so the
-    * resident copy caches, sizes and ships a handful of arrays per group
-    * instead of an object per block. Term `i`'s blocks are
-    * `[termStart(i), termStart(i + 1))` in blockId order; block `b`'s
+    * "Columnar Formatted Inverted Index" (ICDE 2025, PAPERS.md). It is the
+    * one in-memory posting layout: the resident copy caches, sizes and
+    * ships a handful of arrays per group instead of an object per block,
+    * and every kernel reads these arrays where they sit. Term `i`'s blocks
+    * are `[termStart(i), termStart(i + 1))` in blockId order; block `b`'s
     * entries are `[docStart(b), docStart(b + 1))` of `docIds`/`tfs`/
-    * `normIds`; with positions, entry `e`'s are `[posStart(e),
-    * posStart(e + 1))` of `posFlat` (CSR), and `posStart` is empty without.
+    * `normIds`, so term `i`'s entries are the one range `[entryStart(i),
+    * entryEnd(i))`, ascending by docId; with positions, entry `e`'s are
+    * `[posStart(e), posStart(e + 1))` of `posFlat` (CSR), and `posStart`
+    * is empty without. Kernels must not write to the arrays: the resident
+    * copy's groups serve every query.
     */
   final class Group private (val segId: Int, val hasPositions: Boolean,
-                             terms: Array[String], termStart: Array[Int],
-                             blockIds: Array[Int], lastDocs: Array[Int],
-                             maxNormIds: Array[Int], maxTfs: Array[Int],
-                             docStart: Array[Int], docIds: Array[Int], tfs: Array[Int],
-                             normIds: Array[Int], posStart: Array[Int], posFlat: Array[Int])
+                             terms: Array[String], val termStart: Array[Int],
+                             val blockIds: Array[Int], val lastDocs: Array[Int],
+                             val maxNormIds: Array[Int], val maxTfs: Array[Int],
+                             val docStart: Array[Int], val docIds: Array[Int], val tfs: Array[Int],
+                             val normIds: Array[Int], val posStart: Array[Int], val posFlat: Array[Int])
       extends Serializable {
 
-    /** Term `t`'s blocks in blockId order, copied out as [[BlockRow]]s
-      * (with CSR positions when `positions` and the group holds them);
-      * None when the group holds no block of `t`.
+    /** Term `t`'s index, or -1 when the group holds no block of `t`. */
+    def termIndex(t: String): Int =
+      math.max(-1, java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], t))
+
+    /** The first of term `i`'s entries. */
+    def entryStart(i: Int): Int = docStart(termStart(i))
+
+    /** One past the last of term `i`'s entries. */
+    def entryEnd(i: Int): Int = docStart(termStart(i + 1))
+
+    /** Every block, term by term, copied out with its positions when held:
+      * what [[Group.merge]] repacks.
       */
-    def blocks(t: String, positions: Boolean): Option[Array[BlockRow]] = {
-      val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], t)
-      if (i < 0) None
-      else Some(Array.tabulate(termStart(i + 1) - termStart(i))(j => row(t, termStart(i) + j, positions)))
-    }
-
-    /** Every block, term by term, positions included when held. */
     def rows: Iterator[BlockRow] =
-      terms.indices.iterator.flatMap(i => (termStart(i) until termStart(i + 1)).iterator.map(row(terms(i), _, true)))
+      terms.indices.iterator.flatMap(i => (termStart(i) until termStart(i + 1)).iterator.map(row(terms(i), _)))
 
-    private def row(t: String, b: Int, positions: Boolean): BlockRow = {
+    private def row(t: String, b: Int): BlockRow = {
       import java.util.Arrays.copyOfRange
       val (from, until) = (docStart(b), docStart(b + 1))
       val (pf, pl) =
-        if (!positions || !hasPositions) (Array.emptyIntArray, Array.emptyIntArray)
+        if (!hasPositions) (Array.emptyIntArray, Array.emptyIntArray)
         else (copyOfRange(posFlat, posStart(from), posStart(until)),
           Array.tabulate(until - from)(e => posStart(from + e + 1) - posStart(from + e)))
       BlockRow(segId, t, blockIds(b), lastDocs(b), maxNormIds(b), maxTfs(b),
@@ -288,11 +297,12 @@ object SegmentCollect {
     copy
   }
 
-  /** The one way a kernel reaches posting blocks: run `kernel(segId, byTerm
-    * restricted to terms)` per group of `searcher`'s resident copy, or,
-    * when it has none, of the scan path's groups (`positions` shapes the
-    * scan); a group holding none of the terms yields no fruit. [[merge]]
-    * folds the fruits into the global top `k` and the summed count.
+  /** The one way a kernel reaches posting blocks: run `kernel(group, the
+    * index in it of each of terms)` per group of `searcher`'s resident
+    * copy, or, when it has none, of the scan path's groups (`positions`
+    * shapes the scan); a group holding none of the terms yields no fruit.
+    * [[merge]] folds the fruits into the global top `k` and the summed
+    * count.
     */
   def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int)(kernel: Kernel): Fruit = {
     val groups = searcher.resident.getOrElse {
@@ -301,8 +311,8 @@ object SegmentCollect {
       else gather(searcher, rows, positions, searcher.spark.sparkContext.defaultParallelism)
     }
     val fruits = groups.flatMap { g =>
-      val mine = terms.flatMap(t => g.blocks(t, positions).map(t -> _)).toMap
-      if (mine.isEmpty) None else Some(kernel(g.segId, mine))
+      val at = terms.iterator.map(g.termIndex).toArray
+      if (at.forall(_ < 0)) None else Some(kernel(g, at))
     }.collect()
     merge(fruits, k)
   }

@@ -14,75 +14,73 @@ import graft.score.Bm25
   * executors. Per-chunk top-k fruits are merged on the driver
   * (`top_collector.rs:102-122`).
   *
-  * A task reads the query terms' blocks through [[SegmentCollect.collect]]
-  * (the Searcher's resident copy, or a scan pruned on the `term` predicate
-  * when there is none); within a task, whole 128-doc blocks are skipped
-  * when their stored (maxNormId, maxTf) upper bound cannot beat the running
-  * threshold — strict `>` semantics (`block_wand.rs:206`).
+  * A task gets its group from [[SegmentCollect.collect]] (the Searcher's
+  * resident copy, or a scan pruned on the `term` predicate when there is
+  * none), and each [[TermScorer]] walks its term's blocks where they sit
+  * in the packed [[SegmentCollect.Group]], as the reference's scorer reads
+  * a segment's blocks in place (`term_scorer.rs:9-135`); whole 128-doc
+  * blocks are skipped when their stored (maxNormId, maxTf) upper bound
+  * cannot beat the running threshold — strict `>` semantics
+  * (`block_wand.rs:206`).
   */
 object Wand {
 
   final val TERMINATED: Int = Int.MaxValue
 
-  /** One posting block held columnar in memory. */
-  final case class Block(lastDoc: Int, maxNormId: Int, maxTf: Int,
-                         docIds: Array[Int], tfs: Array[Int], normIds: Array[Int])
-
   /** Decode the stored block-max tf byte (`skip.rs:29-35`): 255 -> u32::MAX. */
   @inline private def decodeMaxTf(code: Int): Long =
     if (code == 255) 0xffffffffL else code.toLong
 
-  /** In-memory term scorer over a segment's block list for one term.
-    * Mirrors `TermScorer` + `SkipReader`: a deep cursor (blockIdx, i) for
-    * doc()/advance()/seek() and a shallow cursor for seek_block()/
-    * block_max_score() (`skip.rs:244-283`).
+  /** In-memory term scorer over one term's blocks in a packed group, read
+    * in place: blocks `[termStart(term), termStart(term + 1))`, their
+    * entries one contiguous docId-ascending range of the group's arrays.
+    * Mirrors `TermScorer` + `SkipReader`: a deep cursor (block b, entry e)
+    * for doc()/advance()/seek() and a shallow block cursor for
+    * seek_block()/block_max_score() (`skip.rs:244-283`).
     */
-  final class TermScorer(val weight: Bm25.Weight, blocks: Array[Block]) {
+  final class TermScorer(val weight: Bm25.Weight, g: SegmentCollect.Group, term: Int) {
     val maxScore: Float = weight.maxScore // term_scorer.rs:91, bm25.rs:179-181
-    private var b = 0 // deep cursor: block index
-    private var i = 0 // deep cursor: offset within block
-    private var shallow = 0 // shallow cursor for block-max queries
+    private val docStart = g.docStart
+    private val docIds = g.docIds
+    private val lastDocs = g.lastDocs
+    private val end = g.termStart(term + 1) // one past the term's last block
+    private var b = g.termStart(term) // deep cursor: block
+    private var e = docStart(b) // deep cursor: entry
+    private var shallow = b // shallow cursor for block-max queries
 
-    @inline def doc: Int = if (b >= blocks.length) TERMINATED else blocks(b).docIds(i)
+    @inline def doc: Int = if (b >= end) TERMINATED else docIds(e)
 
     def advance(): Int = {
-      if (b >= blocks.length) return TERMINATED
-      i += 1
-      if (i >= blocks(b).docIds.length) { b += 1; i = 0 }
+      if (b >= end) return TERMINATED
+      e += 1
+      if (e >= docStart(b + 1)) b += 1
       if (b > shallow) shallow = b
       doc
     }
 
     def seek(target: Int): Int = {
-      while (b < blocks.length && blocks(b).lastDoc < target) { b += 1; i = 0 }
-      if (b >= blocks.length) { if (shallow < b) shallow = b; return TERMINATED }
-      val ids = blocks(b).docIds
-      while (ids(i) < target) i += 1 // lastDoc >= target guarantees termination
+      while (b < end && lastDocs(b) < target) { b += 1; e = docStart(b) }
+      if (b >= end) { if (shallow < b) shallow = b; return TERMINATED }
+      while (docIds(e) < target) e += 1 // lastDoc >= target guarantees termination
       if (b > shallow) shallow = b
-      ids(i)
+      docIds(e)
     }
 
     /** Shallow block seek: position the skip cursor on the first block whose
       * lastDoc >= target without touching the deep cursor.
       */
     def seekBlock(target: Int): Unit = {
-      while (shallow < blocks.length && blocks(shallow).lastDoc < target) shallow += 1
+      while (shallow < end && lastDocs(shallow) < target) shallow += 1
     }
 
     def lastDocInBlock: Int =
-      if (shallow >= blocks.length) TERMINATED else blocks(shallow).lastDoc
+      if (shallow >= end) TERMINATED else lastDocs(shallow)
 
     def blockMaxScore: Float =
-      if (shallow >= blocks.length) 0.0f
-      else {
-        val blk = blocks(shallow)
-        weight.score(blk.maxNormId, decodeMaxTf(blk.maxTf))
-      }
+      if (shallow >= end) 0.0f
+      else weight.score(g.maxNormIds(shallow), decodeMaxTf(g.maxTfs(shallow)))
 
-    @inline def score: Float = {
-      val blk = blocks(b)
-      weight.score(blk.normIds(i), blk.tfs(i).toLong)
-    }
+    @inline def score: Float = weight.score(g.normIds(e), g.tfs(e).toLong)
   }
 
   /** Top-k accumulator with the reference's threshold semantics:
@@ -291,13 +289,15 @@ object Wand {
     val weights = searcher.weightsForBoosted(termBoosts)
     val present = terms.filter(weights.contains).sorted
     if (present.isEmpty) return (Array.empty, if (withCount) 0L else -1L)
-    val (hits, cnt) = SegmentCollect.collect(searcher, present, positions = false, k) { (segId, byTerm) =>
-      val perTerm = byTerm.toSeq.sortBy(_._1)
+    val (hits, cnt) = SegmentCollect.collect(searcher, present, positions = false, k) { (g, at) =>
+      // the present terms, in `present`'s sorted order
+      val mine = present.indices.filter(at(_) >= 0)
       val cnt =
-        if (withCount) unionCount(perTerm.map(_._2.flatMap(_.docIds)).toArray)
+        if (withCount) unionCount(g.docIds, mine.map(j => g.entryStart(at(j))).toArray,
+          mine.map(j => g.entryEnd(at(j))).toArray)
         else 0L
-      val scorers = perTerm.map { case (term, blks) => new TermScorer(weights(term), blks.map(toBlock)) }
-      val topk = new TopK(k, segId)
+      val scorers = mine.map(j => new TermScorer(weights(present(j)), g, at(j)))
+      val topk = new TopK(k, g.segId)
       if (scorers.length == 1) blockWandSingle(scorers.head, topk.threshold, topk.insert)
       else blockWand(scorers, topk.threshold, topk.insert)
       (topk.hits, cnt)
@@ -305,17 +305,19 @@ object Wand {
     (hits, if (withCount) cnt else -1L)
   }
 
-  /** Count of distinct docIds across sorted lists (union cardinality). */
-  def unionCount(lists: Array[Array[Int]]): Long = {
-    val n = lists.length
-    val idx = new Array[Int](n)
+  /** Count of distinct docIds across the sorted ranges `[from(i),
+    * until(i))` of `docIds` (union cardinality).
+    */
+  def unionCount(docIds: Array[Int], from: Array[Int], until: Array[Int]): Long = {
+    val n = from.length
+    val idx = from.clone()
     var cnt = 0L
     var done = false
     while (!done) {
       var min = Int.MaxValue
       var i = 0
       while (i < n) {
-        if (idx(i) < lists(i).length && lists(i)(idx(i)) < min) min = lists(i)(idx(i))
+        if (idx(i) < until(i) && docIds(idx(i)) < min) min = docIds(idx(i))
         i += 1
       }
       if (min == Int.MaxValue) done = true
@@ -323,14 +325,11 @@ object Wand {
         cnt += 1
         i = 0
         while (i < n) {
-          if (idx(i) < lists(i).length && lists(i)(idx(i)) == min) idx(i) += 1
+          if (idx(i) < until(i) && docIds(idx(i)) == min) idx(i) += 1
           i += 1
         }
       }
     }
     cnt
   }
-
-  private def toBlock(r: SegmentCollect.BlockRow): Block =
-    Block(r.lastDoc, r.maxNormId, r.maxTf, r.docIds, r.tfs, r.normIds)
 }

@@ -60,7 +60,7 @@ class DeclaredSchemaSpec extends AnyFunSuite {
     val dir = tmpDir("schema-del")
     val cfg = IndexConfig(numSegments = 2, buildBatches = 2, withPositions = true)
     IndexBuilder.build(spark, corpus, dir, cfg)
-    assert(Deletes.deleteByQuery(spark, dir, TermQ("error")) > 0)
+    assert(Deletes.deleteByQuery(spark, dir, TermQ("error"), "content") > 0)
     check(dir, "after a delete")
     Merger.compact(spark, dir, cfg, Merger.LogMergePolicy(minNumSegments = 2))
     check(dir, "after a compaction")

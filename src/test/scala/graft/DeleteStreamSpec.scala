@@ -41,7 +41,7 @@ class DeleteStreamSpec extends AnyFunSuite {
       name -> m
     }.toMap
 
-    val deleted = Deletes.deleteByTerm(spark, dir, "error")
+    val deleted = Deletes.deleteByQuery(spark, dir, TermQ("error"), "content")
     assert(deleted == victimDocs)
 
     // re-pin (reader reload on commit)
@@ -78,8 +78,8 @@ class DeleteStreamSpec extends AnyFunSuite {
     // it the Searcher generation, untouched
     val stamp = Deletes.stamp(dir)
     val generation = new Searcher(spark, dir).generation
-    assert(Deletes.deleteByTerm(spark, dir, "error") == 0)
-    assert(Deletes.deleteByTerm(spark, dir, "zzabsent") == 0)
+    assert(Deletes.deleteByQuery(spark, dir, TermQ("error"), "content") == 0)
+    assert(Deletes.deleteByQuery(spark, dir, TermQ("zzabsent"), "content") == 0)
     assert(Deletes.stamp(dir) == stamp && new Searcher(spark, dir).generation == generation)
     assert(!new java.io.File(dir).list().exists(_.startsWith("_deletes")), "a staging directory was left behind")
   }
@@ -126,7 +126,7 @@ class DeleteStreamSpec extends AnyFunSuite {
     val victims = dead._5.map(d => (dead._1, d)).toSet + ((cut._1, cut._3))
     val ids = clean.docmap.select($"segId", $"docId", $"path").as[(Int, Int, String)]
       .collect().collect { case (s, d, p) if victims((s, d)) => "id" + p.drop(1) }
-    assert(Deletes.deleteByQuery(spark, dir, TermSetQ(ids.toSet)) == victims.size)
+    assert(Deletes.deleteByQuery(spark, dir, TermSetQ(ids.toSet), "content") == victims.size)
     val sr = new Searcher(spark, dir)
 
     // the view: the dead block drops, the cut block loses its lastDoc
@@ -197,7 +197,7 @@ class DeleteStreamSpec extends AnyFunSuite {
     val cfg = IndexConfig(numSegments = 3)
     val corpus = CorpusGen.corpus(spark, 400)
     IndexBuilder.build(spark, corpus.toDF(), dir, cfg)
-    Deletes.deleteByTerm(spark, dir, "error")
+    Deletes.deleteByQuery(spark, dir, TermQ("error"), "content")
 
     val before = new Searcher(spark, dir)
     val expectVal = before.count(TermQ("val"))

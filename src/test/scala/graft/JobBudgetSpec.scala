@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.JobGroupTrace
 import org.scalatest.funsuite.AnyFunSuite
 import graft.bench.CorpusGen
 import graft.index.IndexConfig
@@ -11,47 +9,21 @@ import graft.query.TermQ
 /** The write path's Spark job budget. An append, a delete and a reopened
   * Searcher's first collector query read every index table with its
   * declared schema, so none runs a Parquet schema-inference job (a
-  * `parquet at ...` job outside any SQL execution); and a delete runs its
+  * `parquet at ...` job outside any SQL execution); a delete runs its
   * query plan once, counting its matches on the write instead of in a
-  * separate count.
+  * separate count; and every job of an append, its concurrent sha256 check
+  * included, runs in the caller's job group.
   */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-
-  /** One job group's jobs, and the plans of the SQL executions they ran in. */
-  private final class Jobs(group: String) extends SparkListener {
-    /** (job callsite, SQL execution id) per job of the group. */
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[Long])]()
-    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-        val exec = Seq("spark.sql.execution.root.id", "spark.sql.execution.id")
-          .flatMap(k => Option(e.properties.getProperty(k))).headOption.map(_.toLong)
-        jobs.add((e.stageInfos.maxBy(_.stageId).name, exec))
-      }
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
-      case _ => ()
-    }
-  }
 
   /** Run `f` in its own job group; its jobs as (callsite, SQL execution
     * plan, if any).
     */
   private def jobsOf(name: String)(f: => Any): Seq[(String, Option[String])] = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"budget-$name-${System.nanoTime()}"
-    val l = new Jobs(group)
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, name)
-      try f finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      val got = l.jobs.asScala.toSeq.map { case (site, exec) => (site, exec.map(l.plans.get)) }
-      info(s"$name: ${got.size} jobs: ${got.map(_._1).mkString(", ")}")
-      got
-    } finally sc.removeSparkListener(l)
+    val got = JobGroupTrace(spark.sparkContext, s"budget-$name")(f).jobs
+    info(s"$name: ${got.size} jobs: ${got.map(_._1).mkString(", ")}")
+    got
   }
 
   private def inference(jobs: Seq[(String, Option[String])]): Seq[String] =
@@ -70,6 +42,10 @@ class JobBudgetSpec extends AnyFunSuite {
     val append = jobsOf("append")(idx.add(corpus.offset(200)))
     assert(append.size > 0)
     assert(inference(append).isEmpty, "append inferred schemas")
+    // the sha256 check runs on another thread; its jobs, named by its call
+    // site, must carry the append's job group
+    val check = append.filter(_._1.startsWith("sha256 verify of batch "))
+    assert(check.size >= 2, "the sha256 check's jobs are outside the append's job group")
   }
 
   test("a delete runs no schema inference and its query plan once") {

@@ -110,7 +110,7 @@ class MergeSpec extends AnyFunSuite {
     val delTerm = srA0.termdict.groupBy($"term").agg(sum($"docFreq").as("df"))
       .where($"df" > 5 && $"df" < nDocs / 2)
       .orderBy(desc("df"), asc("term")).select($"term").as[String].head()
-    assert(index.Deletes.deleteByTerm(spark, dirA, delTerm) > 0)
+    assert(index.Deletes.deleteByQuery(spark, dirA, TermQ(delTerm), cfg.field) > 0)
     Merger.merge(spark, dirA, cfg, metaA.segments.map(_.segId), newSegId = 100)
     val srA = new Searcher(spark, dirA)
     assert(srA.count(TermQ(delTerm)) == 0, "deleted docs must be compacted away")
@@ -159,7 +159,7 @@ class MergeSpec extends AnyFunSuite {
     val delTerm = sr0.termdict.groupBy($"term").agg(sum($"docFreq").as("df"))
       .where($"df" > 5 && $"df" < nDocs / 2)
       .orderBy(desc("df"), asc("term")).select($"term").as[String].head()
-    assert(index.Deletes.deleteByTerm(spark, dirA, delTerm) > 0)
+    assert(index.Deletes.deleteByQuery(spark, dirA, TermQ(delTerm), cfg.field) > 0)
     val saved = Merger.remapBucketBits
     try {
       Merger.remapBucketBits = 2 // 4-doc buckets: every segment ranks in MANY window tasks
@@ -225,7 +225,7 @@ class MergeSpec extends AnyFunSuite {
 
     // compaction path: delete some docs, merge again, compare to ground truth
     val delTerm = "parser"
-    assert(index.Deletes.deleteByTerm(spark, dir, delTerm) > 0)
+    assert(index.Deletes.deleteByQuery(spark, dir, TermQ(delTerm), mfCfg.field) > 0)
     Merger.merge(spark, dir, mfCfg, Seq(100), newSegId = 200)
     val sr2 = new Searcher(spark, dir)
     val hasTerm = udf((content: String) =>

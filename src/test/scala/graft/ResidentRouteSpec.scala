@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.JobGroupTrace
 import org.apache.spark.sql.functions.{spark_partition_id, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig}
@@ -55,7 +53,7 @@ class ResidentRouteSpec extends AnyFunSuite {
     val victims = full(1)._4.map(d => (full(1)._1, d)).toSet + ((full(0)._1, full(0)._3))
     val ids = clean.docmap.select($"segId", $"docId", $"path").as[(Int, Int, String)]
       .collect().collect { case (s, doc, p) if victims((s, doc)) => "id" + p.drop(1) }
-    assert(Deletes.deleteByQuery(spark, d, TermSetQ(ids.toSet)) == victims.size)
+    assert(Deletes.deleteByQuery(spark, d, TermSetQ(ids.toSet), "content") == victims.size)
     d
   }
 
@@ -75,46 +73,12 @@ class ResidentRouteSpec extends AnyFunSuite {
     "phrase" -> PhraseQ.of("alpha", "beta"),
     "sloppy phrase" -> PhraseQ(Seq(0 -> "alpha", 1 -> "beta"), slop = 2))
 
-  /** Jobs, submitted stages, the RDDs those stages run, and shuffle bytes
-    * of one job group.
-    */
-  private final class Shape extends SparkListener {
-    @volatile var group: String = ""
-    val jobs, stages = new AtomicInteger
-    val shuffleWrite, shuffleRead = new AtomicLong
-    val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    private def ours(p: java.util.Properties) =
-      p != null && p.getProperty("spark.jobGroup.id") == group
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (ours(e.properties)) jobs.incrementAndGet()
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      if (ours(e.properties)) {
-        stages.incrementAndGet(); mine.add(e.stageInfo.stageId)
-        e.stageInfo.rddInfos.foreach(r => rdds.add(r.name))
-      }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (mine.contains(e.stageId) && e.taskMetrics != null) {
-        shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
-      }
-  }
-
   /** Run `f` in its own job group; its (jobs, stages, RDD names, shuffle
     * bytes).
     */
   private def shapeOf(name: String)(f: => Any): (Int, Int, Set[String], Long) = {
-    val sc = spark.sparkContext
-    val l = new Shape
-    l.group = s"resident-$name-${System.nanoTime()}"
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(l.group, name)
-      try f finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      (l.jobs.get, l.stages.get, l.rdds.toArray(Array.empty[String]).toSet,
-        l.shuffleWrite.get + l.shuffleRead.get)
-    } finally sc.removeSparkListener(l)
+    val t = JobGroupTrace(spark.sparkContext, s"resident-$name")(f)
+    (t.jobs.size, t.stages, t.rdds, t.shuffleBytes)
   }
 
   private def warm(sr: Searcher): Unit =
@@ -142,6 +106,24 @@ class ResidentRouteSpec extends AnyFunSuite {
     assert(!resident.topDocs(TermQ("alpha"), 1200).exists(h => dead((h.segId, h.docId))))
   }
 
+  /** Term `t`'s blocks in `g`, read through the ranges the kernels read:
+    * its block range, each block's entry range and, with positions, each
+    * entry's CSR range.
+    */
+  private def blocksOf(g: SegmentCollect.Group, t: String): Seq[SegmentCollect.BlockRow] = {
+    val i = g.termIndex(t)
+    if (i < 0) Seq.empty
+    else (g.termStart(i) until g.termStart(i + 1)).map { b =>
+      val es = g.docStart(b) until g.docStart(b + 1)
+      val (pf, pl) =
+        if (!g.hasPositions) (Array.emptyIntArray, Array.emptyIntArray)
+        else (es.flatMap(e => g.posFlat.slice(g.posStart(e), g.posStart(e + 1))).toArray,
+          es.map(e => g.posStart(e + 1) - g.posStart(e)).toArray)
+      SegmentCollect.BlockRow(g.segId, t, g.blockIds(b), g.lastDocs(b), g.maxNormIds(b), g.maxTfs(b),
+        es.map(g.docIds).toArray, es.map(g.tfs).toArray, es.map(g.normIds).toArray, pf, pl)
+    }
+  }
+
   test("packed groups: pieces from several scan partitions merge bit-identically") {
     // a group packed whole == the same group merged from interleaved pieces,
     // and a term's blocks come back as scanned, bit for bit
@@ -157,8 +139,7 @@ class ResidentRouteSpec extends AnyFunSuite {
       assert(merged.rows.map(flat).toSeq == whole.rows.map(flat).toSeq, s"positions $positions: merge")
       for (t <- terms :+ "zzabsent") {
         val want = rows.filter(_.term == t).sortBy(_.blockId).map(flat).toSeq
-        assert(merged.blocks(t, positions).fold(Seq.empty[Any])(_.map(flat).toSeq) == want,
-          s"positions $positions: $t's blocks")
+        assert(blocksOf(merged, t).map(flat) == want, s"positions $positions: $t's blocks")
       }
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.query.Wand
-import graft.query.Wand.{Block, TermScorer}
+import graft.query.Wand.TermScorer
 import graft.score.Bm25
 
 /** Property mirror of the reference's block-WAND proptest
@@ -16,7 +16,9 @@ import graft.score.Bm25
   * norm cache of 1.0 gives dyadic tf-factors (1/2, 3/4, 7/8) — so the
   * comparison is exact (the reference's proptest uses nearly-equals because
   * its sums are order-sensitive; ours removes the order sensitivity
-  * instead, which also pins the doc sequence deterministically).
+  * instead, which also pins the doc sequence deterministically). The
+  * scorers read their terms in place in one packed group, between filler
+  * terms.
   */
 class WandPropertySpec extends AnyFunSuite {
 
@@ -31,18 +33,23 @@ class WandPropertySpec extends AnyFunSuite {
     docs.map(d => (d, TfChoices(rng.nextInt(3))))
   }
 
-  private def mkScorer(postings: Vector[(Int, Int)], termIdx: Int): TermScorer = {
-    val weight = Bm25.Weight(TermWeights(termIdx), flatCache, 1.0f)
-    val blocks = postings.grouped(BlockLen).map { chunk =>
-      val ds = chunk.map(_._1).toArray
-      val ts = chunk.map(_._2).toArray
-      val ns = Array.fill(chunk.length)(0)
-      val (mn, mt) =
-        if (chunk.length == BlockLen) graft.index.IndexBuilder.blockMaxPair(ts, ns, flatCache)
-        else (255, 255)
-      Block(ds.last, mn, mt, ds, ts, ns)
-    }.toArray
-    new TermScorer(weight, blocks)
+  /** One scorer per term, all terms' blocks packed into one group between
+    * filler terms.
+    */
+  private def mkScorers(terms: List[Vector[(Int, Int)]]): List[TermScorer] = {
+    val rows = terms.zipWithIndex.flatMap { case (postings, termIdx) =>
+      postings.grouped(BlockLen).zipWithIndex.map { case (chunk, blockId) =>
+        val ds = chunk.map(_._1).toArray
+        val ts = chunk.map(_._2).toArray
+        val ns = Array.fill(chunk.length)(0)
+        val (mn, mt) =
+          if (chunk.length == BlockLen) graft.index.IndexBuilder.blockMaxPair(ts, ns, flatCache)
+          else (255, 255)
+        Packed.block(s"t$termIdx", blockId, mn, mt, ds, ts, ns)
+      }
+    }
+    val g = Packed.group(rows)
+    terms.indices.toList.map(i => new TermScorer(Bm25.Weight(TermWeights(i), flatCache, 1.0f), g, g.termIndex(s"t$i")))
   }
 
   private def checkpointsManual(terms: List[Vector[(Int, Int)]]): List[(Int, Float)] = {
@@ -68,7 +75,7 @@ class WandPropertySpec extends AnyFunSuite {
       val terms = List.fill(k)(genTerm(rng))
       val expected = checkpointsManual(terms)
       val got = List.newBuilder[(Int, Float)]
-      val s = terms.zipWithIndex.map { case (ps, i) => mkScorer(ps, i) }
+      val s = mkScorers(terms)
       if (s.length == 1)
         Wand.blockWandSingle(s.head, Float.MinValue,
           (d, sc) => { got += ((d, sc)); sc })
@@ -95,7 +102,7 @@ class WandPropertySpec extends AnyFunSuite {
         if (score > th) Some((d, score)) else None
       }
       val got = List.newBuilder[(Int, Float)]
-      val s = terms.zipWithIndex.map { case (ps, i) => mkScorer(ps, i) }
+      val s = mkScorers(terms)
       Wand.blockWand(s, th, (d, sc) => { got += ((d, sc)); th }) // threshold stays
       assert(got.result() == expected)
     }

@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.concurrent.TimeLimits
 import org.scalatest.time.{Seconds, Span}
 import graft.query.Wand
-import graft.query.Wand.{Block, TermScorer}
+import graft.query.Wand.TermScorer
 import graft.score.Bm25
 
 /** Regression tests for the block-max WAND executor's termination
-  * invariants (reference `block_wand.rs`).
+  * invariants (reference `block_wand.rs`), its scorers reading their
+  * terms in place in a packed group, between filler terms.
   */
 class WandSpec extends AnyFunSuite with TimeLimits {
 
@@ -20,10 +21,11 @@ class WandSpec extends AnyFunSuite with TimeLimits {
     // with doc == TERMINATED. findPivot must return None when the pivot
     // lands on it (block_wand.rs:23-34), not spin. Before the fix this
     // looped forever (observed live on the sf0.001 corpus).
-    val live = new TermScorer(weight(0.5f),
-      Array(Block(5, 0, 1, Array(1, 5), Array(1, 1), Array(0, 0))))
-    val dead = new TermScorer(weight(0.5f),
-      Array(Block(3, 0, 1, Array(3), Array(1), Array(0))))
+    val g = Packed.group(Seq(
+      Packed.block("live", 0, 0, 1, Array(1, 5), Array(1, 1), Array(0, 0)),
+      Packed.block("dead", 0, 0, 1, Array(3), Array(1), Array(0))))
+    val live = new TermScorer(weight(0.5f), g, g.termIndex("live"))
+    val dead = new TermScorer(weight(0.5f), g, g.termIndex("dead"))
     dead.seek(100)
     assert(dead.doc == Wand.TERMINATED)
     // threshold between live.maxScore and live.maxScore + dead.maxScore
@@ -36,8 +38,8 @@ class WandSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("blockWandSingle terminates on exhausted scorer") {
-    val s = new TermScorer(weight(1.0f),
-      Array(Block(2, 0, 1, Array(0, 2), Array(1, 1), Array(0, 0))))
+    val g = Packed.group(Seq(Packed.block("t", 0, 0, 1, Array(0, 2), Array(1, 1), Array(0, 0))))
+    val s = new TermScorer(weight(1.0f), g, g.termIndex("t"))
     var seen = List.empty[Int]
     failAfter(Span(10, Seconds)) {
       Wand.blockWandSingle(s, Float.MinValue, (d, sc) => { seen ::= d; sc - 1e-3f })
