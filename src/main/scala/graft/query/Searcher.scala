@@ -71,14 +71,20 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * [[SegmentCollect.collect]], which reads the [[resident]] copy instead
     * when it fits: built once per Searcher, on its first collector query,
     * and cached `MEMORY_ONLY` in one partition per (segId, chunk)
-    * ([[SegmentCollect.buildResident]]). Its gate ([[fits]]): the postings
-    * table's on-disk bytes times [[Searcher.ResidentExpansion]] must fit
-    * [[Searcher.ResidentShare]] of the storage memory Spark reports. Above
-    * it — at the north star's scale a per-Searcher copy of every posting is
-    * unaffordable — every query takes the pruned scan path and every df
-    * lookup of unseen terms a termdict job; below it the driver term
-    * dictionary ([[dict]]) answers df lookups when it passes its own gate
-    * on the driver heap. The copy lives as long as the Searcher: once
+    * ([[SegmentCollect.buildResident]]). A query does not run a task per
+    * partition: it coalesces them into one task per
+    * [[SegmentCollect.MinTaskPostings]] postings of its terms' summed dfs
+    * ([[postingsWork]]), at least one and at most the task slots, dealt by
+    * entry count — one task for a small query, the slots for a hot term.
+    * The copy's gate ([[fits]]): the postings table's on-disk bytes times
+    * [[Searcher.ResidentExpansion]] must fit [[Searcher.ResidentShare]] of
+    * the storage memory Spark reports. Above it — at the north star's
+    * scale a per-Searcher copy of every posting is unaffordable — every
+    * query takes the pruned scan path, whose gather reduces into as many
+    * tasks by the same rule, and every df lookup of unseen terms a
+    * termdict job; below it the driver term dictionary ([[dict]]) answers
+    * df lookups when it passes its own gate on the driver heap. The copy
+    * lives as long as the Searcher: once
     * the Searcher is unreachable, Spark's `ContextCleaner` unpersists it
     * (and the block manager may evict it earlier under memory pressure; an
     * evicted partition is rebuilt from the build's shuffle output).
@@ -165,10 +171,15 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** Test seam: the driver heap the dictionary gate ([[dict]]) weighs. */
   private[graft] var driverMemory: Long = Runtime.getRuntime.maxMemory
 
+  /** Test seam: the postings per query task of [[SegmentCollect.collect]]'s
+    * sizing rule.
+    */
+  private[graft] var taskPostings: Long = SegmentCollect.MinTaskPostings
+
   /** The resident copy of this field's alive postings, built on first use
     * when it passes the gate; None means the scan path.
     */
-  private[query] lazy val resident: Option[SegmentCollect.Groups] =
+  private[query] lazy val resident: Option[SegmentCollect.Resident] =
     if (fits) Some(SegmentCollect.buildResident(this, positions = indexMeta.exists(_.withPositions)))
     else None
 
@@ -300,6 +311,21 @@ class Searcher(val spark: SparkSession, val indexDir: String,
         t => dfCache((fld, t))
     }
     distinct.flatMap { t => val n = df(t); if (n > 0) Some(t -> n) else None }.toMap
+  }
+
+  /** The work of a collector query over `terms` in [[field]], the summed
+    * dfs that size its tasks, when it is known without a Spark job: from
+    * the driver dictionary, or from df lookups this Searcher has resolved
+    * (every collector looks its terms' dfs up for their weights first).
+    */
+  private[query] def postingsWork(terms: Seq[String]): Option[Long] = {
+    val distinct = terms.distinct
+    dict match {
+      case Some(d) => Some(distinct.iterator.map(d.docFreq).sum)
+      case None =>
+        val known = distinct.flatMap(t => dfCache.get((field, t)))
+        if (known.length == distinct.length) Some(known.sum) else None
+    }
   }
 
   def weightsFor(terms: Seq[String], fld: String = field): Map[String, Bm25.Weight] =

@@ -8,11 +8,11 @@ import graft.score.Bm25
   * Using Block-Max Indexes", the paper the reference itself cites).
   *
   * Catalyst cannot express threshold-ratcheted block skipping, so this runs
-  * as a kernel on the shared [[SegmentCollect]] stage: one task per
-  * (segment, docId chunk) group, the reference's one-rayon-task-per-segment
-  * shape (`searcher.rs:220`) — and the thing that scales linearly with
-  * executors. Per-chunk top-k fruits are merged on the driver
-  * (`top_collector.rs:102-122`).
+  * as a kernel on the shared [[SegmentCollect]] stage: once per (segment,
+  * docId chunk) group, the reference's per-segment collector
+  * (`searcher.rs:220`), in as many tasks as the query's work calls for —
+  * the thing that scales with executors. Per-chunk top-k fruits are merged
+  * in each task and then on the driver (`top_collector.rs:102-122`).
   *
   * A task gets its group from [[SegmentCollect.collect]] (the Searcher's
   * resident copy, or a scan pruned on the `term` predicate when there is

@@ -12,7 +12,8 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, SegmentCollect, Searcher,
   * doc of one block, and the lastDoc of another), each collector route
   * gives bit-identical hits and counts on the resident copy, on the forced
   * scan path, and on the compile route; a resident query runs one job of
-  * one stage that reads no Parquet and moves no shuffle bytes; and on the
+  * one stage in one task (its terms' postings are far below one task's
+  * share) that reads no Parquet and moves no shuffle bytes; and on the
   * scan path a query of one distinct term moves no shuffle bytes, while a
   * multi-term WAND is one gather job. The resident Searcher's df lookups
   * read its driver-side term dictionary: a query over terms it has not
@@ -73,12 +74,19 @@ class ResidentRouteSpec extends AnyFunSuite {
     "phrase" -> PhraseQ.of("alpha", "beta"),
     "sloppy phrase" -> PhraseQ(Seq(0 -> "alpha", 1 -> "beta"), slop = 2))
 
-  /** Run `f` in its own job group; its (jobs, stages, RDD names, shuffle
-    * bytes).
-    */
-  private def shapeOf(name: String)(f: => Any): (Int, Int, Set[String], Long) = {
+  /** What one query ran: jobs, stages, tasks, RDD names and shuffle bytes. */
+  private final case class Shape(jobs: Int, stages: Int, tasks: Int, rdds: Set[String], shuffle: Long) {
+    /** The resident route's shape: one job of one stage in one task over
+      * the copy `copy`, no Parquet read and no shuffle.
+      */
+    def isResident(copy: String): Boolean =
+      jobs == 1 && stages == 1 && tasks == 1 && rdds(copy) && !rdds("FileScanRDD") && shuffle == 0
+  }
+
+  /** Run `f` in its own job group; what it ran. */
+  private def shapeOf(name: String)(f: => Any): Shape = {
     val t = JobGroupTrace(spark.sparkContext, s"resident-$name")(f)
-    (t.jobs.size, t.stages, t.rdds, t.shuffleBytes)
+    Shape(t.jobs.size, t.stages, t.tasks, t.rdds, t.shuffleBytes)
   }
 
   private def warm(sr: Searcher): Unit =
@@ -193,16 +201,15 @@ class ResidentRouteSpec extends AnyFunSuite {
       s"$name count" -> (() => resident.count(q)))
     }
     for ((what, run) <- asked) {
-      // a single term's count with deletes pinned counts the copy's entries
-      val (jobs, stages, rdds, shuffle) = shapeOf(what)(run())
-      assert(jobs == 1 && stages == 1, s"$what: $jobs jobs, $stages stages")
-      assert(rdds(name) && !rdds("FileScanRDD"), s"$what: ran $rdds")
-      assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
+      // a single term's count with deletes pinned counts the copy's entries;
+      // every query's terms hold far fewer postings than one task's share
+      val shape = shapeOf(what)(run())
+      assert(shape.isResident(name), s"$what: $shape")
     }
     // the forced scan path reads Parquet and shuffles
     warm(scan)
-    val (_, _, rdds, shuffle) = shapeOf("scan")(scan.topDocs(disj, k))
-    assert(rdds("FileScanRDD") && shuffle > 0, s"scan path ran $rdds, $shuffle shuffle bytes")
+    val viaScan = shapeOf("scan")(scan.topDocs(disj, k))
+    assert(viaScan.rdds("FileScanRDD") && viaScan.shuffle > 0, s"scan path: $viaScan")
   }
 
   test("scan path: one-term queries shuffle nothing, a 2-term WAND is one job") {
@@ -217,17 +224,16 @@ class ResidentRouteSpec extends AnyFunSuite {
     warm(scan)
     oneTerm.foreach(_._2()) // the first query reads the tombstones
     for ((what, run) <- oneTerm) {
-      val (jobs, _, rdds, shuffle) = shapeOf(s"scan $what")(run())
-      assert(jobs == 1 && rdds("FileScanRDD"), s"$what: $jobs jobs, ran $rdds")
-      assert(shuffle == 0, s"$what: $shuffle shuffle bytes")
+      val shape = shapeOf(s"scan $what")(run())
+      assert(shape.jobs == 1 && shape.rdds("FileScanRDD") && shape.shuffle == 0, s"$what: $shape")
     }
     val wantCount = resident.compile(phrase).count()
     assert(wantCount > 0, "the one-term phrase matches nothing")
     assert(key(scan.topDocs(phrase, k)) == key(CompileRoute.topK(resident, phrase, k)))
     assert(scan.count(phrase) == wantCount && resident.count(phrase) == wantCount)
     // several terms: one gather job of two stages, with no threshold probe
-    val (jobs, stages, _, shuffle) = shapeOf("scan WAND")(scan.topDocs(disj, k))
-    assert(jobs == 1 && stages == 2 && shuffle > 0, s"2-term WAND: $jobs jobs, $stages stages, $shuffle shuffle bytes")
+    val wand = shapeOf("scan WAND")(scan.topDocs(disj, k))
+    assert(wand.jobs == 1 && wand.stages == 2 && wand.shuffle > 0, s"2-term WAND: $wand")
   }
 
   test("an unwarmed resident Searcher: unseen terms cost no df job, an absent term no job") {
@@ -242,8 +248,8 @@ class ResidentRouteSpec extends AnyFunSuite {
         s"$name topDocsWithCount" -> (() => cold.topDocsWithCount(q, k)),
         s"$name count" -> (() => cold.count(q)))
       for ((what, run) <- asked) {
-        val (jobs, stages, rdds, _) = shapeOf(s"cold $what")(run())
-        assert(jobs == 1 && stages == 1 && !rdds("FileScanRDD"), s"cold $what: $jobs jobs, $stages stages, ran $rdds")
+        val shape = shapeOf(s"cold $what")(run())
+        assert(shape.isResident(s"resident postings $dir content"), s"cold $what: $shape")
       }
       if (name == "single term") {
         val none: Seq[(String, () => Any)] = Seq(
@@ -254,8 +260,8 @@ class ResidentRouteSpec extends AnyFunSuite {
           "absent docFreqs" -> (() => assert(cold.docFreqs(Seq("zzabsent", "zzother")).isEmpty)),
           "unseen docFreqs" -> (() => cold.docFreqs(Seq("delta", "rareterm", "id0001"))))
         for ((what, run) <- none) {
-          val (jobs, _, _, _) = shapeOf(s"cold $what")(run())
-          assert(jobs == 0, s"cold $what: $jobs jobs")
+          val shape = shapeOf(s"cold $what")(run())
+          assert(shape.jobs == 0, s"cold $what: $shape")
         }
       }
     }
@@ -271,8 +277,8 @@ class ResidentRouteSpec extends AnyFunSuite {
     assert(all.length > 1200, s"${all.length} terms")
     val asked = all ++ Seq("zzabsent", "", "ALPHA") ++ all.take(5) ++ Seq("alpha", "alpha")
     val fromTable = table.docFreqs(asked)
-    val (jobs, _, _, _) = shapeOf("dictionary docFreqs")(assert(dict.docFreqs(asked) == fromTable))
-    assert(jobs == 0, s"dictionary lookups: $jobs jobs")
+    val lookups = shapeOf("dictionary docFreqs")(assert(dict.docFreqs(asked) == fromTable))
+    assert(lookups.jobs == 0, s"dictionary lookups: $lookups")
     val want = table.termdict.where($"field" === "content").groupBy($"term").agg(sum($"docFreq"))
       .as[(String, Long)].collect().toMap
     assert(dict.docFreqs(asked) == want)
@@ -297,10 +303,10 @@ class ResidentRouteSpec extends AnyFunSuite {
     val over = new Searcher(spark, dir)
     over.driverMemory = 1L // no dictionary fits in a one-byte driver heap
     val asked = Seq("alpha", "beta", "rareterm", "zzabsent", "alpha", "id0001")
-    val (jobs, _, _, _) = shapeOf("over the gate docFreqs")(assert(over.docFreqs(asked) == dict.docFreqs(asked)))
-    assert(jobs >= 1, "a df lookup over the gate reads the termdict table")
-    val (again, _, _, _) = shapeOf("over the gate repeat")(over.docFreqs(asked))
-    assert(again == 0, s"a repeat lookup: $again jobs")
+    val first = shapeOf("over the gate docFreqs")(assert(over.docFreqs(asked) == dict.docFreqs(asked)))
+    assert(first.jobs >= 1, "a df lookup over the gate reads the termdict table")
+    val again = shapeOf("over the gate repeat")(over.docFreqs(asked))
+    assert(again.jobs == 0, s"a repeat lookup: $again")
     for (t <- asked) assert(over.docFreq("content", t) == dict.docFreq("content", t), t)
     // the collectors still read the resident copy, with the same answers
     for ((name, q) <- routes) {
@@ -308,9 +314,10 @@ class ResidentRouteSpec extends AnyFunSuite {
       val (want, wantCount) = dict.topDocsWithCount(q, k)
       assert(key(hits) == key(want) && cnt == wantCount, s"$name over the dictionary gate")
     }
-    val copy = s"resident postings $dir content"
-    val (_, _, rdds, _) = shapeOf("over the gate query")(over.topDocs(TermQ("epsilon"), k))
-    assert(rdds(copy) && !rdds("FileScanRDD"), s"over the gate ran $rdds")
+    // the resolved dfs size the query's tasks as the dictionary's would
+    over.docFreqs(Seq("epsilon"))
+    val query = shapeOf("over the gate query")(over.topDocs(TermQ("epsilon"), k))
+    assert(query.isResident(s"resident postings $dir content"), s"over the gate: $query")
   }
 
   test("a Searcher without a manifest takes the scan path: same answers") {

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** What one job group ran, seen by a listener scoped to the group: its
   * jobs (call site, and the physical plan of the SQL execution each ran
-  * in, if any), its submitted stages, the RDDs those stages ran, and the
-  * shuffle bytes their tasks wrote and read.
+  * in, if any), its submitted stages, the RDDs those stages ran, the tasks
+  * that ended in them, and the shuffle bytes those tasks wrote and read.
   */
 final class JobGroupTrace private (val group: String) extends SparkListener {
   private val jobSites = new ConcurrentLinkedQueue[(String, Option[Long])]()
@@ -19,6 +19,7 @@ final class JobGroupTrace private (val group: String) extends SparkListener {
   private val stageIds = ConcurrentHashMap.newKeySet[Int]()
   private val rddNames = ConcurrentHashMap.newKeySet[String]()
   private val shuffle = new AtomicLong
+  private val stageTasks = new ConcurrentHashMap[Int, AtomicInteger]()
 
   private def ours(p: java.util.Properties) =
     p != null && p.getProperty("spark.jobGroup.id") == group
@@ -32,12 +33,15 @@ final class JobGroupTrace private (val group: String) extends SparkListener {
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
     if (ours(e.properties)) {
       stageCount.incrementAndGet(); stageIds.add(e.stageInfo.stageId)
+      stageTasks.putIfAbsent(e.stageInfo.stageId, new AtomicInteger)
       e.stageInfo.rddInfos.foreach(r => rddNames.add(r.name))
     }
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-    if (stageIds.contains(e.stageId) && e.taskMetrics != null) {
-      shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
-        e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+    if (stageIds.contains(e.stageId)) {
+      stageTasks.get(e.stageId).incrementAndGet()
+      if (e.taskMetrics != null)
+        shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+          e.taskMetrics.shuffleReadMetrics.totalBytesRead)
     }
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
@@ -49,6 +53,13 @@ final class JobGroupTrace private (val group: String) extends SparkListener {
     jobSites.asScala.toSeq.map { case (site, exec) => (site, exec.map(plans.get)) }
   def stages: Int = stageCount.get
   def rdds: Set[String] = rddNames.asScala.toSet
+  /** Tasks that ended in the group's stages. */
+  def tasks: Int = stageTasks.values.asScala.map(_.get).sum
+  /** Tasks that ended in the group's last submitted stage: a job's result
+    * stage, when the group ran one job.
+    */
+  def lastStageTasks: Int =
+    stageTasks.asScala.maxByOption(_._1).fold(0)(_._2.get)
   /** Shuffle bytes written plus shuffle bytes read. */
   def shuffleBytes: Long = shuffle.get
 }
