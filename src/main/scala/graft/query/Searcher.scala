@@ -74,8 +74,8 @@ class Searcher(val spark: SparkSession, val indexDir: String,
     * ([[SegmentCollect.buildResident]]). A query does not run a task per
     * partition: it coalesces them into one task per
     * [[SegmentCollect.MinTaskPostings]] postings of its terms' summed dfs
-    * ([[postingsWork]]), at least one and at most the task slots, dealt by
-    * entry count — one task for a small query, the slots for a hot term.
+    * ([[postingsWork]]), at least one and at most the task slots — one
+    * task for a small query, the slots for a large one.
     * The copy's gate ([[fits]]): the postings table's on-disk bytes times
     * [[Searcher.ResidentExpansion]] must fit [[Searcher.ResidentShare]] of
     * the storage memory Spark reports. Above it — at the north star's
@@ -171,15 +171,10 @@ class Searcher(val spark: SparkSession, val indexDir: String,
   /** Test seam: the driver heap the dictionary gate ([[dict]]) weighs. */
   private[graft] var driverMemory: Long = Runtime.getRuntime.maxMemory
 
-  /** Test seam: the postings per query task of [[SegmentCollect.collect]]'s
-    * sizing rule.
-    */
-  private[graft] var taskPostings: Long = SegmentCollect.MinTaskPostings
-
   /** The resident copy of this field's alive postings, built on first use
     * when it passes the gate; None means the scan path.
     */
-  private[query] lazy val resident: Option[SegmentCollect.Resident] =
+  private[query] lazy val resident: Option[SegmentCollect.Groups] =
     if (fits) Some(SegmentCollect.buildResident(this, positions = indexMeta.exists(_.withPositions)))
     else None
 

@@ -1,8 +1,7 @@
 package graft.query
 
 import org.apache.spark.{HashPartitioner, Partitioner}
-import org.apache.spark.graft.CacheLocations
-import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -49,12 +48,11 @@ import org.apache.spark.storage.StorageLevel
   * gives one task per [[MinTaskPostings]] postings of the query terms'
   * summed dfs, at least one and at most the cluster's task slots. The copy
   * keeps each group in its own partition, its caching unit, and a query
-  * coalesces those partitions into its tasks ([[Resident.tasks]]), dealt
-  * by entry count so that no task carries the query's latency alone; the
-  * scan path's gather reduces into that many partitions. Each task merges
-  * its groups' fruits, so the driver merges one fruit per task. Both
-  * sources feed a kernel complete docs, so they give bit-identical
-  * answers at any task count.
+  * coalesces those partitions into its tasks with Spark's default,
+  * locality-aware coalescer; the scan path's gather reduces into that many
+  * partitions. Each task merges its groups' fruits, so the driver merges
+  * one fruit per task. Both sources feed a kernel complete docs, so they
+  * give bit-identical answers at any task count.
   */
 object SegmentCollect {
 
@@ -291,68 +289,6 @@ object SegmentCollect {
     def getPartition(key: Any): Int = keys(key.asInstanceOf[(Int, Int)]) % numPartitions
   }
 
-  /** The resident copy: `groups`, cached one (segId, chunk) group per
-    * partition, and each partition's entry count, the weight
-    * [[Resident.tasks]] deals them by.
-    */
-  final class Resident(val groups: Groups, entries: Array[Long]) {
-    /** The copy's partitions coalesced into at most `n` tasks (more only
-      * when more executors hold the copy, see [[deal]]) — a narrow
-      * dependency, so a query over it is still one job of one stage that
-      * reads the cached blocks.
-      */
-    def tasks(n: Int): Groups = groups.coalesce(n, shuffle = false, Some(new Coalescer(entries)))
-  }
-
-  /** Spark's hook for [[deal]]: each partition's cache location is asked
-    * of the block manager when the query's job is planned, so a group
-    * recomputed on another executor is dealt where it now lives.
-    */
-  private final class Coalescer(entries: Array[Long]) extends PartitionCoalescer with Serializable {
-    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
-      val parts = parent.partitions
-      deal(entries, CacheLocations(parent), maxPartitions).map { case (loc, bin) =>
-        val pg = new PartitionGroup(loc)
-        pg.partitions ++= bin.map(parts)
-        pg
-      }.toArray
-    }
-  }
-
-  /** Deal groups of the given `weights`, held at `locs`, into bins: each
-    * location's groups into bins of their own, so no task reads a group
-    * from another executor, and `n` bins over all, except that each
-    * location holding a group has one. One bin each, then every further
-    * bin goes to the location with the most weight per bin; within a
-    * location, groups are dealt largest first into the lightest bin (LPT,
-    * ties to the bin of fewer groups), so its heaviest bin is at most its
-    * mean bin weight plus its heaviest group. A location gets no more
-    * bins than it has groups.
-    * Returns each bin's location and group indices.
-    */
-  def deal(weights: Array[Long], locs: Array[Option[String]], n: Int): Seq[(Option[String], Array[Int])] = {
-    val byLoc = weights.indices.groupBy(locs).toSeq.sortBy(_._2.head)
-    val total = byLoc.map(_._2.iterator.map(weights).sum)
-    val bins = Array.fill(byLoc.length)(1)
-    var spare = n - byLoc.length
-    while (spare > 0) {
-      byLoc.indices.filter(l => bins(l) < byLoc(l)._2.length).maxByOption(l => total(l).toDouble / bins(l)) match {
-        case Some(l) => bins(l) += 1; spare -= 1
-        case None => spare = 0
-      }
-    }
-    byLoc.zip(bins).flatMap { case ((loc, groups), m) =>
-      val load = new Array[Long](m)
-      val held = Array.fill(m)(Array.newBuilder[Int])
-      val size = new Array[Int](m)
-      for (g <- groups.sortBy(g => -weights(g))) {
-        val b = (0 until m).minBy(b => (load(b), size(b)))
-        load(b) += weights(g); size(b) += 1; held(b) += g
-      }
-      held.iterator.map(_.result()).filter(_.nonEmpty).map(loc -> _)
-    }
-  }
-
   /** Postings (summed dfs of the query terms) per query task: below it one
     * more task costs more in launch and wait than it saves in kernel
     * time. Measured on a 20k-doc, 8-segment index with positions on 4
@@ -363,45 +299,49 @@ object SegmentCollect {
   final val MinTaskPostings: Long = 1L << 15
 
   /** The sizing rule: tasks for a query of `work` postings, one per
-    * `perTask`, at least one and at most `slots`.
+    * [[MinTaskPostings]], at least one and at most `slots`.
     */
-  def taskCount(work: Long, perTask: Long, slots: Int): Int =
-    if (work <= 0) 1 else math.max(1L, math.min(slots.toLong, (work - 1) / perTask + 1)).toInt
+  def taskCount(work: Long, slots: Int): Int =
+    if (work <= 0) 1 else math.max(1L, math.min(slots.toLong, (work - 1) / MinTaskPostings + 1)).toInt
 
   /** Build the resident copy of `searcher`'s field: the [[gather]] of its
     * alive postings (with CSR positions when `positions`), cached
-    * `MEMORY_ONLY` — one job, which this runs and which counts each
-    * group's entries.
+    * `MEMORY_ONLY` — one job, which this runs.
     */
-  def buildResident(searcher: Searcher, positions: Boolean): Resident = {
+  def buildResident(searcher: Searcher, positions: Boolean): Groups = {
     import searcher.spark.implicits._
     val copy = gather(searcher, blockRows(searcher.postings.where($"field" === searcher.field), positions).rdd,
       positions, maxParts = Int.MaxValue)
       .setName(s"resident postings ${searcher.indexDir} ${searcher.field}")
       .persist(StorageLevel.MEMORY_ONLY)
-    new Resident(copy, copy.mapPartitions(gs => Iterator.single(gs.map(_.docIds.length.toLong).sum)).collect())
+    copy.count()
+    copy
   }
 
   /** The one way a kernel reaches posting blocks: run `kernel(group, the
     * index in it of each of terms)` per group of `searcher`'s resident
     * copy, or, when it has none, of the scan path's groups (`positions`
     * shapes the scan); a group holding none of the terms yields no fruit.
-    * The groups run in [[taskCount]] tasks, sized by the terms' summed dfs
-    * when the Searcher knows them without a job ([[Searcher.postingsWork]]),
-    * else in one task per slot. Each task [[merge]]s its fruits, and the
-    * driver folds the tasks' into the global top `k` and the summed count.
+    * The groups run in `tasks` tasks, by default [[taskCount]]'s, sized by
+    * the terms' summed dfs when the Searcher knows them without a job
+    * ([[Searcher.postingsWork]]), else one per slot: the copy's partitions
+    * coalesce into them (a narrow dependency, so a resident query is still
+    * one job of one stage over the cached blocks), the scan path's gather
+    * reduces into them. Each task [[merge]]s its fruits, and the driver
+    * folds the tasks' into the global top `k` and the summed count.
     */
-  def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int)(kernel: Kernel): Fruit = {
-    def tasks: Int = {
+  def collect(searcher: Searcher, terms: Seq[String], positions: Boolean, k: Int,
+              tasks: Option[Int] = None)(kernel: Kernel): Fruit = {
+    def n: Int = tasks.getOrElse {
       val slots = searcher.spark.sparkContext.defaultParallelism
-      searcher.postingsWork(terms).fold(slots)(taskCount(_, searcher.taskPostings, slots))
+      searcher.postingsWork(terms).fold(slots)(taskCount(_, slots))
     }
     val groups = searcher.resident match {
-      case Some(copy) => copy.tasks(tasks)
+      case Some(copy) => copy.coalesce(n)
       case None =>
         val rows = scan(searcher, terms, positions).rdd
         if (terms.distinct.length == 1) rows.mapPartitions(pack(_, positions)(_.segId).map(_._2))
-        else gather(searcher, rows, positions, tasks)
+        else gather(searcher, rows, positions, n)
     }
     val fruits = groups.mapPartitions { gs =>
       Iterator.single(merge(gs.flatMap { g =>

@@ -3,13 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.query.SegmentCollect
 
-/** The resident query's sizing rule and its group dealer, with no Spark
-  * job: `taskCount` stays in [1, slots] and never falls as the work grows;
-  * `deal` places every group in exactly one bin, makes at most `n` bins
-  * when one executor holds the copy, keeps each bin on one location when
-  * several do, and bounds each location's heaviest bin by its mean bin
-  * weight plus its heaviest group (the LPT bound). 300 seeded random cases
-  * each, empty groups included.
+/** The resident query's sizing rule, with no Spark job: `taskCount` stays
+  * in [1, slots] and never falls as the work grows.
   */
 class TaskSizingSpec extends AnyFunSuite {
   private val per = SegmentCollect.MinTaskPostings
@@ -17,65 +12,15 @@ class TaskSizingSpec extends AnyFunSuite {
   test("taskCount: in [1, slots] and monotone in the work") {
     val works = (Seq(0L, 1L, per - 1, per, per + 1, 2 * per, 7 * per + 3, Long.MaxValue / 2) ++
       (0 until 200).map(i => i * per / 16)).sorted
-    for (slots <- Seq(1, 2, 3, 4, 8, 32, 1024); perTask <- Seq(1L, per, 3 * per)) {
-      val ns = works.map(SegmentCollect.taskCount(_, perTask, slots))
+    for (slots <- Seq(1, 2, 3, 4, 8, 32, 1024)) {
+      val ns = works.map(SegmentCollect.taskCount(_, slots))
       assert(ns.forall(n => n >= 1 && n <= slots), s"slots $slots: $ns")
-      assert(ns.zip(ns.tail).forall { case (a, b) => a <= b }, s"slots $slots, per task $perTask: not monotone")
+      assert(ns.zip(ns.tail).forall { case (a, b) => a <= b }, s"slots $slots: not monotone")
     }
-    assert(SegmentCollect.taskCount(0L, per, 4) == 1)
-    assert(SegmentCollect.taskCount(per, per, 4) == 1)
-    assert(SegmentCollect.taskCount(per + 1, per, 4) == 2)
-    assert(SegmentCollect.taskCount(100 * per, per, 4) == 4)
-  }
-
-  /** Seeded weights: uneven, a share of them 0, sometimes none at all. */
-  private def weights(rng: scala.util.Random): Array[Long] =
-    Array.fill(rng.nextInt(40)) {
-      if (rng.nextInt(5) == 0) 0L else (1 + rng.nextInt(10)).toLong * (1 + rng.nextInt(1000))
-    }
-
-  /** Every group in exactly one bin, and each location's LPT bound. */
-  private def checkDeal(w: Array[Long], locs: Array[Option[String]],
-                        bins: Seq[(Option[String], Array[Int])], what: String): Unit = {
-    assert(bins.flatMap(_._2).sorted == w.indices, s"$what: groups placed ${bins.map(_._2.toSeq)}")
-    assert(bins.forall(_._2.nonEmpty), s"$what: an empty bin")
-    for ((loc, bs) <- bins.groupBy(_._1)) {
-      assert(bs.forall(_._2.forall(g => locs(g) == loc)), s"$what: a bin crosses locations")
-      val loads = bs.map(_._2.iterator.map(w).sum)
-      val heaviest = bs.flatMap(_._2).map(w).max
-      assert(loads.max.toDouble <= loads.sum.toDouble / bs.length + heaviest,
-        s"$what at $loc: loads $loads, heaviest group $heaviest")
-    }
-  }
-
-  test("deal on one executor: at most n bins, each group once, the LPT bound") {
-    val rng = new scala.util.Random(12)
-    for (c <- 0 until 300) {
-      val w = weights(rng)
-      val n = 1 + rng.nextInt(10)
-      val locs = Array.fill[Option[String]](w.length)(Some("executor_h_0"))
-      val bins = SegmentCollect.deal(w, locs, n)
-      checkDeal(w, locs, bins, s"case $c (n $n, ${w.length} groups)")
-      assert(bins.length == math.min(n, w.length), s"case $c: ${bins.length} bins for n $n, ${w.length} groups")
-    }
-    // no location known deals the same way
-    val w = Array(50L, 5L, 5L, 5L, 0L, 40L)
-    val none = SegmentCollect.deal(w, Array.fill(w.length)(None), 2)
-    assert(none.map(_._2.toSeq) == Seq(Seq(0, 3), Seq(5, 1, 2, 4)))
-  }
-
-  test("deal over several executors: bins stay on one executor, max(n, executors) bins") {
-    val rng = new scala.util.Random(34)
-    for (c <- 0 until 300) {
-      val w = weights(rng)
-      val n = 1 + rng.nextInt(10)
-      val held = 1 + rng.nextInt(4)
-      val locs = Array.fill[Option[String]](w.length)(Some(s"executor_h${rng.nextInt(held)}_${rng.nextInt(held)}"))
-      val bins = SegmentCollect.deal(w, locs, n)
-      checkDeal(w, locs, bins, s"case $c (n $n, ${w.length} groups)")
-      val executors = locs.distinct.length
-      assert(bins.length <= math.max(n, executors), s"case $c: ${bins.length} bins, n $n, $executors executors")
-      assert(bins.length >= math.min(n, w.length), s"case $c: ${bins.length} bins for n $n, ${w.length} groups")
-    }
+    assert(SegmentCollect.taskCount(0L, 4) == 1)
+    assert(SegmentCollect.taskCount(per, 4) == 1)
+    assert(SegmentCollect.taskCount(per + 1, 4) == 2)
+    assert(SegmentCollect.taskCount(3 * per + 1, 4) == 4)
+    assert(SegmentCollect.taskCount(100 * per, 4) == 4)
   }
 }

@@ -9,10 +9,11 @@ import graft.query.{BoolQ, Hit, Occur, PhraseQ, Query, SegmentCollect, Searcher,
   * four appends of four segments whose sizes differ about 10:1, with
   * tombstones pinned in every append. On every collector route, the
   * resident copy and the forced scan path give the compile route's hits,
-  * raw f32 score bits and counts, both at the default postings per task
-  * (one task for these small queries) and at one posting per task (as many
-  * tasks as slots, the groups dealt by weight); and the stage that runs
-  * the kernels never has more tasks than the task slots.
+  * raw f32 score bits and counts, in one task for these small queries, and
+  * the stage that runs the kernels never has more tasks than the task
+  * slots. Driven through [[SegmentCollect.collect]] with an explicit task
+  * count, a query in several tasks gives its one-task answer on both
+  * sources, and the copy's query stage runs that many tasks.
   */
 class UnevenSegmentsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -65,23 +66,19 @@ class UnevenSegmentsSpec extends AnyFunSuite {
     assert(dead >= 8, s"tombstones in $dead segments")
   }
 
-  test("every collector route, resident and forced scan, one task and the slots: == compile route") {
+  test("every collector route, resident and forced scan: == compile route, at most the slots") {
     val slots = spark.sparkContext.defaultParallelism
     val reference = new Searcher(spark, dir)
-    val want = routes.map { case (name, q, _) =>
-      val count = reference.compile(q).count()
-      assert(count > 0, s"$name matches nothing")
-      name -> (key(CompileRoute.topK(reference, q, k)), count)
-    }.toMap
-    for (path <- Seq("resident", "scan"); perTask <- Seq(SegmentCollect.MinTaskPostings, 1L)) {
+    for (path <- Seq("resident", "scan")) {
       val sr = new Searcher(spark, dir)
       sr.forceScan = path == "scan"
-      sr.taskPostings = perTask
       // the copy, the tombstones and the field statistics load outside the traces
       sr.topDocs(TermQ("epsilon"), 1)
       for ((name, q, terms) <- routes) {
-        val where = s"$name on the $path path, ${if (perTask == 1L) "the slots" else "one task"}"
-        val (wantHits, wantCount) = want(name)
+        val where = s"$name on the $path path"
+        val wantHits = key(CompileRoute.topK(reference, q, k))
+        val wantCount = reference.compile(q).count()
+        assert(wantCount > 0, s"$name matches nothing")
         sr.docFreqs(terms) // the route's df lookups, outside the trace
         // one distinct term on the scan path runs its kernels in the scan's
         // own tasks, one per file split, with no gather to size
@@ -90,14 +87,51 @@ class UnevenSegmentsSpec extends AnyFunSuite {
           var out: Option[A] = None
           val t = JobGroupTrace(spark.sparkContext, s"uneven-$path-$what") { out = Some(f) }
           if (gathered) assert(t.lastStageTasks <= slots, s"$where: $what ran ${t.lastStageTasks} tasks on $slots slots")
-          if (path == "resident")
-            assert(t.tasks == (if (perTask == 1L) slots else 1), s"$where: $what ran ${t.tasks} tasks")
+          // these terms hold far fewer postings than one task's share
+          if (path == "resident") assert(t.tasks == 1, s"$where: $what ran ${t.tasks} tasks")
           out.get
         }
         assert(key(traced("topDocs")(sr.topDocs(q, k))) == wantHits, s"$where: topDocs")
         val (hits, cnt) = traced("topDocsWithCount")(sr.topDocsWithCount(q, k))
         assert(key(hits) == wantHits && cnt == wantCount, s"$where: topDocsWithCount")
         assert(traced("count")(sr.count(q)) == wantCount, s"$where: count")
+      }
+    }
+  }
+
+  test("several tasks: the copy coalesced, the scan gather reduced, one task's answer") {
+    val slots = spark.sparkContext.defaultParallelism
+    val reference = new Searcher(spark, dir)
+    // each doc holding a term, scored by its summed tf over the terms: ties
+    // are frequent, so the per-task merge must keep the global order
+    val byTf: SegmentCollect.Kernel = { (g, at) =>
+      val tf = scala.collection.mutable.Map.empty[Int, Int]
+      for (i <- at if i >= 0; e <- g.entryStart(i) until g.entryEnd(i))
+        tf(g.docIds(e)) = tf.getOrElse(g.docIds(e), 0) + g.tfs(e)
+      (tf.iterator.map { case (d, f) => Hit(g.segId, d, f.toFloat) }.toArray, tf.size.toLong)
+    }
+    val asked = Seq(Seq("rareterm"), Seq("alpha", "gamma"), Seq("delta", "rareterm", "epsilon"))
+    for (path <- Seq("resident", "scan"); terms <- asked) {
+      val sr = new Searcher(spark, dir)
+      sr.forceScan = path == "scan"
+      sr.topDocs(TermQ("epsilon"), 1) // the copy and the tombstones load outside the traces
+      // the copy's partitions: one per (segId, chunk) group
+      val groups = sr.indexMeta.get.segments.map(s => (math.max(0L, s.rows - 1) / sr.chunkDocs + 1).toInt).sum
+      val want = reference.compile(BoolQ(terms.map(t => Occur.Should -> TermQ(t)))).count()
+      val (one, oneCount) = SegmentCollect.collect(sr, terms, positions = false, k, Some(1))(byTf)
+      assert(oneCount == want && one.length == math.min(k.toLong, want), s"$path $terms: one task")
+      for (n <- Seq(2, slots, 64)) {
+        val where = s"$path $terms in $n tasks"
+        var out: Option[SegmentCollect.Fruit] = None
+        val t = JobGroupTrace(spark.sparkContext, s"uneven-tasks-$path-${terms.mkString}-$n") {
+          out = Some(SegmentCollect.collect(sr, terms, positions = false, k, Some(n))(byTf))
+        }
+        val (hits, cnt) = out.get
+        assert(key(hits) == key(one) && cnt == oneCount, where)
+        if (path == "resident")
+          assert(t.stages == 1 && t.tasks == math.min(n, groups), s"$where: ${t.stages} stages, ${t.tasks} tasks")
+        else if (terms.length > 1)
+          assert(t.lastStageTasks <= n, s"$where: ${t.lastStageTasks} tasks")
       }
     }
   }
